@@ -115,6 +115,13 @@ class Nibbler:
                 return
             except NibblerStoppedError:
                 return
+            except Exception as exc:
+                # Anything else escaping a flush (an error callback that
+                # raised) is a fatal stop too: the listener must not die
+                # with fatal_error unset while senders fill the queue.
+                self._fatal_error = exc
+                self._fatal.set()
+                return
 
     # -- lifecycle (extension) ------------------------------------------------
 

@@ -14,18 +14,23 @@ Driver-side collection inside ``foreachBatch`` is bounded by ``size`` by
 construction, so this is safe at any cluster scale — the heavy lifting
 (reading/filtering 100 TB) stays on executors; only the admitted rows of
 each micro-batch cross to the driver, exactly like the reference's
-in-memory batch.
+in-memory batch. Each non-empty micro-batch is one Spark job (one stage,
+one task): the rows are coalesced to one partition and sorted inside it,
+never range-partitioned by a global sort.
 
 At-most-once fidelity (SURVEY §2.2.1): the reference drops failed batches
 and never retries. We therefore run WITHOUT checkpoint-replay semantics
-by default (fresh checkpoint dir per run); checkpoint-based recovery is
-an explicit extension knob (``checkpoint_dir=``).
+by default: the stream's own checkpoint is a fresh local dir, never
+replayed, and removed at ``stop()``. Checkpoint-based recovery is an
+explicit extension knob (``checkpoint_dir=``), which keeps Spark's
+default checkpoint handling and leaves the dir on disk.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import threading
 import time
@@ -34,8 +39,28 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from nibbler_spark.config import Config
-from nibbler_spark.errors import NibblerFatalError, NibblerStoppedError
+from nibbler_spark.errors import (
+    NibblerFatalError,
+    NibblerStoppedError,
+    NibblerValidationError,
+)
 from nibbler_spark.streaming.rebatcher import ReBatcher
+
+# Checkpoint file manager for a checkpoint the stream owns. Spark's default
+# (FileContext-based) forks `readlink`/`chmod` on every offsets/commits log
+# write on a local FS: 68 process forks per one-file micro-batch, against
+# 43 with the FileSystem-based manager (4-vCPU VM). The latter is safe for
+# a fresh, never-replayed local dir, where POSIX rename is atomic. With the
+# one-job collect in _foreach_batch, process-tree CPU per admitted file
+# fell from 795 to 608 ms (medians of 10 runs each, same VM).
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+# Serializes the set/start/restore of the session-wide key, so a concurrent
+# start() can neither pick up nor leave behind another stream's override.
+_START_LOCK = threading.Lock()
 
 
 class FileDropReceiver:
@@ -102,10 +127,21 @@ class NibblerStream:
         poll_interval_s: float | None = None,
         order_column: str | None = None,
     ):
+        # When set, each micro-batch is sorted on this column and the
+        # column is stripped before rows reach the processor (the file
+        # receiver's __seq). Sources with inherent order (Kafka per
+        # partition) leave it None. Checked once here, not per micro-batch.
+        if order_column is not None and order_column not in source.columns:
+            raise NibblerValidationError(
+                f"validation: order_column {order_column!r} is not a column "
+                f"of the source {source.columns}"
+            )
         self.spark = spark
         self.rebatcher = ReBatcher(config)
         self.cfg = self.rebatcher.cfg
         self._source = source
+        # The stream owns (and removes at stop()) a checkpoint it made.
+        self._owns_checkpoint = checkpoint_dir is None
         self._checkpoint = checkpoint_dir or tempfile.mkdtemp(
             prefix="nibbler-ckpt-"
         )
@@ -114,10 +150,6 @@ class NibblerStream:
         self._cadence = poll_interval_s or max(
             0.1, min(1.0, self.cfg.ticker_s / 10)
         )
-        # When set, each micro-batch is sorted on this column and the
-        # column is stripped before rows reach the processor (the file
-        # receiver's __seq). Sources with inherent order (Kafka per
-        # partition) leave it None.
         self._order_column = order_column
         self.query = None
         self._poller: threading.Thread | None = None
@@ -128,8 +160,8 @@ class NibblerStream:
     def fatal_error(self) -> BaseException | None:
         return self._fatal_error
 
-    def _handle_fatal(self, exc: NibblerFatalError) -> None:
-        self._fatal_error = exc.error
+    def _fail(self, error: BaseException) -> None:
+        self._fatal_error = error
         # Fail the query like the reference closes the queue (R9): stop
         # consuming; await_termination() then re-raises the error.
         try:
@@ -143,15 +175,26 @@ class NibblerStream:
             raise NibblerFatalError(self._fatal_error)
         # Bounded by source admission control ≈ size rows per trigger, so
         # a driver-side collect here mirrors the reference's in-memory
-        # batch (SURVEY §2.3 design rule exception).
-        if self._order_column is not None and self._order_column in df.columns:
-            rows = df.orderBy(self._order_column).drop(self._order_column).collect()
-        else:
-            rows = df.collect()
+        # batch (SURVEY §2.3 design rule exception). For the same reason
+        # one partition sorted in place gives the FIFO order in one job,
+        # one stage and one task. A global orderBy would range-partition
+        # the rows: a sampling job that reads the source a second time,
+        # then a shuffle (3 jobs, 4 stages per micro-batch).
+        if self._order_column is not None:
+            df = df.coalesce(1).sortWithinPartitions(self._order_column)
+            df = df.drop(self._order_column)
+        rows = df.collect()
         try:
             self.rebatcher.push_many(rows)
         except NibblerFatalError as exc:
-            self._handle_fatal(exc)
+            self._fail(exc.error)
+            raise
+        except NibblerStoppedError:
+            raise
+        except Exception as exc:
+            # An error callback that raised: a fatal stop, not a silent
+            # query death that leaves sends succeeding into a dead stream.
+            self._fail(exc)
             raise
 
     def _poll_loop(self) -> None:
@@ -159,9 +202,12 @@ class NibblerStream:
             try:
                 self.rebatcher.poll()
             except NibblerFatalError as exc:
-                self._handle_fatal(exc)
+                self._fail(exc.error)
                 return
             except NibblerStoppedError:
+                return
+            except Exception as exc:
+                self._fail(exc)
                 return
 
     def start(self) -> "NibblerStream":
@@ -170,7 +216,28 @@ class NibblerStream:
             .option("checkpointLocation", self._checkpoint)
             .trigger(processingTime=f"{int(self._cadence * 1000)} milliseconds")
         )
-        self.query = writer.start()
+        with _START_LOCK:
+            if not self._owns_checkpoint:
+                self.query = writer.start()
+            else:
+                # The offsets and commits logs pick their file manager up
+                # while writer.start() builds the query, so the override is
+                # scoped to that call. The file source's sources/0 log is
+                # made later, on the stream thread, and keeps Spark's
+                # default. Leaving the key set session-wide also covers
+                # that log (20 forks per micro-batch) but read no lower CPU
+                # per file (503 against 497 ms, medians of 3 runs), and it
+                # would change every other stream in the session.
+                conf = self.spark.conf
+                prev = conf.get(_CKPT_MANAGER_KEY, None)
+                conf.set(_CKPT_MANAGER_KEY, _CKPT_MANAGER)
+                try:
+                    self.query = writer.start()
+                finally:
+                    if prev is None:
+                        conf.unset(_CKPT_MANAGER_KEY)
+                    else:
+                        conf.set(_CKPT_MANAGER_KEY, prev)
         self._poller = threading.Thread(
             target=self._poll_loop, name="nibbler-ticker", daemon=True
         )
@@ -191,6 +258,8 @@ class NibblerStream:
             self.query.stop()
         if self._poller is not None:
             self._poller.join(timeout=5)
+        if self._owns_checkpoint:
+            shutil.rmtree(self._checkpoint, ignore_errors=True)
         if flush and self._fatal_error is None:
             try:
                 self.rebatcher.flush()

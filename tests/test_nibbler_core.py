@@ -153,6 +153,40 @@ def test_err_processor_with_resume():
     nib.close(flush=False)
 
 
+@pytest.mark.parametrize("resume", [False, True])
+def test_err_callback_raising_is_a_fatal_stop(resume):
+    """An error callback that raises stops the listener fatally: the
+    error is surfaced as fatal_error and later sends raise instead of
+    queueing into a dead listener until queue.Full."""
+    callback_err = ValueError("callback failed")
+    called = threading.Event()
+
+    def processor(_dl, _trig, _batch):
+        raise RuntimeError("failed processing")
+
+    def processor_err(_batch, _err):
+        called.set()
+        raise callback_err
+
+    nib = start(
+        Config(
+            processor=processor,
+            size=1,
+            resume_after_err=resume,
+            processor_err=processor_err,
+        )
+    )
+    nib.receiver().send("hello")
+    assert called.wait(timeout=5.0)
+    deadline = time.monotonic() + 5.0
+    while nib.fatal_error is None and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert nib.fatal_error is callback_err
+    with pytest.raises(NibblerStoppedError):
+        nib.receiver().send("again", timeout=1.0)
+    nib.close(flush=False)
+
+
 def test_panic_recovery_without_resume():
     """panic(error) ⇒ converted to that error, callback fires, fatal stop
     (nibbler_test.go:150-179)."""

@@ -3,6 +3,8 @@ the re-batcher semantics riding a real file-drop streaming source."""
 
 from __future__ import annotations
 
+import glob
+import os
 import tempfile
 import threading
 import time
@@ -10,8 +12,44 @@ import time
 import pytest
 
 from nibbler_spark.config import Config, Trigger
-from nibbler_spark.errors import NibblerStoppedError
-from nibbler_spark.streaming.transport import start_file_stream
+from nibbler_spark.errors import NibblerStoppedError, NibblerValidationError
+from nibbler_spark.streaming.transport import (
+    FileDropReceiver,
+    NibblerStream,
+    start_file_stream,
+)
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _wait_delivered(stream, got, lock, n, timeout=90.0):
+    deadline = time.monotonic() + timeout
+    while time.monotonic() < deadline:
+        with lock:
+            flushed = sum(len(b) for b, _ in got)
+        if flushed + stream.rebatcher.buffered >= n:
+            return
+        time.sleep(0.1)
+
+
+def _file_manager(query, log: str) -> str:
+    """Class name of the checkpoint file manager behind a query's log."""
+    jlog = getattr(query._jsq.streamingQuery(), log)()
+    return jlog.fileManager().getClass().getSimpleName()
+
+
+def _stream_jobs(spark, query) -> int:
+    """Spark jobs the query ran, from the status store (stream jobs carry
+    the query's runId as their job group)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList())
+    run_id = str(query.runId)
+    n = 0
+    for i in range(jobs.size()):
+        group = jobs.apply(i).jobGroup()
+        n += group.isDefined() and group.get() == run_id
+    return n
 
 
 def test_file_stream_batches_and_order(spark):
@@ -32,13 +70,7 @@ def test_file_stream_batches_and_order(spark):
     try:
         for i in range(10):
             receiver.send(f"x:{i}")
-        deadline = time.monotonic() + 90
-        while time.monotonic() < deadline:
-            with lock:
-                flushed = sum(len(b) for b, _ in got)
-            if flushed + stream.rebatcher.buffered >= 10:
-                break
-            time.sleep(0.1)
+        _wait_delivered(stream, got, lock, 10)
     finally:
         stream.stop(flush=True)  # drains the 2 leftover items
 
@@ -81,3 +113,127 @@ def test_file_stream_fatal_stop_blocks_sends(spark):
             receiver.send("again")
     finally:
         stream.stop(flush=False)
+
+
+@pytest.mark.parametrize("items", [["hello"], ["a", "b"]], ids=["ticker", "micro_batch"])
+def test_file_stream_err_callback_raising_is_a_fatal_stop(spark, items):
+    """An error callback that raises, from the poller's TICKER flush or
+    from a micro-batch's BATCH_FULL flush, is surfaced as a fatal stop
+    rather than a query that dies while sends still succeed."""
+    callback_err = ValueError("callback failed")
+
+    def processor(_dl, _trig, _batch):
+        raise RuntimeError("boom")
+
+    def processor_err(_batch, _err):
+        raise callback_err
+
+    stream, receiver = start_file_stream(
+        spark,
+        Config(processor=processor, size=2, ticker_s=0.5, processor_err=processor_err),
+        tempfile.mkdtemp(prefix="nibbler-src-"),
+    )
+    try:
+        receiver.send_many(items)
+        deadline = time.monotonic() + 60
+        while stream.fatal_error is None and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert stream.fatal_error is callback_err
+        with pytest.raises(NibblerStoppedError):
+            receiver.send("again")
+    finally:
+        stream.stop(flush=False)
+
+
+def test_order_column_checked_at_construction(spark, tmp_path):
+    source = spark.readStream.schema("value string").json(str(tmp_path))
+    with pytest.raises(NibblerValidationError, match="__seq"):
+        NibblerStream(spark, Config(processor=print), source, order_column="__seq")
+
+
+def test_multi_file_micro_batches_keep_fifo(spark, tmp_path):
+    """Admission of 4 files per trigger: micro-batches span several files,
+    so the in-partition sort is what restores FIFO. A caller-supplied
+    checkpoint keeps Spark's default file manager and stays on disk."""
+    got: list[tuple[list, Trigger]] = []
+    lock = threading.Lock()
+
+    def processor(_dl, trig, batch):
+        with lock:
+            got.append(([r["value"] for r in batch], trig))
+
+    directory = str(tmp_path / "src")
+    checkpoint = str(tmp_path / "ckpt")
+    # Spool every file before the stream starts, so the first triggers
+    # each admit a full 4 files.
+    receiver = FileDropReceiver(directory)
+    files, per_file = 20, 3
+    for f in range(files):
+        receiver.send_many([f"x:{f * per_file + k}" for k in range(per_file)])
+    source = (
+        spark.readStream.schema("__seq long, value string")
+        .option("maxFilesPerTrigger", 4)
+        .json(directory)
+    )
+    stream = NibblerStream(
+        spark,
+        Config(processor=processor, size=5, ticker_s=300.0),
+        source,
+        checkpoint_dir=checkpoint,
+        order_column="__seq",
+    ).start()
+    try:
+        _wait_delivered(stream, got, lock, files * per_file)
+        manager = _file_manager(stream.query, "offsetLog")
+    finally:
+        stream.stop(flush=True)  # lets the last trigger report its progress
+
+    rows = [p["numInputRows"] for p in stream.query.recentProgress]
+    n = files * per_file
+    assert [v for b, _ in got for v in b] == [f"x:{i}" for i in range(n)]
+    assert [len(b) for b, _ in got] == [5] * (n // 5)
+    assert max(rows) > per_file  # some micro-batch spans several files
+    # the source is read once per micro-batch (a global sort's sampling
+    # job read it twice, doubling numInputRows)
+    assert sum(rows) == n
+    assert manager == "FileContextBasedCheckpointFileManager"
+    assert os.path.isdir(checkpoint)
+
+
+def test_micro_batch_is_one_job_and_owned_checkpoint_is_removed(
+    spark, tmp_path, monkeypatch
+):
+    """Each non-empty micro-batch is one Spark job; the checkpoint file
+    manager override is scoped to start() and leaves the session conf as
+    it was; the stream's own checkpoint dir is gone after stop()."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got: list[tuple[list, Trigger]] = []
+    lock = threading.Lock()
+
+    def processor(_dl, trig, batch):
+        with lock:
+            got.append(([r["value"] for r in batch], trig))
+
+    before = spark.conf.get(_CKPT_MANAGER_KEY, None)
+    stream, receiver = start_file_stream(
+        spark,
+        Config(processor=processor, size=4, ticker_s=300.0),
+        str(tmp_path / "src"),
+    )
+    try:
+        assert spark.conf.get(_CKPT_MANAGER_KEY, None) == before
+        assert glob.glob(str(tmp_path / "nibbler-ckpt-*"))
+        for i in range(6):
+            receiver.send_many([f"x:{2 * i}", f"x:{2 * i + 1}"])
+        _wait_delivered(stream, got, lock, 12)
+        managers = {_file_manager(stream.query, log) for log in ("offsetLog", "commitLog")}
+    finally:
+        stream.stop(flush=True)  # lets the last trigger report its progress
+
+    batches = sum(p["numInputRows"] > 0 for p in stream.query.recentProgress)
+    jobs = _stream_jobs(spark, stream.query)
+    assert batches == 6
+    assert jobs == batches
+    assert managers == {"FileSystemBasedCheckpointFileManager"}
+    assert [v for b, _ in got for v in b] == [f"x:{i}" for i in range(12)]
+    assert glob.glob(str(tmp_path / "nibbler-ckpt-*")) == []
