@@ -1,29 +1,15 @@
 """Streaming source/sink builders (SURVEY §2.3 A5–A8, A10; Kafka A7).
 
-File-drop and rate sources are fully exercised by the declared streaming
-queries; Kafka is declared here behind an availability check (the test
-environment ships no broker and no kafka-sql package) — the builder is
-the production code path, smoke-usable wherever a broker exists.
+The rate source and the Kafka loopback are exercised by tests and the
+declared streaming queries; Kafka is declared here behind an
+availability check (the test environment ships no broker and no
+kafka-sql package) — the builder is the production code path,
+smoke-usable wherever a broker exists.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def file_drop_source(
-    spark: SparkSession,
-    directory: str,
-    schema: str,
-    fmt: str = "json",
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """Schema'd file-drop streaming source (A5). Admission control via
-    maxFilesPerTrigger is the backpressure knob (R3)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return getattr(reader, fmt)(directory)
 
 
 def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:

@@ -47,14 +47,6 @@ def _xml_files(path: str) -> list[str]:
     )
 
 
-def _parse_ddl(ddl: str) -> list[tuple[str, str]]:
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().split(None, 1)
-        fields.append((name, typ.strip().lower()))
-    return fields
-
-
 def _from_text(text: str | None, typ: str):
     if text is None:
         return None

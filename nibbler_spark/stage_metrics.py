@@ -66,16 +66,6 @@ def _stage_rows(spark: SparkSession) -> Dict[tuple, dict]:
     return rows
 
 
-def stage_totals(spark: SparkSession) -> dict:
-    """Cumulative per-app sums of the stage metrics in FIELDS (over
-    the RETAINED stages only — see module docstring on eviction)."""
-    tot = dict.fromkeys(FIELDS, 0)
-    for m in _stage_rows(spark).values():
-        for k in FIELDS:
-            tot[k] += m[k]
-    return tot
-
-
 def measure_stages(spark: SparkSession, fn: Callable[[], object]) -> Tuple[object, dict]:
     """Run `fn` and return (its result, the stage metrics of exactly
     the stages it submitted).  Stages are identified by (stageId,

@@ -14,9 +14,16 @@ Driver-side collection inside ``foreachBatch`` is bounded by ``size`` by
 construction, so this is safe at any cluster scale — the heavy lifting
 (reading/filtering 100 TB) stays on executors; only the admitted rows of
 each micro-batch cross to the driver, exactly like the reference's
-in-memory batch. Each non-empty micro-batch is one Spark job (one stage,
-one task): the rows are coalesced to one partition and sorted inside it,
-never range-partitioned by a global sort.
+in-memory batch. Each non-empty micro-batch is one Spark job (one stage)
+that collects the rows as the source produced them; FIFO order is then
+restored on the driver, by the order column, before the re-batcher sees
+them. Two Spark-side orders were measured and rejected: a global
+``orderBy`` range-partitions the rows (3 jobs per micro-batch: a sampling
+job that reads the source a second time, then a shuffle), and
+``coalesce(1).sortWithinPartitions`` is one job but its sorter takes a
+full execution-memory page per task (``spark.buffer.pageSize``, 32 MiB at
+both the 2g and the 4g driver heap measured) for the ~100 rows a
+micro-batch holds.
 
 At-most-once fidelity (SURVEY §2.2.1): the reference drops failed batches
 and never retries. We therefore run WITHOUT checkpoint-replay semantics
@@ -36,7 +43,7 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from nibbler_spark.config import Config
 from nibbler_spark.errors import (
@@ -61,6 +68,22 @@ _CKPT_MANAGER = (
 # Serializes the set/start/restore of the session-wide key, so a concurrent
 # start() can neither pick up nor leave behind another stream's override.
 _START_LOCK = threading.Lock()
+
+
+def _restore_fifo(rows: list[Row], order_column: str) -> list[Row]:
+    """``rows`` sorted on ``order_column``, rebuilt as Rows without it.
+
+    The file scan packs a micro-batch's files into partitions largest
+    first, so the collected order is not the admission order. Each file
+    arrives as one ascending run, which timsort merges in linear time per
+    run. Nulls sort first, as in Spark's ascending sort: a malformed JSON
+    line reads as a row of nulls and must not fail the micro-batch.
+    """
+    fields = rows[0].__fields__
+    pos = fields.index(order_column)
+    make = Row(*fields[:pos], *fields[pos + 1 :])
+    rows.sort(key=lambda r: (r[pos] is not None, r[pos]))
+    return [make(*r[:pos], *r[pos + 1 :]) for r in rows]
 
 
 class FileDropReceiver:
@@ -95,8 +118,9 @@ class FileDropReceiver:
             self._seq += 1
             record = dict(it) if isinstance(it, dict) else {"value": it}
             # Global sequence number: restores FIFO within a micro-batch
-            # (Spark's sort is the cross-row order authority; file mtime
-            # only orders admission across micro-batches).
+            # (NibblerStream's driver-side sort is the cross-row order
+            # authority; file mtime only orders admission across
+            # micro-batches).
             record["__seq"] = self._seq
             lines.append(json.dumps(record))
         name = f"{time.time_ns():020d}-{self._seq:09d}-{uuid.uuid4().hex[:8]}.json"
@@ -127,10 +151,11 @@ class NibblerStream:
         poll_interval_s: float | None = None,
         order_column: str | None = None,
     ):
-        # When set, each micro-batch is sorted on this column and the
-        # column is stripped before rows reach the processor (the file
-        # receiver's __seq). Sources with inherent order (Kafka per
-        # partition) leave it None. Checked once here, not per micro-batch.
+        # When set, each micro-batch is sorted on this column on the
+        # driver and the column is stripped before rows reach the
+        # processor (the file receiver's __seq). Sources with inherent
+        # order (Kafka per partition) leave it None. Checked once here,
+        # not per micro-batch.
         if order_column is not None and order_column not in source.columns:
             raise NibblerValidationError(
                 f"validation: order_column {order_column!r} is not a column "
@@ -176,14 +201,15 @@ class NibblerStream:
         # Bounded by source admission control ≈ size rows per trigger, so
         # a driver-side collect here mirrors the reference's in-memory
         # batch (SURVEY §2.3 design rule exception). For the same reason
-        # one partition sorted in place gives the FIFO order in one job,
-        # one stage and one task. A global orderBy would range-partition
-        # the rows: a sampling job that reads the source a second time,
-        # then a shuffle (3 jobs, 4 stages per micro-batch).
-        if self._order_column is not None:
-            df = df.coalesce(1).sortWithinPartitions(self._order_column)
-            df = df.drop(self._order_column)
+        # the FIFO order is restored on the driver, after the one-job
+        # collect. Rejected: a global orderBy range-partitions the rows
+        # (3 jobs, 4 stages per micro-batch); coalesce(1) plus
+        # sortWithinPartitions is one job, but its sorter allocates a
+        # 32 MiB execution-memory page per micro-batch (stage
+        # peakExecutionMemory 33,619,952 B, against 0 here).
         rows = df.collect()
+        if self._order_column is not None and rows:
+            rows = _restore_fifo(rows, self._order_column)
         try:
             self.rebatcher.push_many(rows)
         except NibblerFatalError as exc:
@@ -286,8 +312,19 @@ def start_file_stream(
 
     ``max_files_per_trigger`` is the admission-control knob (R3): each
     spooled file is one producer send, so one file per trigger keeps
-    arrival order deterministic in tests.
+    arrival order deterministic in tests. It must be a positive ``int``:
+    Spark would only reject it on the stream thread, after ``start()``
+    returned, leaving a dead query that sends still spool into.
     """
+    if (
+        isinstance(max_files_per_trigger, bool)
+        or not isinstance(max_files_per_trigger, int)
+        or max_files_per_trigger < 1
+    ):
+        raise NibblerValidationError(
+            "validation: max_files_per_trigger must be a positive int, "
+            f"got {max_files_per_trigger!r}"
+        )
     os.makedirs(directory, exist_ok=True)
     source = (
         spark.readStream.schema(f"__seq long, {value_schema}")

@@ -10,12 +10,14 @@ import threading
 import time
 
 import pytest
+from pyspark.sql import Row
 
 from nibbler_spark.config import Config, Trigger
 from nibbler_spark.errors import NibblerStoppedError, NibblerValidationError
 from nibbler_spark.streaming.transport import (
     FileDropReceiver,
     NibblerStream,
+    _restore_fifo,
     start_file_stream,
 )
 
@@ -38,18 +40,43 @@ def _file_manager(query, log: str) -> str:
     return jlog.fileManager().getClass().getSimpleName()
 
 
-def _stream_jobs(spark, query) -> int:
-    """Spark jobs the query ran, from the status store (stream jobs carry
-    the query's runId as their job group)."""
+def _stream_jobs(spark, query) -> list[list[int]]:
+    """Stage ids of each Spark job the query ran, from the status store
+    (stream jobs carry the query's runId as their job group)."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList())
     run_id = str(query.runId)
-    n = 0
+    out = []
     for i in range(jobs.size()):
-        group = jobs.apply(i).jobGroup()
-        n += group.isDefined() and group.get() == run_id
-    return n
+        job = jobs.apply(i)
+        group = job.jobGroup()
+        if group.isDefined() and group.get() == run_id:
+            ids = job.stageIds()
+            out.append([ids.apply(k) for k in range(ids.size())])
+    return out
+
+
+def _peak_execution_memory(spark, stage_ids) -> dict[int, int]:
+    """peakExecutionMemory of the given stages, read from the status store
+    with the Scala defaults of stageList made explicit (as in
+    nibbler_spark.stage_metrics._stage_rows)."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(),  # all statuses
+        False,  # details
+        False,  # withSummaries
+        sc._gateway.new_array(jvm.double, 0),  # unsortedQuantiles
+        jvm.java.util.ArrayList(),  # taskStatus
+    )
+    wanted = set(stage_ids)
+    out = {}
+    for i in range(stages.size()):
+        s = stages.apply(i)
+        if s.stageId() in wanted:
+            out[s.stageId()] = s.peakExecutionMemory()
+    return out
 
 
 def test_file_stream_batches_and_order(spark):
@@ -152,24 +179,32 @@ def test_order_column_checked_at_construction(spark, tmp_path):
 
 
 def test_multi_file_micro_batches_keep_fifo(spark, tmp_path):
-    """Admission of 4 files per trigger: micro-batches span several files,
-    so the in-partition sort is what restores FIFO. A caller-supplied
-    checkpoint keeps Spark's default file manager and stays on disk."""
+    """Admission of 4 files per trigger: micro-batches span several files.
+    File f holds f + 1 items, and the file scan packs a micro-batch's
+    files into partitions largest first, so the rows are collected newest
+    file first; the driver-side sort on __seq is what restores FIFO, and
+    __seq never reaches the processor. A caller-supplied checkpoint keeps
+    Spark's default file manager and stays on disk."""
     got: list[tuple[list, Trigger]] = []
+    fields: set[tuple] = set()
     lock = threading.Lock()
 
     def processor(_dl, trig, batch):
         with lock:
             got.append(([r["value"] for r in batch], trig))
+            fields.update(tuple(r.asDict()) for r in batch)
 
     directory = str(tmp_path / "src")
     checkpoint = str(tmp_path / "ckpt")
     # Spool every file before the stream starts, so the first triggers
     # each admit a full 4 files.
     receiver = FileDropReceiver(directory)
-    files, per_file = 20, 3
+    files = 20
+    n = files * (files + 1) // 2
+    sent = 0
     for f in range(files):
-        receiver.send_many([f"x:{f * per_file + k}" for k in range(per_file)])
+        receiver.send_many([f"x:{sent + k}" for k in range(f + 1)])
+        sent += f + 1
     source = (
         spark.readStream.schema("__seq long, value string")
         .option("maxFilesPerTrigger", 4)
@@ -183,16 +218,16 @@ def test_multi_file_micro_batches_keep_fifo(spark, tmp_path):
         order_column="__seq",
     ).start()
     try:
-        _wait_delivered(stream, got, lock, files * per_file)
+        _wait_delivered(stream, got, lock, n)
         manager = _file_manager(stream.query, "offsetLog")
     finally:
         stream.stop(flush=True)  # lets the last trigger report its progress
 
     rows = [p["numInputRows"] for p in stream.query.recentProgress]
-    n = files * per_file
     assert [v for b, _ in got for v in b] == [f"x:{i}" for i in range(n)]
     assert [len(b) for b, _ in got] == [5] * (n // 5)
-    assert max(rows) > per_file  # some micro-batch spans several files
+    assert fields == {("value",)}
+    assert max(rows) > files  # some micro-batch spans several files
     # the source is read once per micro-batch (a global sort's sampling
     # job read it twice, doubling numInputRows)
     assert sum(rows) == n
@@ -203,9 +238,10 @@ def test_multi_file_micro_batches_keep_fifo(spark, tmp_path):
 def test_micro_batch_is_one_job_and_owned_checkpoint_is_removed(
     spark, tmp_path, monkeypatch
 ):
-    """Each non-empty micro-batch is one Spark job; the checkpoint file
-    manager override is scoped to start() and leaves the session conf as
-    it was; the stream's own checkpoint dir is gone after stop()."""
+    """Each non-empty micro-batch is one Spark job, and none of its stages
+    takes execution memory (no sorter page); the checkpoint file manager
+    override is scoped to start() and leaves the session conf as it was;
+    the stream's own checkpoint dir is gone after stop()."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     got: list[tuple[list, Trigger]] = []
     lock = threading.Lock()
@@ -232,8 +268,43 @@ def test_micro_batch_is_one_job_and_owned_checkpoint_is_removed(
 
     batches = sum(p["numInputRows"] > 0 for p in stream.query.recentProgress)
     jobs = _stream_jobs(spark, stream.query)
+    stage_ids = [i for ids in jobs for i in ids]
+    peaks = _peak_execution_memory(spark, stage_ids)
     assert batches == 6
-    assert jobs == batches
+    assert len(jobs) == batches
+    assert sorted(peaks) == sorted(stage_ids)
+    assert set(peaks.values()) == {0}
     assert managers == {"FileSystemBasedCheckpointFileManager"}
     assert [v for b, _ in got for v in b] == [f"x:{i}" for i in range(12)]
     assert glob.glob(str(tmp_path / "nibbler-ckpt-*")) == []
+
+
+@pytest.mark.parametrize("bad", [0, -1, True, 1.5], ids=["zero", "negative", "bool", "float"])
+def test_bad_admission_limit_rejected_before_start(spark, tmp_path, bad):
+    """A limit Spark would reject on the stream thread is refused up front:
+    no query starts and no source dir is made."""
+    directory = tmp_path / "src"
+    active = len(spark.streams.active)
+    with pytest.raises(NibblerValidationError, match="max_files_per_trigger"):
+        start_file_stream(
+            spark, Config(processor=print), str(directory), max_files_per_trigger=bad
+        )
+    assert len(spark.streams.active) == active
+    assert not directory.exists()
+
+
+def test_restore_fifo_sorts_nulls_first_and_drops_the_column():
+    rows = [
+        Row(a=3, __seq=3, b="c"),
+        Row(a=None, __seq=None, b=None),
+        Row(a=1, __seq=1, b="a"),
+        Row(a=2, __seq=2, b="b"),
+    ]
+    out = _restore_fifo(rows, "__seq")
+    assert [r.asDict() for r in out] == [
+        {"a": None, "b": None},
+        {"a": 1, "b": "a"},
+        {"a": 2, "b": "b"},
+        {"a": 3, "b": "c"},
+    ]
+    assert out[1]["b"] == "a" and out[1].b == "a"
