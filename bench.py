@@ -90,6 +90,20 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
+def drop_debris(spark) -> None:
+    """Session-debris cleanup BETWEEN headline rows (r10): release the
+    cached tables and pinned localCheckpoint blocks earlier rows left,
+    so each row measures in the clean-session state its anchor was
+    measured in (the r10 driver-style run read ext_kcore_decomposition
+    at 5.6 s in-bench vs 2.3–2.7 s isolated, ext_crawl_pipeline 2.54
+    vs 1.26 s). Streaming drains drop their own memory-sink views, so
+    there are none to drop here."""
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(persistent.keySet()):
+        persistent.get(rid).rdd().unpersist(False)
+
+
 def main() -> None:
     from nibbler_spark.queries import load_all
     from nibbler_spark.session import get_spark
@@ -125,30 +139,12 @@ def main() -> None:
         canary_samples.append(time.monotonic() - t0)
     canary_sec = round(statistics.median(canary_samples), 4)
 
-    def _drop_debris() -> None:
-        """Session-debris cleanup BETWEEN headline rows (r10): the
-        r5-era cleanup ran only before the tq_power composite, so
-        back-half rows still accumulated every earlier row's mem_*
-        memory-sink views and pinned localCheckpoint blocks — the r10
-        driver-style run read ext_kcore_decomposition at 5.6 s
-        in-bench vs 2.3–2.7 s isolated, ext_crawl_pipeline 2.54 vs
-        1.26 s. Each row now measures in the same clean-session state
-        its anchor was originally measured in (early rows of a fresh
-        session)."""
-        for tbl in spark.catalog.listTables():
-            if tbl.name.startswith("mem_"):
-                spark.catalog.dropTempView(tbl.name)
-        spark.catalog.clearCache()
-        persistent = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(persistent.keySet()):
-            persistent.get(rid).rdd().unpersist(False)
-
     timings: dict[str, float] = {}
     for name in HEADLINE:
         spec = specs.get(name)
         if spec is None:
             continue
-        _drop_debris()
+        drop_debris(spark)
         # One untimed warm-up pass: page cache + codegen + broadcast
         # build are amortized in any steady-state deployment, and the
         # timed medians should measure the query, not the first touch
@@ -171,19 +167,9 @@ def main() -> None:
     # composite below is timed (r5 verdict #5 — the tq_power_22 drift).
     # Isolated-session steady state is stable (consecutive runs within
     # 1%, code cache ~80/240 MB — measured r6, see NOTES.md); what moves
-    # the in-bench number across rounds is the GROWING pile of
-    # memory-sink tables (every streaming drain registers a mem_* temp
-    # view holding its result rows on the driver heap) and pinned
-    # localCheckpoint RDD blocks competing with execution memory.  Drop
-    # them all so the composite sees the same heap every round
-    # regardless of how many headline rows precede it.
-    for tbl in spark.catalog.listTables():
-        if tbl.name.startswith("mem_"):
-            spark.catalog.dropTempView(tbl.name)
-    spark.catalog.clearCache()
-    persistent = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(persistent.keySet()):
-        persistent.get(rid).rdd().unpersist(False)
+    # the in-bench number across rounds is the growing pile of pinned
+    # localCheckpoint RDD blocks competing with execution memory.
+    drop_debris(spark)
 
     # TPC-H power run (BENCH-B9): all 22 reduced-schema analogues
     # executed sequentially as ONE timed metric — the classic composite

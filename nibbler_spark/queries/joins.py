@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from nibbler_spark.operators.asof import asof_join_backward
 from nibbler_spark.queries import register
 from nibbler_spark.queries._helpers import dsum, sql_dsum
+from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table
 
 
@@ -578,8 +579,7 @@ def ext_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     query pins. (BROADCAST is c07's row.)"""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
 
         def run(hint: str):
             return (
@@ -603,5 +603,3 @@ def ext_join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
             tuple(r) for r in shj.collect()
         ]
         return shj
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from nibbler_spark.queries import register
 from nibbler_spark.queries._helpers import dec, dsum, spread, sql_dsum
+from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table
 
 
@@ -79,8 +80,7 @@ def ext_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
     # Disable auto-broadcast so the plan demonstrates the bucketed SMJ
     # path (at 100 TB neither side would broadcast anyway).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         return (
             li.join(o, li.l_orderkey == o.o_orderkey)
             .groupBy("o_orderpriority")
@@ -90,8 +90,6 @@ def ext_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderpriority")
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
 @register(
@@ -1205,13 +1203,14 @@ def ext_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops applying — e.g. a nullable-type edge). At 100 TB this is
     the difference between a metadata read and a full scan for the
     table-profile class of queries."""
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
     # aggregate pushdown lives in the DSv2 parquet reader only
-    spark.conf.set(
-        "spark.sql.sources.useV1SourceList", "avro,csv,json,kafka,orc,text"
-    )
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.parquet.aggregatePushdown": "true",
+            "spark.sql.sources.useV1SourceList": "avro,csv,json,kafka,orc,text",
+        },
+    ):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         out = li.agg(
             F.count("*").alias("n_rows"),
@@ -1226,9 +1225,6 @@ def ext_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # regression is loud
         assert "PushedAggregation: [COUNT(*)" in plan, plan[:2000]
         return out
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-        spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
 
 
 @register(
@@ -1255,19 +1251,16 @@ def ext_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame
     the plan is asserted to carry the bloom probe. At 100 TB this is
     the shuffle-volume lever for every selective fact-fact join that
     broadcast can't serve."""
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled", "true"
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "100MB",
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0",
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    bloom = "spark.sql.optimizer.runtime.bloomFilter"
+    with scoped_conf(
+        spark,
+        {
+            f"{bloom}.enabled": "true",
+            f"{bloom}.creationSideThreshold": "100MB",
+            f"{bloom}.applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").where(
             F.col("o_totalprice") > 400000
@@ -1286,11 +1279,6 @@ def ext_runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame
             plan[:2000]
         )
         return out
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "false"
-        )
 
 
 @register(

@@ -1,12 +1,22 @@
 """Streaming queries (SURVEY §2.3 I1–I13, C12/C13, A5/A6/A10).
 
 Parity pattern (SURVEY §5.2.3): materialize the events table into a
-file-drop dir, drain it with ``trigger(availableNow=True)``, and compare
+file-drop dir, drain it with an ``availableNow`` trigger, and compare
 the final streaming result to the equivalent batch query — which the
 DuckDB oracle then checks. Batch-boundary-sensitive behaviors (watermark
 late-drop, within-watermark dedup, checkpoint restart) run scripted
 two-phase scenarios against literal rows with PINNED expected outputs as
 VALUES oracles.
+
+Every ``availableNow`` pass goes through ``_drain``. It owns the
+checkpoint it makes (removed once the query terminates; a caller passes
+its own only when a later pass restarts from it) and the state-partition
+count (``spark.sql.shuffle.partitions`` held through termination under
+``session.scoped_conf``, then restored or unset). ``_drain_to_memory``
+drops its memory-sink view before returning, and ``_fold_slices``
+removes its ingest copy and checkpoint. What a query still leaves
+behind is the base dir of its source and sink files
+(``nibbler-<name>-*``), which the DataFrame it returns reads lazily.
 
 Scale notes: all stateful ops are keyed (user_id / window / event_id) so
 state partitions horizontally; watermarks bound state size; the memory
@@ -14,7 +24,6 @@ sink is test-only (production sinks: parquet/Kafka/foreachBatch)."""
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import os
 import shutil
@@ -27,6 +36,7 @@ from pyspark.sql import functions as F
 from nibbler_spark.queries import register
 from nibbler_spark.queries._helpers import dsum, sql_dsum
 from nibbler_spark.queries.llm_dedup import _PMH_ORACLE
+from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table
 from nibbler_spark.sources.tables import cached_dir
 
@@ -90,75 +100,131 @@ def _local_rows_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     )
 
 
-@contextlib.contextmanager
-def _drain_scale_store(spark: SparkSession, n: int | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` (= the state-store partition
-    count, fixed at a checkpoint's FIRST micro-batch) to drain scale for
-    the scripted goldens whose inputs are literal row handfuls — the same
-    rationale as ``_drain_to_memory``'s ``shuffle_partitions``: at the
-    session default every micro-batch pays one state-store task constant
-    per partition regardless of data volume, and the maxFilesPerTrigger=1
-    scripts run many micro-batches. The conf is restored right after
-    ``start()`` (Spark captures it at query start); re-started passes on
-    the same checkpoint re-read the pinned count from the offset log."""
-    if n is None:
-        n = int(os.environ.get("NIBBLER_STREAM_STATE_PARTITIONS", "4"))
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def _drain(
+    writer,
+    *,
+    checkpoint: str | None = None,
+    shuffle_partitions: int | None = None,
+):
+    """Run ``writer`` (a configured ``DataStreamWriter``) as one
+    ``availableNow`` pass and return the terminated query.
+
+    The one place a registry stream is drained. It owns:
+
+    - the checkpoint, when ``checkpoint`` is None: a fresh
+      ``nibbler-ck-*`` dir, removed once the query has terminated. A
+      caller passes its own dir only when a later pass restarts from it;
+      that dir stays.
+    - the state-partition count: ``shuffle_partitions``, when given, is
+      held on the session through ``awaitTermination()`` and then the
+      prior value (or unset) comes back. A stateful query fixes its
+      state-store partition count from this conf at its first
+      micro-batch, for the life of its checkpoint; batch jobs run inside
+      ``foreachBatch`` read it at execution time.
+
+    ``recentProgress`` of the returned query stays readable."""
+    spark = writer._spark
+    owned = checkpoint is None
+    if owned:
+        checkpoint = tempfile.mkdtemp(prefix="nibbler-ck-")
+    overrides = (
+        {}
+        if shuffle_partitions is None
+        else {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    )
     try:
-        yield
+        with scoped_conf(spark, overrides):
+            q = (
+                writer.option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+        if owned:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return q
 
 
 def _drain_to_memory(
     df_writer_source: DataFrame,
     mode: str,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 8,
 ) -> DataFrame:
-    """Run an availableNow pass into a memory sink; return the final table.
+    """Drain ``df_writer_source`` into a memory sink; return its final
+    table.
 
-    ``shuffle_partitions`` sizes the STATE STORE for this query: Spark
-    pins a stateful query's state-partition count to
-    ``spark.sql.shuffle.partitions`` at its first micro-batch (it can
-    never change for that checkpoint), so a drain-scale test query
-    should ask for a drain-scale store rather than inherit the
-    cluster-scale session default — at 32 partitions every epoch pays
-    32 state-store task constants regardless of data volume, and under
-    the external driver's plain session the default is 200 (r11 A/B:
-    the i04 golden runs 2.2x slower at 200 than at 4).  The default is
-    therefore DRAIN-SCALE (``$NIBBLER_STREAM_STATE_PARTITIONS``, 8): the
-    drained fixtures hold ~1.5 k keyed groups, and state partitioning is
-    a per-checkpoint deployment choice sized to state volume, not to
-    cluster width — production overrides via the env knob.  The session
-    conf is restored after ``start()`` (the value is captured at query
-    start)."""
-    name = "mem_" + uuid.uuid4().hex[:12]
+    ``shuffle_partitions`` sizes the STATE STORE for this query: at the
+    cluster-scale session default every epoch pays one state-store task
+    constant per partition regardless of data volume (under the
+    external driver's plain session the default is 200; r11 A/B: the
+    i04 golden ran 2.2x slower at 200 than at 4). The drained fixtures
+    hold ~1.5 k keyed groups, so 8 is drain scale. The sink's view is
+    dropped before returning: the returned DataFrame's plan holds the
+    sink's rows itself, so it still reads them after the view and the
+    checkpoint are gone."""
     spark = df_writer_source.sparkSession
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("NIBBLER_STREAM_STATE_PARTITIONS", "8")
-        )
-    prior = None
-    if shuffle_partitions is not None:
-        prior = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    name = "mem_" + uuid.uuid4().hex[:12]
+    _drain(
+        df_writer_source.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode),
+        shuffle_partitions=shuffle_partitions,
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def _fold_slices(
+    spark: SparkSession,
+    cache: str,
+    schema: str,
+    key: str,
+    fn,
+    out_schema: str,
+    state_schema: str,
+    prep=None,
+) -> str:
+    """Fold the four cached epoch slices of ``cache`` through one
+    ``applyInPandasWithState(fn)`` keyed on ``key``, one slice at a
+    time, and return the dir of the emitted rows.
+
+    Each slice is staged into a watched ingest dir and drained by an
+    ``availableNow`` pass that restarts from the same checkpoint, so
+    epoch q sees exactly slice q and the state of slices < q (epoch
+    order by construction, not by file-listing accident). Emissions
+    append to parquet per micro-batch (``foreachBatch``). ``prep``
+    maps the ingest stream before the grouping. The state store runs at
+    8 partitions. The ingest copy and the checkpoint are removed on
+    return; the emitted rows stay for the caller's lazy read."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    base = tempfile.mkdtemp(prefix="nibbler-fold-")
+    ingest = os.path.join(base, "ingest")
+    ckpt = os.path.join(base, "ckpt")
+    out = os.path.join(base, "out")
+    os.makedirs(ingest)
     try:
-        q = (
-            df_writer_source.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
+        for q in range(4):
+            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
+            src = spark.readStream.schema(schema).parquet(ingest)
+            if prep is not None:
+                src = prep(src)
+            folded = src.groupBy(key).applyInPandasWithState(
+                fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
             )
-            .trigger(availableNow=True)
-            .start()
-        )
+            _drain(
+                folded.writeStream.foreachBatch(
+                    lambda df, _eid: df.write.mode("append").parquet(out)
+                ).outputMode("update"),
+                checkpoint=ckpt,
+                shuffle_partitions=8,
+            )
     finally:
-        if prior is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
-    q.awaitTermination()
-    return spark.table(name)
+        shutil.rmtree(ingest, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return out
 
 
 @register(
@@ -491,6 +557,7 @@ def a06_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         _time.sleep(0.2)
     q.stop()
     cols = spark.table(name).columns
+    spark.catalog.dropTempView(name)
     ok = n > 0 and cols == ["timestamp", "value"]
     return spark.createDataFrame([(bool(ok),)], "produced_rows boolean")
 
@@ -581,23 +648,20 @@ def i04_watermark_late_drop_golden(spark: SparkSession, sf_dir: str) -> DataFram
     schema = "event_id long, ts timestamp, user_id long"
 
     def run_pass():
-        with _drain_scale_store(spark):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir + "/*/")
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "10 minutes").alias("w"))
-                .agg(F.count("*").alias("n"))
-                .select(F.col("w.start").alias("window_start"), "n")
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        _drain(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir + "/*/")
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes").alias("w"))
+            .agg(F.count("*").alias("n"))
+            .select(F.col("w.start").alias("window_start"), "n")
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=4,
+        )
 
     _write_golden_file(spark, src_dir, _GOLDEN_ROWS_A, "step-a")
     run_pass()
@@ -631,25 +695,20 @@ def i07_dedup_within_watermark_golden(spark: SparkSession, sf_dir: str) -> DataF
     schema = "event_id long, ts timestamp, user_id long"
 
     def run_pass():
-        with _drain_scale_store(spark):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir + "/*/")
-                .withWatermark("ts", "10 minutes")
-                .select(
-                    F.col("event_id").alias("dedup_key"), "ts", "user_id"
-                )
-                .dropDuplicatesWithinWatermark(["dedup_key"])
-                .select("dedup_key", "ts")
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        _drain(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir + "/*/")
+            .withWatermark("ts", "10 minutes")
+            .select(F.col("event_id").alias("dedup_key"), "ts", "user_id")
+            .dropDuplicatesWithinWatermark(["dedup_key"])
+            .select("dedup_key", "ts")
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=4,
+        )
 
     rows_a = [
         (1, "2024-01-01 10:00:00", 1),
@@ -690,17 +749,14 @@ def i13_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = e.agg(F.expr("percentile(event_id, 0.5)")).head()[0]
 
     def run_pass():
-        q = (
+        _drain(
             spark.readStream.schema("event_id long, value double")
             .parquet(src_dir + "/*/")
             .writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
 
     e.where(F.col("event_id") <= mid).coalesce(1).write.mode(
         "overwrite"
@@ -905,15 +961,10 @@ def i17_stateful_kill_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.where(F.col("event_id") % 4 == part).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(src_dir, f"part{part}"))
-    q2 = (
-        stateful(reader())
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stateful(reader()).writeStream.foreachBatch(sink).outputMode("update"),
+        checkpoint=ckpt,
     )
-    q2.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .groupBy("user_id")
@@ -968,13 +1019,7 @@ def a08_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(df: DataFrame, epoch_id: int) -> None:
         collected.extend((r["user_id"],) for r in df.collect())
 
-    q = (
-        sel.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="nibbler-fb-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sel.writeStream.foreachBatch(sink))
     rows = spark.createDataFrame(collected, "user_id long")
     return (
         rows.groupBy("user_id").agg(F.count("*").alias("n")).orderBy("user_id")
@@ -1139,36 +1184,22 @@ def _rollup_drain_pass(
             "overwrite"
         ).partitionBy("day_key").parquet(store)
 
-    # partitionOverwriteMode=dynamic only for the drain: restore the prior
-    # value so the shared session's behavior doesn't leak into later
-    # queries (same pattern as test_aqe_scale.py's conf overrides).
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # Drain-scale shuffle width for the per-epoch merge jobs (the
-    # streaming clone captures this at start; each epoch's agg/merge
+    # partitionOverwriteMode=dynamic only for the drain, so the shared
+    # session's behavior doesn't leak into later queries. Drain-scale
+    # shuffle width for the per-epoch merge jobs: each epoch's agg/merge
     # moves ≤ days_in_batch × 24 hourly rows — cluster-width shuffles
-    # would be pure task-launch overhead).
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
+    # would be pure task-launch overhead.
+    with scoped_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
+        _drain(
             spark.readStream.schema(_EVENT_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir + "/*/")
-            .writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(upsert),
+            checkpoint=ckpt,
+            shuffle_partitions=8,
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prior
-            )
 
 
 @register(
@@ -1333,16 +1364,13 @@ def i14_stream_stream_left_outer_golden(
             ),
             "leftOuter",
         ).select("c.user_id", "c.click_ts", "p.purchase_ts")
-        with _drain_scale_store(spark):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        _drain(
+            joined.writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=4,
+        )
 
     write_side(
         l_dir,
@@ -1411,18 +1439,10 @@ def a16_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a BATCH job inside foreachBatch, reading the conf at execution
     # time (not at stream start), and shuffles a handful of event_type
     # groups per epoch.
-    with _drain_scale_store(spark, 8):
-        q = (
-            _read_stream(spark, d)
-            .writeStream.foreachBatch(fan_out)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="nibbler-ck-"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        _read_stream(spark, d).writeStream.foreachBatch(fan_out),
+        shuffle_partitions=8,
+    )
     archived = spark.read.parquet(archive + "/epoch=*").count()
     expected = spark.read.parquet(d).count()
     assert archived == expected, f"archive {archived} != source {expected}"
@@ -1489,17 +1509,12 @@ def k16_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh.write.mode("append").parquet(store)
 
     def run_pass() -> None:
-        q = (
+        _drain(
             spark.readStream.schema("doc_id long, text string")
             .parquet(src + "/*/")
-            .writeStream.foreachBatch(ingest)
-            .option(
-                "checkpointLocation", os.path.join(base, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(ingest),
+            checkpoint=os.path.join(base, "ckpt"),
         )
-        q.awaitTermination()
 
     d.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "overwrite"
@@ -1622,28 +1637,25 @@ def i16_stateful_session_timeout_golden(
             )
 
     def run_pass() -> None:
-        with _drain_scale_store(spark):
-            q = (
-                spark.readStream.schema("user_id long, ts timestamp")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src + "/*/")
-                .withWatermark("ts", "10 minutes")
-                .groupBy("user_id")
-                .applyInPandasWithState(
-                    sessionize,
-                    "user_id long, session_start timestamp, n_events long",
-                    "start long, last long, cnt long",
-                    "append",
-                    GroupStateTimeout.EventTimeTimeout,
-                )
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+        _drain(
+            spark.readStream.schema("user_id long, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/*/")
+            .withWatermark("ts", "10 minutes")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                sessionize,
+                "user_id long, session_start timestamp, n_events long",
+                "start long, last long, cnt long",
+                "append",
+                GroupStateTimeout.EventTimeTimeout,
             )
-        q.awaitTermination()
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=4,
+        )
 
     def drop(rows, name):
         _local_rows_df(spark, rows, "user_id long, ts_s string").select(
@@ -1733,16 +1745,13 @@ def i17_stream_stream_full_outer_golden(
             "c.click_ts",
             "p.purchase_ts",
         )
-        with _drain_scale_store(spark):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        _drain(
+            joined.writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=4,
+        )
 
     write_side(
         l_dir,
@@ -1831,18 +1840,12 @@ def ext_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             key = (r["seed"], r["bucket"])
             store[key] = store.get(key, 0) + r["cell"]
 
-    q = (
+    _drain(
         spark.readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
-        .writeStream.foreachBatch(merge_epoch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-cms-")
-        )
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge_epoch),
     )
-    q.awaitTermination()
     rows = [
         (seed, bucket, int(cell))
         for (seed, bucket), cell in sorted(store.items())
@@ -2077,15 +2080,7 @@ def ext_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         seen_epochs.append(batch_id)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(src.writeStream.foreachBatch(sink))
     # simulate the epoch-replay crash window: re-append the final
     # epoch's data under its already-committed txn id
     last_epoch = max(seen_epochs)
@@ -2147,16 +2142,10 @@ def a22_avro_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(d)
         .select("event_id", "user_id", "value")
     )
-    q = (
+    _drain(
         src.writeStream.format("nibbler_avro")
-        .option("path", out)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out),
     )
-    q.awaitTermination()
     return (
         spark.read.format("nibbler_avro")
         .option("path", out)
@@ -2186,27 +2175,23 @@ def ext_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     the provider is a physical swap with zero semantic drift, which is
     exactly what makes it safe to flip in production. The conf is
     restored afterwards so sibling queries keep the default."""
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        },
+    ):
         src = _read_stream(spark, _events_dir(spark, sf_dir))
         agg = src.groupBy(F.window("ts", "10 minutes").alias("w")).agg(
             F.count("*").alias("n_events")
         )
         out = _drain_to_memory(agg, "complete")
-        return out.select(
-            F.col("w.start").alias("bucket_start"), "n_events"
-        ).orderBy("bucket_start")
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
+    return out.select(
+        F.col("w.start").alias("bucket_start"), "n_events"
+    ).orderBy("bucket_start")
 
 
 @register(
@@ -2321,17 +2306,14 @@ def a24_snapshot_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def drain() -> None:
-        q = (
+        _drain(
             spark.readStream.format("nibbler_snapshot")
             .option("path", table)
             .load()
             .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", sink),
+            checkpoint=ck,
         )
-        q.awaitTermination()
 
     s0 = write_snapshot(o.where(F.col("o_orderkey") % 3 == 0), table)
     write_snapshot(
@@ -2702,23 +2684,20 @@ def ext_stream_dropped_rows_metric(spark: SparkSession, sf_dir: str) -> DataFram
     schema = "event_id long, ts timestamp, user_id long"
 
     def run_pass():
-        with _drain_scale_store(spark):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir + "/*/")
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "10 minutes").alias("w"))
-                .agg(F.count("*").alias("n"))
-                .select(F.col("w.start").alias("window_start"), "n")
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        q = _drain(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir + "/*/")
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes").alias("w"))
+            .agg(F.count("*").alias("n"))
+            .select(F.col("w.start").alias("window_start"), "n")
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=4,
+        )
         return sum(
             op["numRowsDroppedByWatermark"]
             for p in q.recentProgress
@@ -2775,13 +2754,12 @@ def i24_rate_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("value").cast("bigint").alias("value_sum"),
     )
     name = "mem_" + uuid.uuid4().hex[:12]
+    ckpt = tempfile.mkdtemp(prefix="nibbler-ck-")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
+        .option("checkpointLocation", ckpt)
         .trigger(processingTime="0 seconds")
         .start()
     )
@@ -2798,8 +2776,9 @@ def i24_rate_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _time.sleep(0.2)
     q.stop()
     q.awaitTermination()
-    out = spark.table(name).where(F.col("n_rows") >= 150)
-    rows = out.collect()
+    shutil.rmtree(ckpt, ignore_errors=True)
+    rows = spark.table(name).where(F.col("n_rows") >= 150).collect()
+    spark.catalog.dropTempView(name)
     # the last complete-mode emission with all 150 rows
     last = rows[-1] if rows else None
     return spark.createDataFrame(
@@ -2914,18 +2893,12 @@ def a29_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_dir = tempfile.mkdtemp(prefix="nibbler-psink-")
     src = _read_stream(spark, _events_dir(spark, sf_dir))
-    q = (
+    _drain(
         src.writeStream.format("parquet")
         .partitionBy("event_type")
         .option("path", out_dir)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     dirs = sorted(
         d for d in os.listdir(out_dir) if d.startswith("event_type=")
     )
@@ -3090,15 +3063,7 @@ def ext_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             value_cols=["cents", "seg"],
         )
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(src.writeStream.foreachBatch(sink))
     return (
         read_snapshot(spark, table)
         .select(F.col("k").alias("c_custkey"), "cents", "seg")
@@ -3188,17 +3153,11 @@ def i26_stream_msgpack_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec, "event_id long, user_id long, value double"
     )
     out = tempfile.mkdtemp(prefix="nibbler-msgpack-sink-")
-    q = (
+    _drain(
         decoded.writeStream.format("parquet")
         .option("path", out)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     back = spark.read.parquet(out)
     return (
         back.groupBy("user_id")
@@ -3286,15 +3245,7 @@ def i27_stream_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         nonlocal_merged = set(merged) | {r["hv"] for r in sk}
         merged[:] = sorted(nonlocal_merged)[:256]
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(src.writeStream.foreachBatch(sink))
 
     # batch-global sketch over the full table — must equal the merge
     e = load_table(spark, sf_dir, "events").select("event_id")
@@ -3478,15 +3429,7 @@ def i28_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
         )
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(src.writeStream.foreachBatch(sink))
 
     # history audit: every published catalog version must be internally
     # consistent — the MV it pins equals the rollup of the fact it pins
@@ -3620,15 +3563,7 @@ def i29_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stream_counts.get(r["bucket"], 0) + r["n"]
             )
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(src.writeStream.foreachBatch(sink))
 
     # batch recomputation of the second-half histogram — the fold must
     # equal it exactly
@@ -3762,16 +3697,10 @@ def i30_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(os.path.join(dlq, f"epoch={epoch_id}"))
         batch_df.unpersist()
 
-    q = (
+    _drain(
         parsed.writeStream.foreachBatch(route)
-        .option("maxFilesPerTrigger", 1)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("maxFilesPerTrigger", 1),
     )
-    q.awaitTermination()
     good = spark.read.parquet(main + "/epoch=*").agg(
         F.count("*").cast("bigint").alias("n_good"),
         F.sum("v").cast("bigint").alias("sum_v"),
@@ -3836,18 +3765,12 @@ def i31_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(os.path.join(live_out, f"epoch={epoch_id}"))
 
-    q = (
+    _drain(
         spark.readStream.schema(live.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(live_src + "/half=*/")
-        .writeStream.foreachBatch(seam)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="nibbler-ck-")
-        )
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(seam),
     )
-    q.awaitTermination()
     merged = spark.read.parquet(hist_dir).unionByName(
         spark.read.parquet(live_out + "/epoch=*")
     )
@@ -3924,19 +3847,12 @@ def i32_kappa_reprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn_id=f"{version}-{epoch_id}",
             )
 
-        q = (
+        _drain(
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src + "/half=*/")
-            .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix=f"nibbler-ck-{version}-"),
-            )
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(sink),
         )
-        q.awaitTermination()
 
     cents = F.floor(F.col("value") * 100).cast("bigint")
     # v1 (the bug): counts every event type
@@ -4037,19 +3953,12 @@ def ext_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in regs:
             store[r["i"]] = store.get(r["i"], 0) + r["n"]
 
-    q = (
+    _drain(
         spark.readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
-        .writeStream.foreachBatch(merge_epoch)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="nibbler-dds-"),
-        )
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(merge_epoch),
     )
-    q.awaitTermination()
     rows = [(i, int(n)) for i, n in sorted(store.items())]
     return spark.createDataFrame(rows, "i bigint, n bigint").orderBy("i")
 
@@ -4083,7 +3992,6 @@ def i33_stream_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch + maxFilesPerTrigger paces 3 epochs of 2 file-groups
     each; per-epoch IO is O(changed groups), the carried files move
     by reference."""
-    import os
     import shutil
     import tempfile
 
@@ -4148,20 +4056,13 @@ def i33_stream_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Pin through termination: backfill's rollup aggregate runs as a
     # BATCH job per epoch inside foreachBatch (conf read at execution).
-    with _drain_scale_store(spark, 8):
-        q = (
-            spark.readStream.schema(_EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(d)
-            .writeStream.foreachBatch(backfill)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="nibbler-srw-ck-"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark.readStream.schema(_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(d)
+        .writeStream.foreachBatch(backfill),
+        shuffle_partitions=8,
+    )
     # idempotence re-proof: replaying one group's recompute changes nothing
     e_all = load_table(spark, sf_dir, "events")
     g0 = (
@@ -4383,19 +4284,12 @@ def i35_stream_incremental_profile(
             i = r["idx"]
             store["regs"][i] = max(store["regs"][i], r["m"])
 
-    q = (
+    _drain(
         spark.readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
-        .writeStream.foreachBatch(fold)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="nibbler-prof-"),
-        )
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(fold),
     )
-    q.awaitTermination()
     rows = [
         ("cents", store["cents"]),
         ("max_user", store["max_user"]),
@@ -4465,30 +4359,27 @@ def i36_tumbling_append_watermark(
     cut = gmin + datetime.timedelta(days=1)
 
     def run_pass() -> None:
-        with _drain_scale_store(spark, 8):
-            q = (
-                spark.readStream.schema(_EVENT_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir + "/*/")
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "10 minutes").alias("w"))
-                .agg(
-                    F.count("*").alias("n_events"),
-                    dsum("value").alias("total_value"),
-                )
-                .select(
-                    F.col("w.start").alias("bucket_start"),
-                    "n_events",
-                    "total_value",
-                )
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+        _drain(
+            spark.readStream.schema(_EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir + "/*/")
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes").alias("w"))
+            .agg(
+                F.count("*").alias("n_events"),
+                dsum("value").alias("total_value"),
             )
-        q.awaitTermination()
+            .select(
+                F.col("w.start").alias("bucket_start"),
+                "n_events",
+                "total_value",
+            )
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            checkpoint=ckpt,
+            shuffle_partitions=8,
+        )
 
     e.where(F.col("ts") >= F.lit(cut)).coalesce(1).write.parquet(
         os.path.join(src_dir, "step-a")
@@ -5103,17 +4994,10 @@ def i43_stream_grouped_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parity check.  Emissions append to a parquet sink per epoch
     (foreachBatch) and are read back distributed; nothing corpus-sized
     touches the driver."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_packing_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-pack-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def pack(key, pdfs, state: GroupState):
         (lang,) = key
@@ -5135,38 +5019,16 @@ def i43_stream_grouped_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            packed = (
-                spark.readStream.schema(
-                    "doc_id long, lang string, n_tokens int"
-                )
-                .parquet(ingest)
-                .groupBy("lang")
-                .applyInPandasWithState(
-                    pack,
-                    "lang string, doc_id long, n_tokens long, "
-                    "first_seq long, last_seq long",
-                    "cum long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
-            )
-            sq = (
-                packed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "doc_id long, lang string, n_tokens int",
+        "lang",
+        pack,
+        "lang string, doc_id long, n_tokens long, "
+        "first_seq long, last_seq long",
+        "cum long",
+    )
     return (
         spark.read.schema(
             "lang string, doc_id long, n_tokens long, "
@@ -5327,17 +5189,10 @@ def i45_stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     is e (min-epoch groupBy in the oracle), total/distinct per epoch
     straight counts — so the online index provably equals the offline
     scan at every epoch boundary."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-vocab-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def probe(key, pdfs, state: GroupState):
         (token,) = key
@@ -5353,35 +5208,15 @@ def i45_stream_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            probed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .groupBy("token")
-                .applyInPandasWithState(
-                    probe,
-                    "token string, epoch long, cnt long, novel boolean",
-                    "seen long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
-            )
-            sq = (
-                probed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "token",
+        probe,
+        "token string, epoch long, cnt long, novel boolean",
+        "seen long",
+    )
     emitted = spark.read.schema(
         "token string, epoch long, cnt long, novel boolean"
     ).parquet(outdir)
@@ -5477,17 +5312,10 @@ def i46_stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier epochs per bucket — the online state must equal the
     offline prefix sums at every epoch boundary, which the hash
     comparison enforces bucket-for-bucket through the per-epoch sums."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-drift-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (b,) = key
@@ -5504,44 +5332,26 @@ def i46_stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            bucketed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select(
-                    "epoch",
-                    (
-                        F.conv(
-                            F.substring(F.md5("token"), 1, 12), 16, 10
-                        ).cast("bigint")
-                        % 1024
-                    ).alias("b"),
-                )
-                .groupBy("b")
-                .applyInPandasWithState(
-                    fold,
-                    "b long, epoch long, cnt long, prior long",
-                    "run long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "b",
+        fold,
+        "b long, epoch long, cnt long, prior long",
+        "run long",
+        prep=lambda src: (
+            src.select(
+                "epoch",
+                (
+                    F.conv(
+                        F.substring(F.md5("token"), 1, 12), 16, 10
+                    ).cast("bigint")
+                    % 1024
+                ).alias("b"),
             )
-            sq = (
-                bucketed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        ),
+    )
     em = spark.read.schema(
         "b long, epoch long, cnt long, prior long"
     ).parquet(outdir)
@@ -5679,19 +5489,12 @@ def i47_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS guarantee (never undercounts) rides along as an output column
     at every boundary. md5-nibble hashing keeps the sketch
     bit-identical across engines; every value is an exact BIGINT."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from nibbler_spark.queries.sketches import _nib_hash
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-cms-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (k,) = key
@@ -5708,52 +5511,34 @@ def i47_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select(
-                    "epoch",
-                    F.explode(
-                        F.array(*[F.lit(i) for i in range(4)])
-                    ).alias("seed"),
-                    "token",
-                )
-                .select(
-                    "epoch",
-                    (
-                        F.col("seed").cast("bigint") * 64
-                        + _nib_hash(
-                            F.concat_ws(":", F.col("seed"), F.col("token")),
-                            64,
-                        ).cast("bigint")
-                    ).alias("k"),
-                )
-                .groupBy("k")
-                .applyInPandasWithState(
-                    fold,
-                    "k long, epoch long, cnt long, running long",
-                    "run long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "k",
+        fold,
+        "k long, epoch long, cnt long, running long",
+        "run long",
+        prep=lambda src: (
+            src.select(
+                "epoch",
+                F.explode(
+                    F.array(*[F.lit(i) for i in range(4)])
+                ).alias("seed"),
+                "token",
             )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            .select(
+                "epoch",
+                (
+                    F.col("seed").cast("bigint") * 64
+                    + _nib_hash(
+                        F.concat_ws(":", F.col("seed"), F.col("token")),
+                        64,
+                    ).cast("bigint")
+                ).alias("k"),
             )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        ),
+    )
 
     em = spark.read.schema(
         "k long, epoch long, cnt long, running long"
@@ -5893,17 +5678,10 @@ def i48_stream_bottomk_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch; untouched bands carry forward via a max_by over emitted
     epochs at read-out. Every value is an exact BIGINT (48-bit md5
     prefix) or a token string."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-kmv-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (band,) = key
@@ -5929,44 +5707,26 @@ def i48_stream_bottomk_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select(
-                    "epoch",
-                    "token",
-                    F.conv(F.substring(F.md5("token"), 1, 12), 16, 10)
-                    .cast("bigint")
-                    .alias("h"),
-                )
-                .withColumn("band", F.col("h") % 8)
-                .groupBy("band")
-                .applyInPandasWithState(
-                    fold,
-                    "band long, epoch long, rank long, h long,"
-                    " token string",
-                    "hs array<long>, toks array<string>",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "band",
+        fold,
+        "band long, epoch long, rank long, h long,"
+        " token string",
+        "hs array<long>, toks array<string>",
+        prep=lambda src: (
+            src.select(
+                "epoch",
+                "token",
+                F.conv(F.substring(F.md5("token"), 1, 12), 16, 10)
+                .cast("bigint")
+                .alias("h"),
             )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+            .withColumn("band", F.col("h") % 8)
+        ),
+    )
 
     em = spark.read.schema(
         "band long, epoch long, rank long, h long, token string"
@@ -6115,17 +5875,10 @@ def i49_stream_window_funnel(
     Parity: after every availableNow epoch, per-level user counts
     (carry-forward via max_by over emitted epochs) must equal the
     batch EXISTS-join levels over the epoch prefix."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _events_funnel_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-funnel-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     W = _FUNNEL_W_US
 
@@ -6159,37 +5912,15 @@ def i49_stream_window_funnel(
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema(
-                    "epoch int, user_id long, event_type string, t long"
-                )
-                .parquet(ingest)
-                .groupBy("user_id")
-                .applyInPandasWithState(
-                    fold,
-                    "user_id long, epoch long, best long",
-                    "lv long, a2 long, best long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
-            )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, user_id long, event_type string, t long",
+        "user_id",
+        fold,
+        "user_id long, epoch long, best long",
+        "lv long, a2 long, best long",
+    )
 
     em = spark.read.schema("user_id long, epoch long, best long").parquet(
         outdir
@@ -6310,17 +6041,10 @@ def i50_stream_length_moments(
     (n*sumsq - sum^2) / n^2 as micro floor-divisions. Parity: the
     per-epoch online triples must equal the batch prefix sums over
     doc_id-quartile epochs, value-for-value."""
-    import shutil
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_lang_len_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-moments-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (lang,) = key
@@ -6341,37 +6065,15 @@ def i50_stream_length_moments(
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema(
-                    "epoch int, lang string, x long"
-                )
-                .parquet(ingest)
-                .groupBy("lang")
-                .applyInPandasWithState(
-                    fold,
-                    "lang string, epoch long, n long, sm long, sq long",
-                    "n long, sm long, sq long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
-            )
-            sq_ = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq_.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, lang string, x long",
+        "lang",
+        fold,
+        "lang string, epoch long, n long, sm long, sq long",
+        "n long, sm long, sq long",
+    )
 
     em = spark.read.schema(
         "lang string, epoch long, n long, sm long, sq long"
@@ -6551,17 +6253,12 @@ def i51_stream_spacesaving(spark: SparkSession, sf_dir: str) -> DataFrame:
     global top-k at read-out is the k-way merge of shard summaries,
     the mergeable-summaries property."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from nibbler_spark.queries.sketches import _nib_hash
 
     k, ns = _SS_K, _SS_SHARDS
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-ss-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (shard,) = key
@@ -6597,43 +6294,25 @@ def i51_stream_spacesaving(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select(
-                    "epoch",
-                    "token",
-                    _nib_hash(F.col("token"), ns)
-                    .cast("long")
-                    .alias("shard"),
-                )
-                .groupBy("shard")
-                .applyInPandasWithState(
-                    fold,
-                    "shard long, epoch long, rank long, token string,"
-                    " est long, floor long",
-                    "toks array<string>, cnts array<long>, fl long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "shard",
+        fold,
+        "shard long, epoch long, rank long, token string,"
+        " est long, floor long",
+        "toks array<string>, cnts array<long>, fl long",
+        prep=lambda src: (
+            src.select(
+                "epoch",
+                "token",
+                _nib_hash(F.col("token"), ns)
+                .cast("long")
+                .alias("shard"),
             )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        ),
+    )
 
     em = spark.read.schema(
         "shard long, epoch long, rank long, token string, est long,"
@@ -6809,16 +6488,11 @@ def i52_stream_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent); per-epoch work is a map-side hash + the keyed
     stateful shuffle; the read-out grid is 64 x 4."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from nibbler_spark.queries.sketches import _nib_hash
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-decay-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (cell,) = key
@@ -6837,41 +6511,23 @@ def i52_stream_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"cell": [int(cell)], "epoch": [ep], "decayed": [v]}
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select(
-                    "epoch",
-                    _nib_hash(F.col("token"), 64)
-                    .cast("long")
-                    .alias("cell"),
-                )
-                .groupBy("cell")
-                .applyInPandasWithState(
-                    fold,
-                    "cell long, epoch long, decayed long",
-                    "v long, last long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "cell",
+        fold,
+        "cell long, epoch long, decayed long",
+        "v long, last long",
+        prep=lambda src: (
+            src.select(
+                "epoch",
+                _nib_hash(F.col("token"), 64)
+                .cast("long")
+                .alias("cell"),
             )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        ),
+    )
 
     em = spark.read.schema("cell long, epoch long, decayed long").parquet(
         outdir
@@ -7034,14 +6690,9 @@ def i53_stream_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is one map-side hash + the 64-key stateful shuffle; the
     read-out grid is 64 x 4."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-shll-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (idx,) = key
@@ -7058,49 +6709,31 @@ def i53_stream_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     hv = F.conv(F.substring(F.md5("token"), 1, 12), 16, 10).cast("bigint")
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select("epoch", hv.alias("hv"))
-                .select(
-                    "epoch",
-                    (F.col("hv") % 64).alias("idx"),
-                    F.expr("hv DIV 64").alias("w"),
-                )
-                .select(
-                    "epoch",
-                    "idx",
-                    F.when(F.col("w") == 0, F.lit(43))
-                    .otherwise(F.lit(43) - F.length(F.bin("w")))
-                    .cast("long")
-                    .alias("rho"),
-                )
-                .groupBy("idx")
-                .applyInPandasWithState(
-                    fold,
-                    "idx long, epoch long, m long",
-                    "m long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "idx",
+        fold,
+        "idx long, epoch long, m long",
+        "m long",
+        prep=lambda src: (
+            src.select("epoch", hv.alias("hv"))
+            .select(
+                "epoch",
+                (F.col("hv") % 64).alias("idx"),
+                F.expr("hv DIV 64").alias("w"),
             )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            .select(
+                "epoch",
+                "idx",
+                F.when(F.col("w") == 0, F.lit(43))
+                .otherwise(F.lit(43) - F.length(F.bin("w")))
+                .cast("long")
+                .alias("rho"),
             )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        ),
+    )
 
     em = spark.read.schema("idx long, epoch long, m long").parquet(outdir)
     epochs = spark.range(4).select(F.col("id").cast("bigint").alias("epoch"))
@@ -7297,19 +6930,13 @@ def stream_join_then_fold(
             (F.col("a.user_id") % W).cast("long").alias("k"),
             vexpr.alias("v"),
         )
-        with _drain_scale_store(spark, 8):
-            qj = (
-                joined.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(
-                        pairdir
-                    )
-                )
-                .outputMode("append")
-                .option("checkpointLocation", ckpt_j)
-                .trigger(availableNow=True)
-                .start()
-            )
-        qj.awaitTermination()
+        _drain(
+            joined.writeStream.foreachBatch(
+                lambda df, _eid: df.write.mode("append").parquet(pairdir)
+            ).outputMode("append"),
+            checkpoint=ckpt_j,
+            shuffle_partitions=8,
+        )
         keyed = (
             spark.readStream.schema("pep long, k long, v long")
             .parquet(pairdir)
@@ -7322,19 +6949,13 @@ def stream_join_then_fold(
                 GroupStateTimeout.NoTimeout,
             )
         )
-        with _drain_scale_store(spark, 8):
-            qf = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(
-                        outdir
-                    )
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt_f)
-                .trigger(availableNow=True)
-                .start()
-            )
-        qf.awaitTermination()
+        _drain(
+            keyed.writeStream.foreachBatch(
+                lambda df, _eid: df.write.mode("append").parquet(outdir)
+            ).outputMode("update"),
+            checkpoint=ckpt_f,
+            shuffle_partitions=8,
+        )
 
     em = spark.read.schema("k long, epoch long, running long").parquet(
         outdir
@@ -7562,14 +7183,9 @@ def i55_stream_ddsketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side bucket hash + the bounded stateful shuffle."""
     import pandas as pd
     from pyspark.sql import Window
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_token_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-sdds-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def fold(key, pdfs, state: GroupState):
         (idx,) = key
@@ -7586,42 +7202,24 @@ def i55_stream_ddsketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(conv(substring(md5(token), 1, 12), 16, 10) AS BIGINT)"
         " DIV 64"
     ) % 1_000_000
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema("epoch int, token string")
-                .parquet(ingest)
-                .select("epoch", v.alias("v"))
-                .select(
-                    "epoch",
-                    F.expr(
-                        "CAST(FLOOR(ln(v) * 1e9) AS BIGINT) DIV 25000000"
-                    ).alias("idx"),
-                )
-                .groupBy("idx")
-                .applyInPandasWithState(
-                    fold,
-                    "idx long, epoch long, c long",
-                    "c long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, token string",
+        "idx",
+        fold,
+        "idx long, epoch long, c long",
+        "c long",
+        prep=lambda src: (
+            src.select("epoch", v.alias("v"))
+            .select(
+                "epoch",
+                F.expr(
+                    "CAST(FLOOR(ln(v) * 1e9) AS BIGINT) DIV 25000000"
+                ).alias("idx"),
             )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        ),
+    )
 
     em = spark.read.schema("idx long, epoch long, c long").parquet(outdir)
     epochs = spark.range(4).select(F.col("id").cast("bigint").alias("epoch"))
@@ -7822,14 +7420,9 @@ def i56_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one keyed stateful shuffle on source; at 100 TB the gate runs in
     the ingest stream exactly like this, sharded by source key."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     cache = _docs_gate_slices_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-qgate-")
-    ingest = os.path.join(base, "ingest")
-    outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(ingest)
 
     def gate(key, pdfs, state: GroupState):
         (source,) = key
@@ -7857,38 +7450,16 @@ def i56_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            keyed = (
-                spark.readStream.schema(
-                    "epoch int, doc_id long, source string, n_chars long"
-                )
-                .parquet(ingest)
-                .groupBy("source")
-                .applyInPandasWithState(
-                    gate,
-                    "source string, epoch long, kept_n long, "
-                    "kept_bytes long, dropped_n long",
-                    "seen long, kn long, kb long, dn long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
-            )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+    outdir = _fold_slices(
+        spark,
+        cache,
+        "epoch int, doc_id long, source string, n_chars long",
+        "source",
+        gate,
+        "source string, epoch long, kept_n long, "
+        "kept_bytes long, dropped_n long",
+        "seen long, kn long, kb long, dn long",
+    )
 
     return (
         spark.read.schema(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from nibbler_spark.queries import register
+from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table, register_temp_views
 
 
@@ -701,8 +702,9 @@ def j16_arrow_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     legacy @udf functions."""
     from pyspark.sql.functions import udf
 
-    spark.conf.set("spark.sql.execution.pythonUDF.arrow.enabled", "true")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.execution.pythonUDF.arrow.enabled": "true"}
+    ):
 
         @udf("bigint")
         def chain(v: float) -> int:
@@ -716,10 +718,6 @@ def j16_arrow_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("event_id")
         out.count()  # materialize under the arrow flag
         return out
-    finally:
-        spark.conf.set(
-            "spark.sql.execution.pythonUDF.arrow.enabled", "false"
-        )
 
 
 @register(

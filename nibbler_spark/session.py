@@ -10,9 +10,33 @@ total cores, or rely on AQE coalescing from a higher initial number).
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict) -> Iterator[None]:
+    """Set ``overrides`` on the session for the ``with`` body only.
+
+    On exit, even when the body raises, each key goes back to the value
+    it had before; a key that was unset (``conf.get(key, None)`` is
+    ``None``) is unset again rather than pinned to a guessed default.
+    """
+    conf = spark.conf
+    prior = {key: conf.get(key, None) for key in overrides}
+    try:
+        for key, value in overrides.items():
+            conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)
 
 
 def apply_session_conf(spark: SparkSession) -> SparkSession:

@@ -51,6 +51,7 @@ from nibbler_spark.errors import (
     NibblerStoppedError,
     NibblerValidationError,
 )
+from nibbler_spark.session import scoped_conf
 from nibbler_spark.streaming.rebatcher import ReBatcher
 
 # Checkpoint file manager for a checkpoint the stream owns. Spark's default
@@ -242,28 +243,18 @@ class NibblerStream:
             .option("checkpointLocation", self._checkpoint)
             .trigger(processingTime=f"{int(self._cadence * 1000)} milliseconds")
         )
-        with _START_LOCK:
-            if not self._owns_checkpoint:
-                self.query = writer.start()
-            else:
-                # The offsets and commits logs pick their file manager up
-                # while writer.start() builds the query, so the override is
-                # scoped to that call. The file source's sources/0 log is
-                # made later, on the stream thread, and keeps Spark's
-                # default. Leaving the key set session-wide also covers
-                # that log (20 forks per micro-batch) but read no lower CPU
-                # per file (503 against 497 ms, medians of 3 runs), and it
-                # would change every other stream in the session.
-                conf = self.spark.conf
-                prev = conf.get(_CKPT_MANAGER_KEY, None)
-                conf.set(_CKPT_MANAGER_KEY, _CKPT_MANAGER)
-                try:
-                    self.query = writer.start()
-                finally:
-                    if prev is None:
-                        conf.unset(_CKPT_MANAGER_KEY)
-                    else:
-                        conf.set(_CKPT_MANAGER_KEY, prev)
+        # The offsets and commits logs pick their file manager up while
+        # writer.start() builds the query, so the override is scoped to
+        # that call. The file source's sources/0 log is made later, on the
+        # stream thread, and keeps Spark's default. Leaving the key set
+        # session-wide also covers that log (20 forks per micro-batch) but
+        # read no lower CPU per file (503 against 497 ms, medians of 3
+        # runs), and it would change every other stream in the session.
+        overrides = (
+            {_CKPT_MANAGER_KEY: _CKPT_MANAGER} if self._owns_checkpoint else {}
+        )
+        with _START_LOCK, scoped_conf(self.spark, overrides):
+            self.query = writer.start()
         self._poller = threading.Thread(
             target=self._poll_loop, name="nibbler-ticker", daemon=True
         )

@@ -120,7 +120,7 @@ class TestDrainSizedStateStore:
         ).parquet(_documents_dir(spark, sf_dir))
         agg = src.groupBy("lang").agg(F.count("*").alias("n"))
         out = _drain_to_memory(agg, "complete", shuffle_partitions=2)
-        # Session conf restored immediately after query start.
+        # Session conf restored once the drain has terminated.
         assert spark.conf.get("spark.sql.shuffle.partitions") == prior
         got = {(r["lang"], r["n"]) for r in out.collect()}
         want = {

@@ -100,7 +100,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from bench import FROZEN_ANCHORS, ROTATING  # bench.py's exact order
+    from bench import (  # bench.py's exact order and cleanup
+        FROZEN_ANCHORS,
+        ROTATING,
+        drop_debris,
+    )
     from nibbler_spark.queries import load_all
     from nibbler_spark.session import get_spark
     from nibbler_spark.sources import load_table
@@ -112,24 +116,15 @@ def main() -> None:
     spark = get_spark(app_name="nibbler-spark-bench-diag")
     load_table(spark, SF_DIR, "lineitem").count()
 
-    def _drop_debris() -> None:
-        for tbl in spark.catalog.listTables():
-            if tbl.name.startswith("mem_"):
-                spark.catalog.dropTempView(tbl.name)
-        spark.catalog.clearCache()
-        persistent = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(persistent.keySet()):
-            persistent.get(rid).rdd().unpersist(False)
-        if args.gc_between:
-            spark.sparkContext._jvm.System.gc()
-
     out = open(args.out, "w")
     gc_t0, gc_c0 = _gc_stats(spark)
     for pos, name in enumerate(rows):
         spec = specs.get(name)
         if spec is None:
             continue
-        _drop_debris()
+        drop_debris(spark)
+        if args.gc_between:
+            spark.sparkContext._jvm.System.gc()
         pre_workers = _py_worker_count()
         pre_bytes, pre_files = _local_dir_stats(spark)
         spec.spark(spark, SF_DIR).collect()  # warm-up (untimed)

@@ -457,27 +457,15 @@ def main() -> None:
     specs = load_all()
     spark = get_spark(app_name="nibbler-scale-ladder")
 
+    from bench import drop_debris
     from nibbler_spark.stage_metrics import measure_stages
-
-    def _drop_debris() -> None:
-        """bench.py's session-debris cleanup, applied between ladder
-        rows: a 75-row run accumulates memory-sink temp views and
-        pinned localCheckpoint blocks that compete with execution
-        memory and inflated late rows ~3x (r10:
-        ext_minhash_lsh_portable read 15.7x in-sweep vs 3.4x
-        isolated)."""
-        for tbl in spark.catalog.listTables():
-            if tbl.name.startswith("mem_"):
-                spark.catalog.dropTempView(tbl.name)
-        spark.catalog.clearCache()
-        persistent = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(persistent.keySet()):
-            persistent.get(rid).rdd().unpersist(False)
 
     out: dict[str, dict] = {}
     for name in names:
         spec = specs[name]
-        _drop_debris()
+        # Between ladder rows: session debris inflated late rows ~3x
+        # (r10: ext_minhash_lsh_portable 15.7x in-sweep vs 3.4x isolated).
+        drop_debris(spark)
         spec.spark(spark, small).collect()  # JVM/codegen warm-up, untimed
         t_small = []
         for _ in range(2):
