@@ -21,10 +21,15 @@ Conventions (FIXTURES.md §4):
 
 from __future__ import annotations
 
+import atexit
 import functools
 import importlib
+import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,6 +50,17 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+# The closed set of registry categories; ``register`` rejects any other,
+# so a singular/plural near-miss cannot split a family in two.
+CATEGORIES = frozenset({
+    "aggregation", "composite", "event-analytics", "filter", "flagship",
+    "join", "lakehouse", "llm-dedup", "llm-retrieval", "llm-text",
+    "llm-training-prep", "llm-vector", "ml-exact", "multimodal",
+    "nibbler-core", "projection", "relational", "scalar", "scale-pattern",
+    "setop", "sketch", "sort", "source-sink", "sql-surface", "streaming",
+    "tpch", "udf", "window",
+})
 
 # Submodules that register queries on import.
 _QUERY_MODULES = [
@@ -85,6 +101,48 @@ def load_all() -> dict[str, QuerySpec]:
     return REGISTRY
 
 
+class _CallScope(threading.local):
+    """One thread's scratch dirs and its depth of nested registered
+    calls."""
+
+    def __init__(self) -> None:
+        self.depth = 0
+        self.dirs: list[str] = []
+
+
+_scope = _CallScope()
+_live: set[str] = set()  # scratch dirs not yet removed, on any thread
+_live_lock = threading.Lock()
+_owner_pid = os.getpid()
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh ``nibbler-<name>-*`` temp dir owned by the calling
+    thread's current registered call.
+
+    The dir lives until that thread starts its next outermost registered
+    call, so the DataFrame the query returns can still read it lazily;
+    whatever is left at interpreter exit is removed then."""
+    d = tempfile.mkdtemp(prefix=f"nibbler-{name}-")
+    _scope.dirs.append(d)
+    with _live_lock:
+        _live.add(d)
+    return d
+
+
+def _release(dirs) -> None:
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    with _live_lock:
+        _live.difference_update(dirs)
+
+
+@atexit.register
+def _release_all() -> None:
+    if os.getpid() == _owner_pid:  # not in a forked child
+        _release(list(_live))
+
+
 def register(
     name: str,
     survey_id: str,
@@ -99,7 +157,14 @@ def register(
     depends on (UTC timezone, AQE) regardless of how the caller built
     the SparkSession. ANSI mode stays at the engine default (on in
     Spark 4) — the whole declared suite is validated under it.
+
+    The wrapper also owns the call's :func:`scratch_dir` dirs. An
+    outermost call on a thread first removes the dirs of that thread's
+    previous outermost call; a registered query called inside another
+    joins the outer call's scope, whose DataFrame reads its results.
     """
+    if category not in CATEGORIES:
+        raise ValueError(f"unknown category {category!r} for query {name!r}")
 
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
@@ -109,7 +174,14 @@ def register(
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.adaptive.enabled", "true")
             ship_package(spark)  # workers must import our Python operators
-            return fn(spark, sf_dir)
+            if _scope.depth == 0:
+                _release(_scope.dirs)
+                _scope.dirs = []
+            _scope.depth += 1
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                _scope.depth -= 1
 
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")

@@ -14,10 +14,12 @@ set and reduces per-partition (K6); the scale path is LSH bucketing (K7)
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import register, scratch_dir
 from nibbler_spark.queries._helpers import spread
 from nibbler_spark.sources import load_table
 
@@ -2352,9 +2354,6 @@ def ext_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXT-IVF — proving incremental maintenance loses nothing. At
     100 TB: index updates are append-only commits + an O(cells)
     codebook refresh; a full rebuild never happens."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         read_snapshot_pruned,
@@ -2370,8 +2369,7 @@ def ext_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # append-only maintenance story) is unchanged.
     base = e.where(F.col("vec_id") % 5 != 0).localCheckpoint()
     new = e.where(F.col("vec_id") % 5 == 0).localCheckpoint()
-    table = tempfile.mkdtemp(prefix="nibbler-ivfi-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("ivfi"), "table")
     files: list[str] = []
     for batch in (base, new):
         labels = sorted(
@@ -3351,7 +3349,7 @@ def _kpp_oracle() -> str:
 @register(
     "ext_kmeanspp_seeding",
     survey_id="EXT-KMEANSPP",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=_kpp_oracle(),
 )
 def ext_kmeanspp_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3575,7 +3573,7 @@ def margin_candidate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_margin_pair_mining",
     survey_id="EXT-MARGIN-MINING",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=f"""
 WITH a AS (SELECT vec_id AS src_id, embedding AS ea
            FROM embeddings WHERE label = 0),
@@ -3747,7 +3745,7 @@ def ext_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_medoid_exemplars",
     survey_id="EXT-MEDOID",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=f"""
 WITH lc AS (
   SELECT label, CAST(COUNT(*) AS BIGINT) AS n
@@ -3903,7 +3901,7 @@ def ext_medoid_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_silhouette_sampled",
     survey_id="EXT-SILHOUETTE",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=f"""
 WITH nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM embeddings),
 probes AS (
@@ -4085,7 +4083,7 @@ _BQ_PACK_SQL = (
 @register(
     "ext_binary_embedding_recall",
     survey_id="EXT-BQ-RECALL",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=f"""
 WITH packed AS (
   SELECT vec_id,
@@ -4222,7 +4220,7 @@ def ext_binary_embedding_recall(
 @register(
     "ext_embedding_distribution_divergence",
     survey_id="EXT-EMB-JSD",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=f"""
 WITH seeds AS (
   SELECT cell, se FROM (
@@ -4478,7 +4476,7 @@ ORDER BY p.probe_id"""
 @register(
     "ext_srp_hyperplane_lsh",
     survey_id="EXT-SRP-LSH",
-    category="llm-vectors",
+    category="llm-vector",
     oracle=_srp_oracle(),
 )
 def ext_srp_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

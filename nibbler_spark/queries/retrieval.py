@@ -955,7 +955,7 @@ _RBO_D = 2520 * 10**10  # common denominator: LCM(1..10) * 10^10
 @register(
     "ext_rank_biased_overlap",
     survey_id="EXT-RBO",
-    category="retrieval",
+    category="llm-retrieval",
     oracle=f"""
 WITH docs AS (
   SELECT doc_id, lang,
@@ -1582,7 +1582,7 @@ ORDER BY f.qid"""
 @register(
     "ext_nsw_greedy_search",
     survey_id="EXT-NSW",
-    category="retrieval",
+    category="llm-retrieval",
     oracle=_nsw_oracle(),
 )
 def ext_nsw_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1773,7 +1773,7 @@ ORDER BY p.qid"""
 @register(
     "ext_hnsw_layered_search",
     survey_id="EXT-HNSW",
-    category="retrieval",
+    category="llm-retrieval",
     oracle=_hnsw_oracle(),
 )
 def ext_hnsw_layered_search(spark: SparkSession, sf_dir: str) -> DataFrame:

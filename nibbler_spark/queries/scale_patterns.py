@@ -13,7 +13,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import register, scratch_dir
 from nibbler_spark.queries._helpers import dec, dsum, spread, sql_dsum
 from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table
@@ -342,9 +342,7 @@ def ext_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     count strictly reduced, content identical (exceptAll both ways).
     At 100 TB compaction runs per partition with target sizes from
     spark.sql.files.maxPartitionBytes."""
-    import tempfile as _tf
-
-    base = _tf.mkdtemp(prefix="nibbler-compact-")
+    base = scratch_dir("compact")
     frag, compact = base + "/frag", base + "/compact"
     o = load_table(spark, sf_dir, "orders")
     o.repartition(40).write.mode("overwrite").parquet(frag)
@@ -711,10 +709,6 @@ def ext_snapshot_zorder_skipping(
     writer: clustering changes IO, never answers. This is OPTIMIZE
     ZORDER BY in miniature — the knob that lets multi-dimensional
     dashboards skip the files a 1-D sort cannot."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot_pruned,
         write_snapshot,
@@ -760,11 +754,8 @@ def ext_snapshot_zorder_skipping(
         .drop("zx", "zy")
     )
 
-    tz = tempfile.mkdtemp(prefix="nibbler-zskip-")
-    tl = tempfile.mkdtemp(prefix="nibbler-lskip-")
-    for t in (tz, tl):
-        shutil.rmtree(t)
-        os.makedirs(t)
+    tz = scratch_dir("zskip")
+    tl = scratch_dir("lskip")
     write_snapshot(zdf.repartitionByRange(64, "zval"), tz)
     write_snapshot(o.repartitionByRange(64, "o_custkey"), tl)
 
@@ -3313,7 +3304,7 @@ def _hrw_sql(n_shards: int) -> str:
 @register(
     "ext_rendezvous_sharding",
     survey_id="EXT-HRW-SHARD",
-    category="scale-patterns",
+    category="scale-pattern",
     oracle=f"""
 WITH assign AS MATERIALIZED (
   SELECT doc_id,
@@ -3509,7 +3500,7 @@ ORDER BY shard
 @register(
     "ext_shard_rebalance_plan",
     survey_id="EXT-SHARD-REBALANCE",
-    category="scale-patterns",
+    category="scale-pattern",
     oracle=_rebalance_oracle(),
 )
 def ext_shard_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

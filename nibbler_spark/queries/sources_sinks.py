@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import register, scratch_dir
 from nibbler_spark.queries._helpers import spread
 from nibbler_spark.sources import load_table
 
@@ -131,11 +131,9 @@ def a11_push_receiver_spool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The push receiver's spool format (R15/A11): items written by
     FileDropReceiver are readable as schema'd JSON with their sequence
     numbers intact."""
-    import tempfile as _tf
-
     from nibbler_spark.streaming.transport import FileDropReceiver
 
-    d = _tf.mkdtemp(prefix="nibbler-a11-")
+    d = scratch_dir("a11")
     rx = FileDropReceiver(d)
     rx.send("one")
     rx.send_many(["two", "three"])
@@ -235,9 +233,7 @@ def a14_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows surface NULL for the new column. The everyday reality of a
     long-lived 100 TB lake where writers evolve independently; schema
     merge happens at footer-reconciliation time, not via rewrite."""
-    import tempfile as _tf
-
-    base = _tf.mkdtemp(prefix="nibbler-a14-")
+    base = scratch_dir("a14")
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     r.write.mode("overwrite").parquet(base + "/gen=1")
     r.withColumn(
@@ -599,11 +595,7 @@ def a23_csv_malformed_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     survived); FAILFAST raises on the first bad record (asserted via a
     caught action). Parsing policy is per-task and row-local — no mode
     changes the scan's distribution."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="nibbler-csvmodes-")
-    shutil.rmtree(tmp)
+    tmp = os.path.join(scratch_dir("csvmodes"), "tmp")
     o = load_table(spark, sf_dir, "orders")
     lines = o.select(
         F.concat_ws(
@@ -1731,7 +1723,6 @@ def a42_parquet_raw_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataSource writer's task topology, demonstrated from the spec
     up."""
     import os as _os
-    import tempfile as _tf
     import uuid as _uuid
 
     import pandas as _pd
@@ -1744,7 +1735,7 @@ def a42_parquet_raw_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     outs = []
     for codec in ("snappy", "uncompressed"):
-        out_dir = _tf.mkdtemp(prefix=f"nibbler-rawpqw-{codec}-")
+        out_dir = scratch_dir(f"rawpqw-{codec}")
 
         def write_files(batches, codec=codec, out_dir=out_dir):
             from nibbler_spark.operators.parquet_codec import parquet_write
@@ -1854,13 +1845,12 @@ def a43_arrow_ipc_raw_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce."""
     import math as _math
     import os as _os
-    import tempfile as _tf
     import uuid as _uuid
 
     import pandas as _pd
 
     c = load_table(spark, sf_dir, "customer")
-    out_dir = _tf.mkdtemp(prefix="nibbler-arrowipc-")
+    out_dir = scratch_dir("arrowipc")
 
     def write_files(batches):
         import pyarrow as _pa
@@ -2043,7 +2033,6 @@ def a44_csv_dialect_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     and parse are all partition-local mapInPandas stages — the a41/
     a42 raw-format topology applied to the oldest format there is."""
     import os as _os
-    import tempfile as _tf
 
     import pandas as _pd
 
@@ -2053,7 +2042,7 @@ def a44_csv_dialect_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.floor(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
     )
-    out_dir = _tf.mkdtemp(prefix="nibbler-csvdialect-")
+    out_dir = scratch_dir("csvdialect")
 
     def encode(batches):
         rows = []
@@ -2155,7 +2144,6 @@ def a45_bz2_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder end-to-end."""
     import bz2 as _bz2
     import os as _os
-    import tempfile as _tf
     import uuid as _uuid
 
     import pandas as _pd
@@ -2163,7 +2151,7 @@ def a45_bz2_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
-    out_dir = _tf.mkdtemp(prefix="nibbler-bz2-")
+    out_dir = scratch_dir("bz2")
 
     def encode(batches):
         lines = []

@@ -8,11 +8,13 @@ assumed."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nibbler_spark.operators.merge import merge_upsert
-from nibbler_spark.queries import register
+from nibbler_spark.queries import register, scratch_dir
 from nibbler_spark.sources import load_table, register_temp_views
 
 
@@ -215,19 +217,13 @@ def ext_time_travel_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial snapshot. At 100 TB: manifests are O(files) driver-side
     metadata; data moves only through ordinary parallel parquet scans
     and writes of the CHANGED files."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         snapshot_files,
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-ttt-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("ttt")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -294,19 +290,13 @@ def ext_snapshot_incremental_read(
     post-image of the rewritten files. File-granularity change feeds
     are how incremental ETL scales — work is proportional to the
     delta, never the table."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_changes,
         snapshot_files,
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-cdc-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("cdc")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -367,18 +357,12 @@ def ext_snapshot_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-level analogue of partition pruning: a predicate touching
     2% of the key space reads 2% of the files, and the pruning cost is
     O(files) driver metadata, zero executor work."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot_pruned,
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-skip-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("skip")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -437,10 +421,6 @@ def ext_snapshot_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation of the same MERGE. Scale shape: stats-prune candidate
     files by key envelope → one key-column semi-join to find touched
     files → rewrite only those (single keyed left join) → commit."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         merge_into_snapshot,
         read_snapshot,
@@ -448,9 +428,7 @@ def ext_snapshot_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-msnap-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("msnap")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -523,10 +501,6 @@ def ext_snapshot_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract a downstream incremental pipeline depends on: consuming
     the delta of a merge is work proportional to the rewritten
     fraction, never the table."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         merge_into_snapshot,
         read_changes,
@@ -534,9 +508,7 @@ def ext_snapshot_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-mcdc-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("mcdc")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -604,10 +576,6 @@ def ext_snapshot_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout actually shrank (files_after < files_before), and the
     pre-compaction snapshot remains time-travel readable (compaction
     is a logical no-op, not a destructive rewrite)."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         compact_snapshot,
         read_snapshot,
@@ -615,9 +583,7 @@ def ext_snapshot_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-compact-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("compact")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -664,10 +630,6 @@ def ext_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     with retained snapshots survive), and resolving an expired
     snapshot now fails, which is the documented lakehouse retention
     contract: time travel works within the window, never past it."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         snapshot_files,
@@ -675,9 +637,7 @@ def ext_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-vacuum-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("vacuum")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -868,19 +828,13 @@ def ext_snapshot_schema_evolution(
     a14 mergeSchema contract lifted onto versioned commits: at 100 TB
     a column add is a metadata-only operation, and time-traveling to
     commit 0 still yields the pre-evolution schema."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         snapshot_files,
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-evolve-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("evolve")
     o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("bigint")
     v1 = o.where(F.col("o_orderstatus") == "O").select(
@@ -1071,10 +1025,6 @@ def ext_snapshot_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     looked-up order itself, oracle-checked. This is Delta/Iceberg's
     bloom-skipping contract: high-cardinality key lookups touch O(1)
     files out of millions, with prune cost O(files) driver metadata."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         prune_entries,
         read_snapshot_pruned,
@@ -1082,9 +1032,7 @@ def ext_snapshot_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-bloom-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("bloom")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1158,10 +1106,6 @@ def ext_snapshot_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction then materializes the surviving rows into DV-free files
     (``dv_purged``) whose contents still hash-match — the standard
     DV lifecycle: cheap deletes now, reconciled at maintenance time."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         compact_snapshot,
         delete_from_snapshot,
@@ -1171,9 +1115,7 @@ def ext_snapshot_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-dv-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("dv")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1228,10 +1170,6 @@ def ext_snapshot_check_constraints(
     constraints folded into a single pass), which at 100 TB is the
     cheapest possible gate: the write already paid the scan, the check
     adds a map-side fold."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         SnapshotConstraintError,
         latest_snapshot,
@@ -1239,9 +1177,7 @@ def ext_snapshot_check_constraints(
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-check-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("check")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1307,10 +1243,6 @@ def ext_snapshot_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     resurrect the old row versions — the classic MoR footgun, guarded
     in write_snapshot). The final table hash-matches a CASE-expression
     oracle row-for-row."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         snapshot_files,
@@ -1319,9 +1251,7 @@ def ext_snapshot_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-morupd-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("morupd")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1383,19 +1313,13 @@ def ext_incremental_mv_maintenance(
     (``incremental`` pins removed ⊂ base), and the maintained MV
     hash-matches the from-scratch oracle over the post-merge table —
     the equivalence that makes the shortcut trustworthy."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         merge_into_snapshot,
         snapshot_files,
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-ivm-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("ivm")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1578,9 +1502,6 @@ def ext_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     the restored stage must exactly equal the original. Zero data files
     move during rollback — it is a manifest-only operation, O(files)
     driver metadata at any table size."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         rollback_snapshot,
@@ -1589,8 +1510,7 @@ def ext_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-rb-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("rb"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1661,9 +1581,6 @@ def ext_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts. The staged-but-never-published snapshot remains for
     debugging — exactly the WAP contract. Refs are O(1) metadata; at
     100 TB publish cost is independent of table size."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_ref,
         set_ref,
@@ -1671,8 +1588,7 @@ def ext_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-wap-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("wap"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1774,17 +1690,13 @@ def ext_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked results. At 100 TB: pruning is O(files) driver
     metadata; repartitioning a petabyte table becomes 'write new files
     with the new layout' instead of a migration."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot_pruned,
         snapshot_files,
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-pe-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("pe"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderdate", "o_totalprice"
     )
@@ -1990,9 +1902,6 @@ def ext_snapshot_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     history table never touches data bytes — the whole query is
     metadata, which is exactly what makes `SELECT * FROM
     t.snapshots` instant on petabyte tables."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         snapshot_entries,
         snapshot_files,
@@ -2000,8 +1909,7 @@ def ext_snapshot_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-meta-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("meta"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_totalprice"
     )
@@ -2130,9 +2038,6 @@ def ext_snapshot_asof_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly commits 1, 2, and 3. Scale: resolution is a driver-side
     scan of O(snapshots) manifest metas — no data IO until the chosen
     snapshot is read."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         latest_snapshot,
         read_snapshot,
@@ -2141,8 +2046,7 @@ def ext_snapshot_asof_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-asof-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("asof"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_totalprice"
     )
@@ -2274,10 +2178,6 @@ def ext_snapshot_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     set unions ALL manifests, so time travel is never broken by
     cleanup. Scale: O(files) driver-side set difference — no data
     IO."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         remove_orphan_files,
@@ -2285,8 +2185,7 @@ def ext_snapshot_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-orph-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("orph"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_totalprice"
     )
@@ -2349,9 +2248,6 @@ def ext_snapshot_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ONE snapshot and the conforming content. The check is
     pure schema metadata: zero execution, zero IO on the failure
     path — which is what lets it run on every commit at any scale."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         SnapshotConstraintError,
         latest_snapshot,
@@ -2359,8 +2255,7 @@ def ext_snapshot_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-contract-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("contract"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2438,9 +2333,7 @@ def ext_snapshot_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each table's new commits land in its own data dirs. At 100 TB
     shallow clone is how dev/test environments fork a production table
     in O(files) metadata."""
-    import os
     import shutil
-    import tempfile
 
     from nibbler_spark.operators.snapshots import (
         clone_snapshot,
@@ -2448,18 +2341,16 @@ def ext_snapshot_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    src = tempfile.mkdtemp(prefix="nibbler-clsrc-")
-    shutil.rmtree(src)
+    base = scratch_dir("clone")
+    src = os.path.join(base, "src")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_totalprice"
     )
     sid = write_snapshot(
         o.where(F.col("o_orderstatus") == "F").repartition(2), src
     )
-    shallow = tempfile.mkdtemp(prefix="nibbler-clsh-")
-    shutil.rmtree(shallow)
-    deep = tempfile.mkdtemp(prefix="nibbler-cldp-")
-    shutil.rmtree(deep)
+    shallow = os.path.join(base, "shallow")
+    deep = os.path.join(base, "deep")
     clone_snapshot(src, shallow, sid, deep=False)
     clone_snapshot(src, deep, sid, deep=True)
     zero_copy = not [
@@ -2639,10 +2530,6 @@ def ext_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle's direct formulation. Scale: the catalog adds
     one O(tables) JSON pointer per txn on top of O(files) manifests;
     reads cost one extra driver-side resolve."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         catalog_commit,
         catalog_read,
@@ -2651,8 +2538,7 @@ def ext_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="nibbler-cattxn-")
-    shutil.rmtree(root)
+    root = scratch_dir("cattxn")
     fact_dir = os.path.join(root, "fact")
     mv_dir = os.path.join(root, "mv")
     cat = os.path.join(root, "_catalog")
@@ -2819,10 +2705,6 @@ def ext_gdpr_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the Delta/Iceberg VACUUM-completes-deletion doctrine.
     Scale: DV delete is O(matching rows), compaction O(live data),
     vacuum O(files) driver metadata."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         compact_snapshot,
         delete_from_snapshot,
@@ -2832,9 +2714,7 @@ def ext_gdpr_forget_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-gdpr-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("gdpr")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -2928,10 +2808,6 @@ def ext_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     still serves the old name from its own meta. At 100 TB a rename
     is O(1) metadata — the copy-on-write alternative rewrites the
     entire table."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         read_snapshot,
         rename_columns,
@@ -2939,9 +2815,7 @@ def ext_snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-colmap-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("colmap")
     o = load_table(spark, sf_dir, "orders")
     v0 = o.select(
         "o_orderkey",
@@ -3004,10 +2878,6 @@ def ext_snapshot_row_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff. A downstream incremental consumer can reconstruct the merge
     (retract pre-images, apply post-images) without scanning either
     table version. Hash-checked against the closed-form change set."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         merge_into_snapshot,
         read_row_changes,
@@ -3015,9 +2885,7 @@ def ext_snapshot_row_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-rowcdc-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("rowcdc")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -3102,9 +2970,6 @@ def ext_snapshot_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit a platform runs for retention and incident forensics
     ('which commit produced these rows') — at 100 TB it stays a
     driver-side manifest walk."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         file_lineage,
         merge_into_snapshot,
@@ -3112,8 +2977,7 @@ def ext_snapshot_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-lineage-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("lineage"), "table")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -3184,10 +3048,6 @@ def ext_manifest_list_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: metadata IO scales with surviving shards, not table
     files; data IO scales with surviving files — each level cuts an
     order of magnitude before the scan starts."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         commit_snapshot_sharded,
         file_stats,
@@ -3196,9 +3056,7 @@ def ext_manifest_list_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot_pruned,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-mlist-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("mlist")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -3510,9 +3368,6 @@ def ext_snapshot_replace_where(
     orders. This is the missing lifecycle piece between append-only
     commits and full MERGE: backfills touch exactly the declared
     region, atomically."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         latest_snapshot,
         prune_entries,
@@ -3525,8 +3380,7 @@ def ext_snapshot_replace_where(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table = tempfile.mkdtemp(prefix="nibbler-rw-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("rw"), "table")
     statuses = [
         r["o_orderstatus"]
         for r in o.select("o_orderstatus").distinct().collect()
@@ -3659,9 +3513,6 @@ def ext_bloom_fp_calibration(
     statistical hope. Scale: bloom build is the distributed bit_or
     aggregate of write_snapshot; probing is driver-side against the
     kilobyte manifests — exactly what pruning does."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         _bloom_may_contain,
         latest_snapshot,
@@ -3671,8 +3522,7 @@ def ext_bloom_fp_calibration(
     )
 
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    table = tempfile.mkdtemp(prefix="nibbler-bloomfp-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("bloomfp"), "table")
     carry: list[str] = []
     fid_of: dict[str, int] = {}
     for fid in range(4):

@@ -14,9 +14,11 @@ its own only when a later pass restarts from it) and the state-partition
 count (``spark.sql.shuffle.partitions`` held through termination under
 ``session.scoped_conf``, then restored or unset). ``_drain_to_memory``
 drops its memory-sink view before returning, and ``_fold_slices``
-removes its ingest copy and checkpoint. What a query still leaves
-behind is the base dir of its source and sink files
-(``nibbler-<name>-*``), which the DataFrame it returns reads lazily.
+removes its ingest copy and checkpoint. The base dirs of a query's
+source and sink files come from ``scratch_dir``: the registry wrapper
+keeps them while the returned DataFrame may read them lazily and
+removes them when the thread's next outermost registered call starts
+(or at interpreter exit).
 
 Scale notes: all stateful ops are keyed (user_id / window / event_id) so
 state partitions horizontally; watermarks bound state size; the memory
@@ -27,13 +29,12 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import register, scratch_dir
 from nibbler_spark.queries._helpers import dsum, sql_dsum
 from nibbler_spark.queries.llm_dedup import _PMH_ORACLE
 from nibbler_spark.session import scoped_conf
@@ -112,9 +113,10 @@ def _drain(
     The one place a registry stream is drained. It owns:
 
     - the checkpoint, when ``checkpoint`` is None: a fresh
-      ``nibbler-ck-*`` dir, removed once the query has terminated. A
-      caller passes its own dir only when a later pass restarts from it;
-      that dir stays.
+      ``nibbler-ck-*`` ``scratch_dir``, removed as soon as the query has
+      terminated rather than at the end of the registered call. A
+      caller passes its own dir only when a later pass restarts from
+      it; that dir lives as long as the caller's scratch dir.
     - the state-partition count: ``shuffle_partitions``, when given, is
       held on the session through ``awaitTermination()`` and then the
       prior value (or unset) comes back. A stateful query fixes its
@@ -126,7 +128,7 @@ def _drain(
     spark = writer._spark
     owned = checkpoint is None
     if owned:
-        checkpoint = tempfile.mkdtemp(prefix="nibbler-ck-")
+        checkpoint = scratch_dir("ck")
     overrides = (
         {}
         if shuffle_partitions is None
@@ -196,11 +198,13 @@ def _fold_slices(
     order by construction, not by file-listing accident). Emissions
     append to parquet per micro-batch (``foreachBatch``). ``prep``
     maps the ingest stream before the grouping. The state store runs at
-    8 partitions. The ingest copy and the checkpoint are removed on
-    return; the emitted rows stay for the caller's lazy read."""
+    8 partitions. All three live in one ``nibbler-fold-*``
+    ``scratch_dir``: the ingest copy and the checkpoint are removed on
+    return, the emitted rows when the registered call's scope ends, so
+    the caller can still read them lazily."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    base = tempfile.mkdtemp(prefix="nibbler-fold-")
+    base = scratch_dir("fold")
     ingest = os.path.join(base, "ingest")
     ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
@@ -640,7 +644,7 @@ def i04_watermark_late_drop_golden(spark: SparkSession, sf_dir: str) -> DataFram
     watermark, DROPPED — plus 10:52 (closing the 10:30 window). The
     pinned output has exactly 3 windows; the 10:40 window never
     finalizes and the late row never appears."""
-    base = tempfile.mkdtemp(prefix="nibbler-i04-")
+    base = scratch_dir("i04")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -687,7 +691,7 @@ def i07_dedup_within_watermark_golden(spark: SparkSession, sf_dir: str) -> DataF
     """dropDuplicatesWithinWatermark: a duplicate key arriving within the
     10-minute window is dropped; after the watermark evicts its state the
     key is emitted again (run 2's 10:40 re-emission of key 1)."""
-    base = tempfile.mkdtemp(prefix="nibbler-i07-")
+    base = scratch_dir("i07")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -740,7 +744,7 @@ def i13_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-most-once — SURVEY §2.2.1): half the files, stop, rest of the
     files, restart with the same checkpoint — the file sink shows every
     event exactly once."""
-    base = tempfile.mkdtemp(prefix="nibbler-i13-")
+    base = scratch_dir("i13")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -898,7 +902,7 @@ def i17_stateful_kill_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    base = tempfile.mkdtemp(prefix="nibbler-i17-")
+    base = scratch_dir("i17")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -1085,7 +1089,7 @@ def _incremental_rollup_drain(
     ~(days/4 + 1 boundary) day partitions; dynamic partition overwrite
     leaves the rest of the store untouched.  ``repartition(day_key)``
     before the write yields exactly one file per touched day."""
-    base = base or tempfile.mkdtemp(prefix="nibbler-rollup-")
+    base = base or scratch_dir("rollup")
     src_dir = os.path.join(base, "src")
     store = os.path.join(base, "store")
     os.makedirs(src_dir, exist_ok=True)
@@ -1326,7 +1330,7 @@ def i14_stream_stream_left_outer_golden(
     pinned golden has the matched pairs AND user 2's null-extended row;
     state is bounded by the watermark on both sides (SCALE.md §streaming).
     """
-    base = tempfile.mkdtemp(prefix="nibbler-i14-")
+    base = scratch_dir("i14")
     l_dir = os.path.join(base, "left")
     r_dir = os.path.join(base, "right")
     out_dir = os.path.join(base, "out")
@@ -1418,7 +1422,7 @@ def a16_foreachbatch_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs, must equal the batch aggregate; the archive must hold
     every row."""
     d = _events_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="nibbler-a16-")
+    base = scratch_dir("a16")
     archive = os.path.join(base, "archive")
     counts = os.path.join(base, "counts")
 
@@ -1488,7 +1492,7 @@ def k16_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     First-writer-wins is the declared semantic. At 100 TB the store is
     a bucketed table on content_key so the anti-join is exchange-free
     on the store side."""
-    base = tempfile.mkdtemp(prefix="nibbler-k16-")
+    base = scratch_dir("k16")
     src = os.path.join(base, "src")
     store = os.path.join(base, "store")
     os.makedirs(src, exist_ok=True)
@@ -1587,7 +1591,7 @@ def i16_stateful_session_timeout_golden(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    base = tempfile.mkdtemp(prefix="nibbler-i16-")
+    base = scratch_dir("i16")
     src = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -1704,7 +1708,7 @@ def i17_stream_stream_full_outer_golden(
     purchased AND user 4's purchase with no click both emit
     null-extended once the watermark clears their join windows.
     Same sentinel-advance discipline as i14."""
-    base = tempfile.mkdtemp(prefix="nibbler-i17-")
+    base = scratch_dir("i17")
     l_dir = os.path.join(base, "left")
     r_dir = os.path.join(base, "right")
     out_dir = os.path.join(base, "out")
@@ -2053,18 +2057,12 @@ def ext_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches 3x the events rowcount and event_id sum: exactly
     once, not at-least-once. Scale: commits are O(files) manifest
     metadata; the txn scan is O(snapshots) driver-side."""
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         idempotent_append,
         read_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-snapsink-")
-    import shutil
-
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("snapsink")
     d = _events_dir(spark, sf_dir, copies=3)
     src = (
         spark.readStream.schema(_EVENT_SCHEMA)
@@ -2126,15 +2124,10 @@ def a22_avro_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-grade version of the same contract). Three paced epochs
     write a 3-copy corpus; reading the directory back through the
     batch reader must reproduce it exactly."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.sources.avro_datasource import register_avro_source
 
     register_avro_source(spark)
-    out = tempfile.mkdtemp(prefix="nibbler-avrosink-")
-    shutil.rmtree(out)
-    os.makedirs(out)
+    out = scratch_dir("avrosink")
     d = _events_dir(spark, sf_dir, copies=3)
     src = (
         spark.readStream.schema(_EVENT_SCHEMA)
@@ -2282,10 +2275,6 @@ def a24_snapshot_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     that run 2 started from the checkpointed offset instead of
     replaying). This is the bridge that turns the lakehouse format
     into a live feed for downstream streaming pipelines."""
-    import os
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         snapshot_files,
         write_snapshot,
@@ -2295,11 +2284,9 @@ def a24_snapshot_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_snapshot_stream_source(spark)
-    table = tempfile.mkdtemp(prefix="nibbler-snapsrc-")
-    shutil.rmtree(table)
-    os.makedirs(table)
-    sink = tempfile.mkdtemp(prefix="nibbler-snapsink-")
-    ck = tempfile.mkdtemp(prefix="nibbler-snapck-")
+    table = scratch_dir("snapsrc")
+    sink = scratch_dir("snapsink")
+    ck = scratch_dir("snapck")
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -2676,7 +2663,7 @@ def ext_stream_dropped_rows_metric(spark: SparkSession, sf_dir: str) -> DataFram
     a golden cross-check that the metric agrees with the scripted
     ground truth. Scale: progress metrics are O(1) driver-side
     bookkeeping per epoch."""
-    base = tempfile.mkdtemp(prefix="nibbler-dropm-")
+    base = scratch_dir("dropm")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -2754,7 +2741,7 @@ def i24_rate_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("value").cast("bigint").alias("value_sum"),
     )
     name = "mem_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="nibbler-ck-")
+    ckpt = scratch_dir("ck")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -2776,7 +2763,6 @@ def i24_rate_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _time.sleep(0.2)
     q.stop()
     q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     rows = spark.table(name).where(F.col("n_rows") >= 150).collect()
     spark.catalog.dropTempView(name)
     # the last complete-mode emission with all 150 rows
@@ -2889,9 +2875,7 @@ def a29_stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — a high-cardinality partition key fragments the sink into
     millions of tiny files (the a-family compaction row exists for
     exactly that accident)."""
-    import os
-
-    out_dir = tempfile.mkdtemp(prefix="nibbler-psink-")
+    out_dir = scratch_dir("psink")
     src = _read_stream(spark, _events_dir(spark, sf_dir))
     _drain(
         src.writeStream.format("parquet")
@@ -2966,9 +2950,7 @@ def ext_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="nibbler-cdcsnap-")
-    shutil.rmtree(table)
-    os.makedirs(table)
+    table = scratch_dir("cdcsnap")
     # r9 constant-factor pass (r8 verdict #5 — the decomposition showed
     # ~1.4 s of the sf0.1 wall was SETUP, not merging): the base is
     # localCheckpointed once (it feeds 4 derivations), the four bucket
@@ -2991,7 +2973,7 @@ def ext_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stage the CDC log: three change files in one drop dir
-    drop = tempfile.mkdtemp(prefix="nibbler-cdclog-")
+    drop = scratch_dir("cdclog")
     k = F.col("k")
     upd_v1 = base.where(k % 3 == 0).select(
         "k", F.lit("U").alias("op"), (k * 100).cast("bigint").alias("cents"),
@@ -3152,7 +3134,7 @@ def i26_stream_msgpack_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded = src.mapInPandas(
         dec, "event_id long, user_id long, value double"
     )
-    out = tempfile.mkdtemp(prefix="nibbler-msgpack-sink-")
+    out = scratch_dir("msgpack-sink")
     _drain(
         decoded.writeStream.format("parquet")
         .option("path", out)
@@ -3320,8 +3302,6 @@ def i28_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     per epoch one merge (O(touched files)), one rollup over the fact
     (swap in the incremental-MV maintenance of EXT-MV-INC to make it
     O(changed files)), one O(tables) catalog pointer."""
-    import shutil
-
     from nibbler_spark.operators.snapshots import (
         catalog_commit,
         catalog_latest,
@@ -3332,8 +3312,7 @@ def i28_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="nibbler-strcat-")
-    shutil.rmtree(root)
+    root = scratch_dir("strcat")
     fact_dir = os.path.join(root, "fact")
     mv_dir = os.path.join(root, "mv")
     cat = os.path.join(root, "_catalog")
@@ -3369,7 +3348,7 @@ def i28_stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
 
-    drop = tempfile.mkdtemp(prefix="nibbler-strcat-log-")
+    drop = scratch_dir("strcat-log")
     k = F.col("k")
     upd_v1 = base.where(k % 3 == 0).select(
         "k", F.lit("U").alias("op"), (k * 100).cast("bigint").alias("cents"),
@@ -3649,7 +3628,7 @@ def i30_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id").where(
         (F.col("doc_id") % 13).isin(0, 1)
     )
-    base = tempfile.mkdtemp(prefix="nibbler-i30-")
+    base = scratch_dir("i30")
     src = os.path.join(base, "src")
     main = os.path.join(base, "main")
     dlq = os.path.join(base, "dlq")
@@ -3742,7 +3721,7 @@ def i31_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
     events — the lambda-architecture consistency contract. At 100 TB
     the anti-join probes only the overlap window's keys (broadcast or
     bucketed store), not the full history."""
-    base = tempfile.mkdtemp(prefix="nibbler-i31-")
+    base = scratch_dir("i31")
     hist_dir = os.path.join(base, "hist")
     live_src = os.path.join(base, "live_src")
     live_out = os.path.join(base, "live_out")
@@ -3823,7 +3802,7 @@ def i32_kappa_reprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    base = tempfile.mkdtemp(prefix="nibbler-i32-")
+    base = scratch_dir("i32")
     src = os.path.join(base, "src")
     tbl_a = os.path.join(base, "metrics_a")
     tbl_b = os.path.join(base, "metrics_b")
@@ -3992,9 +3971,6 @@ def i33_stream_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch + maxFilesPerTrigger paces 3 epochs of 2 file-groups
     each; per-epoch IO is O(changed groups), the carried files move
     by reference."""
-    import shutil
-    import tempfile
-
     from nibbler_spark.operators.snapshots import (
         replace_where_snapshot,
         read_snapshot,
@@ -4012,8 +3988,7 @@ def i33_stream_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).parquet(tmp)
 
     d = cached_dir(sf_dir, "events", "stream-bygrp6", build)
-    table = tempfile.mkdtemp(prefix="nibbler-srw-")
-    shutil.rmtree(table)
+    table = os.path.join(scratch_dir("srw"), "table")
     # seed: one placeholder row per (day, grp) with zeroed measures —
     # wrong on purpose; the stream must replace every group
     seed = (
@@ -4346,7 +4321,7 @@ def i36_tumbling_append_watermark(
     the point — and each pass's shuffle is the ordinary partial/final
     window agg.  The oracle derives the same on-time set relationally
     (ts >= min + 1 day), so parity is engine-checked end to end."""
-    base = tempfile.mkdtemp(prefix="nibbler-i36-")
+    base = scratch_dir("i36")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -6843,7 +6818,7 @@ def stream_join_then_fold(
     src = ev.select(
         ep.alias("ep"), "event_id", "user_id", "ts", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="nibbler-jf-")
+    base = scratch_dir("jf")
     ingest = os.path.join(base, "ingest")
     pairdir = os.path.join(base, "pairs")
     outdir = os.path.join(base, "out")

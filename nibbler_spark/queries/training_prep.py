@@ -5128,7 +5128,7 @@ def ext_wordpiece_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_mixture_reweight",
     survey_id="EXT-MIXTURE-REWEIGHT",
-    category="training-prep",
+    category="llm-training-prep",
     oracle="""
 WITH per_doc AS MATERIALIZED (
   SELECT lang, source,
@@ -5245,7 +5245,7 @@ def ext_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_grpo_advantage",
     survey_id="EXT-GRPO-ADV",
-    category="training-prep",
+    category="llm-training-prep",
     oracle="""
 WITH samples AS MATERIALIZED (
   SELECT d.doc_id AS prompt_id, d.lang, g.s,
@@ -5362,7 +5362,7 @@ def ext_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_rejection_sampling_ft",
     survey_id="EXT-REJECTION-FT",
-    category="training-prep",
+    category="llm-training-prep",
     oracle="""
 WITH samples AS MATERIALIZED (
   SELECT d.doc_id AS prompt_id, d.lang, g.s,

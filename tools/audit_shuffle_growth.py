@@ -51,13 +51,8 @@ CATEGORIES = [
     "scale-pattern",
     "composite",
     "multimodal",
-    # r9: the graph-ANN pair lives under plain "retrieval"
-    "retrieval",
     # r11 (verdict #2): the rungs now carry the TPC-H tables, so the
-    # warehouse families are measurable too; also pick up the
-    # singular/plural near-miss category names that silently fell
-    # outside earlier sweeps (llm-vectors, scale-patterns,
-    # training-prep)
+    # warehouse families are measurable too
     "tpch",
     "relational",
     "sql-surface",
@@ -71,9 +66,6 @@ CATEGORIES = [
     "scalar",
     "udf",
     "flagship",
-    "llm-vectors",
-    "scale-patterns",
-    "training-prep",
     "lakehouse",
 ]
 N_SMALL, N_BIG = 2_000, 8_000

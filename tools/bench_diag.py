@@ -10,7 +10,10 @@ Per row it records, to a JSONL file:
   - JVM heap used after the row
   - live Python worker process count (pyspark.daemon / worker children)
   - spark local-dir (blockmgr) bytes + file count
-  - /tmp nibbler-* dir count (streaming fixture/checkpoint debris)
+  - nibbler-* entry count under the temp root (fixture/scratch debris)
+
+``pos`` is the row's position in bench.py's headline list, also when
+``--rows`` picks a subset; the GC deltas cover the timed samples only.
 
 Usage: SPARK_GRAFT_CPUS=32 python tools/bench_diag.py [--runs N]
        [--rows name1,name2,...] [--out FILE]
@@ -25,6 +28,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -32,7 +36,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import HEADLINE, RUNS, SF_DIR, drop_debris  # noqa: E402
 
 
 def _py_worker_count() -> int:
@@ -78,8 +82,9 @@ def _gc_stats(spark) -> tuple[float, int]:
     c = 0
     for i in range(beans.size()):
         b = beans.get(i)
-        t += b.getCollectionTime() / 1000.0
-        c += b.getCollectionCount()
+        # -1 marks a collector that does not report the value
+        t += max(b.getCollectionTime(), 0) / 1000.0
+        c += max(b.getCollectionCount(), 0)
     return t, c
 
 
@@ -91,7 +96,7 @@ def _heap_used(spark) -> int:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--runs", type=int, default=RUNS)
     ap.add_argument("--rows", type=str, default="")
     ap.add_argument("--out", type=str, default="/tmp/bench_diag.jsonl")
     ap.add_argument(
@@ -100,28 +105,25 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from bench import (  # bench.py's exact order and cleanup
-        FROZEN_ANCHORS,
-        ROTATING,
-        drop_debris,
-    )
     from nibbler_spark.queries import load_all
     from nibbler_spark.session import get_spark
     from nibbler_spark.sources import load_table
 
     rows = (
-        args.rows.split(",") if args.rows else FROZEN_ANCHORS + ROTATING
+        [n.strip() for n in args.rows.split(",") if n.strip()]
+        if args.rows
+        else HEADLINE
     )
     specs = load_all()
+    unknown = [n for n in rows if n not in specs]
+    if unknown:
+        sys.exit(f"unknown row(s): {', '.join(unknown)}")
     spark = get_spark(app_name="nibbler-spark-bench-diag")
     load_table(spark, SF_DIR, "lineitem").count()
 
     out = open(args.out, "w")
-    gc_t0, gc_c0 = _gc_stats(spark)
-    for pos, name in enumerate(rows):
-        spec = specs.get(name)
-        if spec is None:
-            continue
+    for i, name in enumerate(rows):
+        spec = specs[name]
         drop_debris(spark)
         if args.gc_between:
             spark.sparkContext._jvm.System.gc()
@@ -129,13 +131,14 @@ def main() -> None:
         pre_bytes, pre_files = _local_dir_stats(spark)
         spec.spark(spark, SF_DIR).collect()  # warm-up (untimed)
         samples = []
+        gc_t0, gc_c0 = _gc_stats(spark)
         for _ in range(args.runs):
             t0 = time.monotonic()
             spec.spark(spark, SF_DIR).collect()
             samples.append(round(time.monotonic() - t0, 4))
         gc_t1, gc_c1 = _gc_stats(spark)
         rec = {
-            "pos": pos,
+            "pos": HEADLINE.index(name) if name in HEADLINE else i,
             "name": name,
             "median": round(statistics.median(samples), 4),
             "samples": samples,
@@ -146,9 +149,10 @@ def main() -> None:
             "py_workers_post": _py_worker_count(),
             "blockmgr_mb_pre": pre_bytes // (1024 * 1024),
             "blockmgr_files_pre": pre_files,
-            "tmp_nibbler_dirs": len(glob.glob("/tmp/nibbler-*")),
+            "tmp_nibbler_dirs": len(
+                glob.glob(os.path.join(tempfile.gettempdir(), "nibbler-*"))
+            ),
         }
-        gc_t0, gc_c0 = gc_t1, gc_c1
         out.write(json.dumps(rec) + "\n")
         out.flush()
         print(json.dumps(rec), flush=True)
