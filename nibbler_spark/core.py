@@ -16,8 +16,22 @@ Maps the reference surface 1:1 (/root/reference/nibbler.go):
 
 The size-OR-time flush semantics themselves live in
 :class:`~nibbler_spark.streaming.rebatcher.ReBatcher`; this module adds
-the channel, the listener thread, and lifecycle. For the distributed
-path, see ``nibbler_spark.streaming.transport`` (Structured Streaming).
+the channel, the listener thread, and lifecycle. The rebatcher also owns
+every stop: ``fatal_error`` and the send-after-stop check read its state,
+and the listener exits on the first :class:`NibblerError` it raises.
+
+``close()`` (an extension: the reference never stops) queues a close
+sentinel behind everything already sent and joins the listener for at
+most ``timeout`` seconds. The listener thread pushes every item sent
+before ``close()``, flushes the partial batch when ``flush=True``, and
+exits; ``close()`` itself never calls into the rebatcher. If the
+listener is still busy when the timeout runs out, ``close()`` returns
+and the listener finishes that work in the background. Only if the
+queue stays full for the whole timeout is the listener told to stop
+after its current item, dropping what is still queued.
+
+For the distributed path, see ``nibbler_spark.streaming.transport``
+(Structured Streaming).
 """
 
 from __future__ import annotations
@@ -28,7 +42,7 @@ import time
 from collections.abc import Callable
 
 from nibbler_spark.config import Config
-from nibbler_spark.errors import NibblerFatalError, NibblerStoppedError
+from nibbler_spark.errors import NibblerError, NibblerStoppedError
 from nibbler_spark.streaming.rebatcher import ReBatcher
 
 # Sentinel waking the listener for graceful close (extension: the
@@ -57,14 +71,13 @@ class Nibbler:
         # sanitize+validate happen in ReBatcher construction (≡ New,
         # nibbler.go:176-179 — errors surface before any thread starts).
         self._rb = ReBatcher(config, clock=clock)
-        self._clock = clock
         # Bounded ingestion queue: producers block when `size` items are
         # queued and the listener is busy (nibbler.go:184, R3).
         self._queue: _queue.Queue = _queue.Queue(maxsize=self._rb.cfg.size)
         self._thread: threading.Thread | None = None
+        self._flush_on_close = True
+        # Fallback stop, for when close() cannot queue its sentinel.
         self._closing = False
-        self._fatal = threading.Event()
-        self._fatal_error: BaseException | None = None
 
     # -- producer side -------------------------------------------------------
 
@@ -72,91 +85,69 @@ class Nibbler:
         return Receiver(self)
 
     def _send(self, item, timeout: float | None = None) -> None:
-        if self._fatal.is_set():
-            raise NibblerStoppedError(
-                f"send after fatal stop: {self._fatal_error!r}"
-            )
+        rb = self._rb
+        if rb.stopped:
+            raise NibblerStoppedError(f"send after fatal stop: {rb.fatal_error!r}")
         self._queue.put(item, timeout=timeout)
 
     # -- consumer side -------------------------------------------------------
 
-    def listen(self, background: bool = True) -> None:
-        """Start the single consumer loop (≡ ``go bat.Listen()``)."""
+    def listen(self) -> None:
+        """Start the single consumer thread (≡ ``go bat.Listen()``)."""
         if self._thread is not None:
             return
         self._thread = threading.Thread(
             target=self._listen_loop, name="nibbler-listener", daemon=True
         )
         self._thread.start()
-        if not background:
-            self._thread.join()
 
     def _listen_loop(self) -> None:
         rb = self._rb
-        while not self._closing:
-            # select { ticker | receive } — wait for an item at most until
-            # the next ticker deadline (nibbler.go:152-166).
-            wait = min(rb.seconds_until_tick(), 1.0)
-            try:
-                item = self._queue.get(timeout=wait if wait > 0 else 0.001)
-            except _queue.Empty:
-                item = None
-            try:
+        try:
+            while not self._closing:
+                # select { ticker | receive } — wait for an item at most
+                # until the next ticker deadline (nibbler.go:152-166).
+                wait = min(rb.seconds_until_tick(), 1.0)
+                try:
+                    item = self._queue.get(timeout=wait if wait > 0 else 0.001)
+                except _queue.Empty:
+                    item = None
                 if item is _CLOSE:
+                    if self._flush_on_close:
+                        rb.flush()
                     return
                 if item is not None:
                     rb.push(item)
                 rb.poll()
-            except NibblerFatalError as exc:
-                # ≡ break + deferred close(queue) (nibbler.go:131-135,
-                # 142-144): mark fatal so subsequent sends raise.
-                self._fatal_error = exc.error
-                self._fatal.set()
-                return
-            except NibblerStoppedError:
-                return
-            except Exception as exc:
-                # Anything else escaping a flush (an error callback that
-                # raised) is a fatal stop too: the listener must not die
-                # with fatal_error unset while senders fill the queue.
-                self._fatal_error = exc
-                self._fatal.set()
-                return
+        except NibblerError:
+            # ≡ break + deferred close(queue) (nibbler.go:131-135,
+            # 142-144): the rebatcher has stopped and holds the error.
+            return
 
     # -- lifecycle (extension) ------------------------------------------------
 
     @property
     def fatal_error(self) -> BaseException | None:
-        return self._fatal_error
+        return self._rb.fatal_error
 
     def close(self, flush: bool = True, timeout: float = 10.0) -> None:
-        """Graceful stop (extension — the reference never stops). Drains
-        the queue, optionally flushes the partial buffer, joins the
-        listener."""
-        if self._thread is None:
+        """Graceful stop (extension — the reference never stops). The
+        listener delivers everything sent before this call, flushes the
+        partial batch if ``flush``, and exits; this call waits for it at
+        most ``timeout`` seconds."""
+        if self._thread is None or not self._thread.is_alive():
             return
         deadline = time.monotonic() + timeout
-        while not self._queue.empty() and time.monotonic() < deadline:
-            if self._fatal.is_set():
-                break
-            time.sleep(0.01)
-        self._closing = True
+        self._flush_on_close = flush
         try:
-            self._queue.put_nowait(_CLOSE)
+            self._queue.put(_CLOSE, timeout=timeout)
         except _queue.Full:
-            pass
+            self._closing = True
         self._thread.join(timeout=max(0.0, deadline - time.monotonic()))
-        if flush and not self._fatal.is_set():
-            try:
-                self._rb.flush()
-            except (NibblerFatalError, NibblerStoppedError) as exc:
-                err = exc.error if isinstance(exc, NibblerFatalError) else exc
-                self._fatal_error = err
-                self._fatal.set()
 
 
 def start(config: Config, clock: Callable[[], float] = time.monotonic) -> Nibbler:
     """≡ reference ``Start``: construct + background listen (nibbler.go:188-197)."""
     nib = Nibbler(config, clock=clock)
-    nib.listen(background=True)
+    nib.listen()
     return nib

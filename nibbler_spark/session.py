@@ -77,6 +77,13 @@ def ship_package(spark: SparkSession) -> None:
                     full = os.path.join(dirpath, f)
                     zf.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
+    # The worker that plans a Python streaming data source is sent no
+    # py-file includes, only the SparkFiles dir, so it cannot import the
+    # package from the zip. Every Python function carries
+    # ``sc.environment`` as its workers' env, and the worker factory
+    # merges its PYTHONPATH, so naming the zip there reaches that worker.
+    paths = [zpath, sc.environment.get("PYTHONPATH")]
+    sc.environment["PYTHONPATH"] = os.pathsep.join(p for p in paths if p)
     # Local-mode executors re-fetch from the original path on dependency
     # updates, so the zip must outlive the SparkContext — clean it up at
     # interpreter exit rather than leaking it on disk.

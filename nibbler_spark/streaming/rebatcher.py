@@ -13,6 +13,14 @@ them to ``processor_err`` with the live batch (nibbler.go:168-170), then
 either drop the batch and resume (nibbler.go:142-148, at-most-once) or
 stop fatally (nibbler.go:131-135).
 
+This class owns every stop. ``stopped`` and ``fatal_error`` are the one
+fatal state: the embedded ``Nibbler`` and the ``NibblerStream`` transport
+read them and keep no copy. A failed batch is always dropped. An error
+callback that raises is a fatal stop in both resume modes, and its error
+is the one recorded. Every fatal stop raises :class:`NibblerFatalError`
+from the call that flushed; any call after it raises
+:class:`NibblerStoppedError`.
+
 Spark integration: Structured Streaming's trigger is time-only, so the
 transport (``nibbler_spark.streaming.transport``) runs a short
 processing-time trigger and feeds each micro-batch's rows through
@@ -135,11 +143,13 @@ class ReBatcher:
     def _check_stopped(self) -> None:
         if self._stopped:
             raise NibblerStoppedError(
-                "nibbler has stopped after a fatal processor error"
+                f"nibbler has stopped after a fatal error: {self._fatal_error!r}"
             )
 
     def _flush(self, trigger: Trigger) -> None:
-        batch = self._batch
+        # Take the batch: success clears the buffer (R10) and a failed
+        # batch is dropped, never retried (R8, at-most-once).
+        batch, self._batch = self._batch, []
         # Cooperative deadline (nibbler.go:103-104): the processor MAY
         # honor it; the engine never preempts (R5).
         deadline = self._clock() + self.cfg.processing_timeout_s
@@ -159,19 +169,18 @@ class ReBatcher:
                 # observes processor_err is guaranteed to see the closed
                 # state (reference closes the queue just after, :131-135).
                 self._stopped = True
-                self._fatal_error = err
             if self.cfg.processor_err is not None:
-                # R7: the callback sees the live batch, not a clone.
-                self.cfg.processor_err(batch, err)
-            if self.cfg.resume_after_err:
-                # R8: drop the failed batch (at-most-once) and continue.
-                self._batch = []
-            else:
+                try:
+                    # R7: the callback sees the live batch, not a clone.
+                    self.cfg.processor_err(batch, err)
+                except Exception as cb_err:  # noqa: BLE001
+                    # A callback that raises is a fatal stop in both
+                    # resume modes; its error is the one recorded.
+                    self._stopped = True
+                    err = cb_err
+            if self._stopped:
+                self._fatal_error = err
                 raise NibblerFatalError(err) from err
-        else:
-            # R10: success — clear the buffer (memory reuse is the JVM/
-            # allocator's job here; semantics are what matter).
-            self._batch = []
 
 
 def bench_rebatcher_throughput(n_items: int = 20000, size: int = 100) -> float:

@@ -31,6 +31,15 @@ by default: the stream's own checkpoint is a fresh local dir, never
 replayed, and removed at ``stop()``. Checkpoint-based recovery is an
 explicit extension knob (``checkpoint_dir=``), which keeps Spark's
 default checkpoint handling and leaves the dir on disk.
+
+The re-batcher owns every stop. ``NibblerStream.fatal_error`` reads it
+(the attribute ``rebatcher`` is looked up on every call, so it can be
+swapped), and the stream keeps no fatal state of its own. When a
+micro-batch or a poller TICKER flush raises a :class:`NibblerError`, the
+stream stops its query; ``await_termination()`` then re-raises the
+fatal error. ``stop()`` stops the poller and the query, removes an owned
+checkpoint, and flushes the partial batch from the caller's thread when
+``flush=True`` and the re-batcher has not stopped.
 """
 
 from __future__ import annotations
@@ -47,6 +56,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 
 from nibbler_spark.config import Config
 from nibbler_spark.errors import (
+    NibblerError,
     NibblerFatalError,
     NibblerStoppedError,
     NibblerValidationError,
@@ -149,7 +159,6 @@ class NibblerStream:
         source: DataFrame,
         *,
         checkpoint_dir: str | None = None,
-        poll_interval_s: float | None = None,
         order_column: str | None = None,
     ):
         # When set, each micro-batch is sorted on this column on the
@@ -173,23 +182,19 @@ class NibblerStream:
         )
         # Trigger/poll cadence: a fraction of the ticker so TICKER flushes
         # land close to their deadline (SURVEY §4.3 step 1).
-        self._cadence = poll_interval_s or max(
-            0.1, min(1.0, self.cfg.ticker_s / 10)
-        )
+        self._cadence = max(0.1, min(1.0, self.cfg.ticker_s / 10))
         self._order_column = order_column
         self.query = None
         self._poller: threading.Thread | None = None
         self._stop_poller = threading.Event()
-        self._fatal_error: BaseException | None = None
 
     @property
     def fatal_error(self) -> BaseException | None:
-        return self._fatal_error
+        return self.rebatcher.fatal_error
 
-    def _fail(self, error: BaseException) -> None:
-        self._fatal_error = error
-        # Fail the query like the reference closes the queue (R9): stop
-        # consuming; await_termination() then re-raises the error.
+    def _fail(self) -> None:
+        # The rebatcher has stopped: stop consuming, like the reference
+        # closes the queue (R9); await_termination() re-raises its error.
         try:
             if self.query is not None:
                 self.query.stop()
@@ -197,8 +202,8 @@ class NibblerStream:
             pass
 
     def _foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
-        if self._fatal_error is not None:
-            raise NibblerFatalError(self._fatal_error)
+        if self.fatal_error is not None:
+            raise NibblerFatalError(self.fatal_error)
         # Bounded by source admission control ≈ size rows per trigger, so
         # a driver-side collect here mirrors the reference's in-memory
         # batch (SURVEY §2.3 design rule exception). For the same reason
@@ -213,28 +218,16 @@ class NibblerStream:
             rows = _restore_fifo(rows, self._order_column)
         try:
             self.rebatcher.push_many(rows)
-        except NibblerFatalError as exc:
-            self._fail(exc.error)
-            raise
-        except NibblerStoppedError:
-            raise
-        except Exception as exc:
-            # An error callback that raised: a fatal stop, not a silent
-            # query death that leaves sends succeeding into a dead stream.
-            self._fail(exc)
+        except NibblerError:
+            self._fail()
             raise
 
     def _poll_loop(self) -> None:
         while not self._stop_poller.wait(self._cadence):
             try:
                 self.rebatcher.poll()
-            except NibblerFatalError as exc:
-                self._fail(exc.error)
-                return
-            except NibblerStoppedError:
-                return
-            except Exception as exc:
-                self._fail(exc)
+            except NibblerError:
+                self._fail()
                 return
 
     def start(self) -> "NibblerStream":
@@ -277,19 +270,19 @@ class NibblerStream:
             self._poller.join(timeout=5)
         if self._owns_checkpoint:
             shutil.rmtree(self._checkpoint, ignore_errors=True)
-        if flush and self._fatal_error is None:
+        if flush:
             try:
                 self.rebatcher.flush()
-            except (NibblerFatalError, NibblerStoppedError):
-                self._fatal_error = self.rebatcher.fatal_error
+            except NibblerError:
+                pass  # stopped: the rebatcher holds the fatal error
 
     def await_termination(self, timeout: float | None = None) -> None:
         """Block until the query ends; re-raise a fatal processor error
         (≡ awaitTermination surfacing StreamingQueryException, R9)."""
         if self.query is not None:
             self.query.awaitTermination(timeout)
-        if self._fatal_error is not None:
-            raise NibblerFatalError(self._fatal_error)
+        if self.fatal_error is not None:
+            raise NibblerFatalError(self.fatal_error)
 
 
 def start_file_stream(

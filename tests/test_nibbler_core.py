@@ -15,6 +15,7 @@ from nibbler_spark.config import Config, Trigger
 from nibbler_spark.core import Nibbler, start
 from nibbler_spark.errors import (
     BatchPanicError,
+    NibblerFatalError,
     NibblerStoppedError,
     NibblerValidationError,
     Panic,
@@ -366,6 +367,166 @@ def test_rebatcher_random_schedules_exhaustive(size, ticker_q, steps):
             assert len(batch) == size
     flat = [x for batch, _ in flushed for x in batch]
     assert flat == pushed  # (2) exact concatenation after drain
+
+
+@settings(max_examples=1000, deadline=None)
+@given(
+    size=st.integers(min_value=1, max_value=8),
+    resume=st.booleans(),
+    steps=st.lists(
+        st.one_of(
+            st.integers(min_value=1, max_value=15),  # push N items
+            st.integers(min_value=-8, max_value=-1),  # advance clock N*0.25s
+        ),
+        max_size=30,
+    ),
+    # per flush: processor succeeds, raises, or raises and so does the
+    # error callback
+    faults=st.lists(st.sampled_from(["ok", "fail", "callback"]), max_size=20),
+)
+def test_rebatcher_random_schedules_with_failures(size, resume, steps, faults):
+    """Random schedules with processor failures and raising error
+    callbacks at random flushes, resuming or not. Every batch reaches the
+    processor once and in FIFO order (a failed batch is dropped, never
+    sent again), BATCH_FULL batches are exactly ``size``, and the first
+    fatal flush raises NibblerFatalError, leaves the rebatcher stopped
+    with that flush's error recorded, and makes every later call raise
+    NibblerStoppedError."""
+    delivered: list[tuple[list, Trigger]] = []
+    errors: list[BaseException] = []  # the error each failed flush ends with
+
+    def fault(i: int) -> str:
+        return faults[i] if i < len(faults) else "ok"
+
+    def processor(_dl, trig, batch):
+        delivered.append((list(batch), trig))
+        if fault(len(delivered) - 1) != "ok":
+            errors.append(RuntimeError(f"processor {len(delivered)}"))
+            raise errors[-1]
+
+    def processor_err(batch, err):
+        assert err is errors[-1]
+        assert batch == delivered[-1][0]
+        if fault(len(delivered) - 1) == "callback":
+            errors[-1] = ValueError(f"callback {len(delivered)}")
+            raise errors[-1]
+
+    clock = FakeClock()
+    rb = ReBatcher(
+        Config(
+            processor=processor,
+            size=size,
+            ticker_s=0.5,
+            resume_after_err=resume,
+            processor_err=processor_err,
+        ),
+        clock=clock.monotonic,
+    )
+    pushed = []
+    fatal = None
+    try:
+        for step in steps:
+            if step > 0:
+                for _ in range(step):
+                    pushed.append(len(pushed))
+                    rb.push(pushed[-1])
+            else:
+                clock.advance(-step * 0.25)
+                rb.poll()
+        rb.flush()
+    except NibblerFatalError as exc:
+        fatal = exc
+
+    flat = [x for batch, _ in delivered for x in batch]
+    assert flat == pushed[: len(flat)]  # FIFO, nothing delivered twice
+    for batch, trig in delivered:
+        assert 0 < len(batch) <= size
+        if trig is Trigger.BATCH_FULL:
+            assert len(batch) == size
+    fatal_at = [
+        i
+        for i in range(len(delivered))
+        if fault(i) == "callback" or (fault(i) == "fail" and not resume)
+    ]
+    if not fatal_at:
+        assert fatal is None and not rb.stopped and rb.fatal_error is None
+        assert flat == pushed  # nothing left behind after the final flush
+        return
+    # the first fatal flush is the last one: nothing is delivered after it
+    assert fatal_at[0] == len(delivered) - 1
+    assert fatal is not None and fatal.error is errors[-1]
+    assert rb.stopped and rb.fatal_error is errors[-1]
+    for call in (lambda: rb.push("late"), rb.poll, rb.flush):
+        with pytest.raises(NibblerStoppedError):
+            call()
+
+
+@pytest.mark.parametrize("flush", [True, False])
+def test_close_returns_within_its_timeout_and_the_listener_flushes(flush):
+    """close(timeout=t) with a processor slower than t returns within t
+    (plus scheduling slack) and never calls the processor itself: the
+    listener thread delivers every item sent before close() exactly once,
+    the partial batch only when flush=True, then exits."""
+    delivered: list[list] = []
+    threads: set[str] = set()
+
+    def processor(_dl, _trig, batch):
+        time.sleep(1.0)
+        delivered.append(list(batch))
+        threads.add(threading.current_thread().name)
+
+    nib = start(Config(processor=processor, size=3, ticker_s=60.0))
+    nib.receiver().send_many(range(4))  # one full batch and one partial
+    t0 = time.monotonic()
+    nib.close(flush=flush, timeout=0.3)
+    elapsed = time.monotonic() - t0
+    assert elapsed < 0.3 + 0.2
+    nib._thread.join(timeout=10.0)
+    assert not nib._thread.is_alive()
+    assert delivered == ([[0, 1, 2], [3]] if flush else [[0, 1, 2]])
+    assert threads == {"nibbler-listener"}
+    assert nib.fatal_error is None
+
+
+def test_close_under_concurrent_sends_delivers_each_item_once():
+    """Eight producer threads (more than the cores) send while the
+    listener flushes, with a short switch interval; close() after they
+    finish delivers every item exactly once, each producer's items in
+    send order, and BATCH_FULL batches of exactly ``size``."""
+    import sys
+
+    batches: list[tuple[list, Trigger]] = []
+
+    def processor(_dl, trig, batch):
+        batches.append((list(batch), trig))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        nib = start(Config(processor=processor, size=7, ticker_s=0.01))
+        producers = [
+            threading.Thread(
+                target=nib.receiver().send_many,
+                args=([(p, i) for i in range(500)],),
+                kwargs={"timeout": 10.0},
+            )
+            for p in range(8)
+        ]
+        for t in producers:
+            t.start()
+        for t in producers:
+            t.join(timeout=30.0)
+        assert not any(t.is_alive() for t in producers)
+        nib.close(timeout=10.0)
+        assert not nib._thread.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    items = [x for batch, _ in batches for x in batch]
+    assert sorted(items) == [(p, i) for p in range(8) for i in range(500)]
+    for p in range(8):
+        assert [i for q, i in items if q == p] == list(range(500))
+    assert all(len(b) == 7 for b, trig in batches if trig is Trigger.BATCH_FULL)
+    assert nib.fatal_error is None
 
 
 def test_at_most_once_under_task_retry():

@@ -12,6 +12,13 @@ names (md5-keyed by seed, so different seeds rotate through the whole
 surface) and optionally --record the results in the external driver's
 exact CORRECTNESS_r*.json format — per-query rows_match / schema_match /
 hash_match / spark_rows / oracle_rows / err.
+
+Like the external driver, the sweep runs with its working directory
+outside the repository (a fresh temp dir, removed at exit), so a Python
+worker can import the package only through what ``ship_package``
+shipped, not through the repository being the cwd. The script itself
+can be started from any directory; ``--record`` is resolved against the
+directory it was started from.
 """
 
 import argparse
@@ -19,9 +26,12 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +55,9 @@ _ap.add_argument(
 _args = _ap.parse_args()
 
 only = _args.names or None
+record_path = os.path.abspath(_args.record) if _args.record else None
+_cwd = tempfile.TemporaryDirectory(prefix="drive-contract-cwd-")
+os.chdir(_cwd.name)  # before the JVM starts: its cwd is the workers' cwd
 
 # Parallelism knobs, overridable for partition-independence sweeps:
 # the hash oracle must produce identical values at ANY partition count
@@ -95,7 +108,7 @@ elif _args.sample:
     if _args.prefer_unsampled:
         import glob
 
-        for f in glob.glob("/root/repo/CORRECTNESS_*.json"):
+        for f in glob.glob(str(REPO / "CORRECTNESS_*.json")):
             try:
                 sampled.update(json.load(open(f)))
             except (json.JSONDecodeError, TypeError):
@@ -155,9 +168,9 @@ for name in names:
     if not ok:
         mismatches.append(name)
 
-if _args.record:
-    with open(_args.record, "w") as fh:
+if record_path:
+    with open(record_path, "w") as fh:
         json.dump(record, fh, indent=0)
-    print(f"recorded {len(record)} entries -> {_args.record}")
+    print(f"recorded {len(record)} entries -> {record_path}")
 
 print(f"TOTAL: {time.monotonic() - t0:.0f}s  MISMATCHES: {len(mismatches)} {mismatches}")
