@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from nibbler_spark.queries import register, scratch_dir
 from nibbler_spark.queries._helpers import dec, dsum, spread, sql_dsum
 from nibbler_spark.session import scoped_conf
-from nibbler_spark.sources import load_table
+from nibbler_spark.sources import load_table, table_path
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -1194,7 +1194,8 @@ def ext_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops applying — e.g. a nullable-type edge). At 100 TB this is
     the difference between a metadata read and a full scan for the
     table-profile class of queries."""
-    # aggregate pushdown lives in the DSv2 parquet reader only
+    # aggregate pushdown lives in the DSv2 parquet reader only, so this
+    # row reads the file itself instead of through load_table
     with scoped_conf(
         spark,
         {
@@ -1202,7 +1203,7 @@ def ext_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.sources.useV1SourceList": "avro,csv,json,kafka,orc,text",
         },
     ):
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        li = spark.read.parquet(table_path(sf_dir, "lineitem"))
         out = li.agg(
             F.count("*").alias("n_rows"),
             F.min("l_quantity").alias("min_qty"),

@@ -4,6 +4,15 @@ Tables and schemas per FIXTURES.md §1 (TPC-H-ish star schema + events /
 documents / embeddings). At 100 TB these would be partitioned/bucketed
 tables in a metastore; the loader stays a thin seam so the path→catalog
 swap is one function.
+
+What a catalog would keep, the loader keeps itself: each table file's
+Spark schema. Reading a parquet path without a schema makes Spark run a
+schema-inference job (``mergeSchemasInParallel``) over a footer that has
+not changed, on every call. ``_read_parquet`` infers it once per version
+of the file and per set of inference confs (see ``_SCHEMA_CONFS``) and
+builds every scan with ``spark.read.schema(...)``, which runs no job.
+Only the schema is kept, one entry per path: no rows, no files, and a
+rewritten file or a flipped conf infers again.
 """
 
 from __future__ import annotations
@@ -11,6 +20,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,8 +41,47 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
+# The session confs that change the schema Spark infers from a parquet
+# footer; their values are part of the cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# real path -> ((file version, conf values), inferred schema). One map for
+# the process: a schema depends only on the file and the confs in its key,
+# not on the session. Two threads that miss at once both infer, and the
+# map keeps one of their equal results.
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _version(path: str) -> tuple:
+    """``(st_ino, st_size, st_mtime_ns)`` of a file, or of every entry
+    under it, with its name, if the table is a directory."""
+    if os.path.isdir(path):
+        return tuple(
+            (e, _version(os.path.join(path, e))) for e in sorted(os.listdir(path))
+        )
+    st = os.stat(path)
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` through a schema inferred once per
+    file version and inference confs, so the scan runs no Spark job."""
+    real = os.path.realpath(path)
+    key = (_version(real), tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    hit = _schemas.get(real)
+    if hit is None or hit[0] != key:
+        hit = _schemas[real] = (key, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def cached_dir(sf_dir: str, table: str, kind: str, build) -> str:
@@ -81,6 +130,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     floor-truncated to microseconds, matching DuckDB's truncation) and as
     a native µs timestamp; the shim keys off the actual column type so
     either vintage of the testdata loads to the same µs-timestamp schema.
+
+    Both branches read through ``_read_parquet``: the file's schema is
+    inferred on the first call (one Spark job) and kept for that file
+    version and those inference confs, so later calls build the scan
+    from it without a job. Plans are the same as an uncached read's.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -89,7 +143,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql.types import LongType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         # Newer testdata writes µs TIMESTAMP_NTZ; everything downstream
@@ -99,7 +153,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

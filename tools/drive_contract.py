@@ -68,6 +68,9 @@ _SHUF = os.environ.get("NIBBLER_DRIVE_SHUFFLE", "8")
 spark = (
     SparkSession.builder.master(f"local[{_CPUS}]")
     .config("spark.sql.shuffle.partitions", _SHUF)
+    # no progress bar: its \r-ended "[Stage N:...]" line would prefix each
+    # "name: ok" status line, hiding it from a line-anchored grep
+    .config("spark.ui.showConsoleProgress", "false")
     .appName("drive-driver-contract")
     .getOrCreate()
 )
