@@ -9,16 +9,21 @@ two-phase scenarios against literal rows with PINNED expected outputs as
 VALUES oracles.
 
 Every ``availableNow`` pass goes through ``_drain``. It owns the
-checkpoint it makes (removed once the query terminates; a caller passes
-its own only when a later pass restarts from it) and the state-partition
-count (``spark.sql.shuffle.partitions`` held through termination under
-``session.scoped_conf``, then restored or unset). ``_drain_to_memory``
-drops its memory-sink view before returning, and ``_fold_slices``
-removes its ingest copy and checkpoint. The base dirs of a query's
-source and sink files come from ``scratch_dir``: the registry wrapper
-keeps them while the returned DataFrame may read them lazily and
-removes them when the thread's next outermost registered call starts
-(or at interpreter exit).
+checkpoint it makes (removed once the query terminates) and the
+state-partition count (``spark.sql.shuffle.partitions`` held through
+termination under ``session.scoped_conf``, then restored or unset).
+``_drain_to_memory`` drops its memory-sink view before returning.
+A stream driven through several epochs goes through ``_drive_epochs``:
+per epoch a staging step, then a ``_drain`` pass restarted from one
+checkpoint that it owns and removes after the last pass.
+``_fold_slices`` (an ``applyInPandasWithState`` fold over the
+``slice{q}`` dirs ``_write_slices`` makes) is its main user and removes
+its ingest copy. The few passes that restart outside it (i54's join,
+a24, i17's kill-restart, the incremental rollup) hand ``_drain`` a
+checkpoint of their own. The base dirs of a query's source and sink files come
+from ``scratch_dir``: the registry wrapper keeps them while the returned
+DataFrame may read them lazily and removes them when the thread's next
+outermost registered call starts (or at interpreter exit).
 
 Scale notes: all stateful ops are keyed (user_id / window / event_id) so
 state partitions horizontally; watermarks bound state size; the memory
@@ -27,7 +32,10 @@ sink is test-only (production sinks: parquet/Kafka/foreachBatch)."""
 from __future__ import annotations
 
 import datetime
+import functools
+import operator
 import os
+import re
 import shutil
 import uuid
 
@@ -115,8 +123,8 @@ def _drain(
     - the checkpoint, when ``checkpoint`` is None: a fresh
       ``nibbler-ck-*`` ``scratch_dir``, removed as soon as the query has
       terminated rather than at the end of the registered call. A
-      caller passes its own dir only when a later pass restarts from
-      it; that dir lives as long as the caller's scratch dir.
+      caller passes its own dir only when another pass restarts from
+      it; ``_drive_epochs`` does, and removes it after its last pass.
     - the state-partition count: ``shuffle_partitions``, when given, is
       held on the session through ``awaitTermination()`` and then the
       prior value (or unset) comes back. A stateful query fixes its
@@ -178,6 +186,51 @@ def _drain_to_memory(
     return out
 
 
+def _drive_epochs(writer, stages, *, shuffle_partitions: int | None = None):
+    """Drive ``writer`` (a configured ``DataStreamWriter`` over watched
+    dirs) through one epoch per entry of ``stages``: run the staging
+    step, which adds that epoch's input, then one ``_drain`` pass
+    restarted from the same checkpoint. Return the terminated queries,
+    one per pass.
+
+    The one owner of a multi-epoch drive's checkpoint: a fresh
+    ``nibbler-ck-*`` ``scratch_dir``, removed after the last pass (or
+    the first failure). Each pass sees exactly the files staged since
+    the previous one, on top of the state and watermark the checkpoint
+    carries, so epoch order is the order of ``stages``."""
+    ckpt = scratch_dir("ck")
+    done = []
+    try:
+        for stage in stages:
+            stage()
+            done.append(
+                _drain(
+                    writer,
+                    checkpoint=ckpt,
+                    shuffle_partitions=shuffle_partitions,
+                )
+            )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return done
+
+
+def _write_slices(df: DataFrame, dest: str, epochs: int, parts: int = 1) -> None:
+    """Write the rows of ``df`` whose ``epoch`` column is q to
+    ``dest/slice{q}``, for q in ``range(epochs)``, as ``parts`` part
+    files each (``coalesce(1)`` keeps a one-part slice in scan order)."""
+    for q in range(epochs):
+        rows = df.where(F.col("epoch") == q)
+        rows = rows.coalesce(1) if parts == 1 else rows.repartition(parts)
+        rows.write.parquet(os.path.join(dest, f"slice{q}"))
+
+
+def _slice_dirs(cache: str) -> list[str]:
+    """The ``slice{q}`` dirs under ``cache``, in epoch order."""
+    n = sum(1 for f in os.listdir(cache) if re.fullmatch(r"slice\d+", f))
+    return [os.path.join(cache, f"slice{q}") for q in range(n)]
+
+
 def _fold_slices(
     spark: SparkSession,
     cache: str,
@@ -188,47 +241,91 @@ def _fold_slices(
     state_schema: str,
     prep=None,
 ) -> str:
-    """Fold the four cached epoch slices of ``cache`` through one
-    ``applyInPandasWithState(fn)`` keyed on ``key``, one slice at a
-    time, and return the dir of the emitted rows.
+    """Fold the epoch slices of ``cache`` (``slice0``, ``slice1``, …)
+    through one ``applyInPandasWithState(fn)`` keyed on ``key``, one
+    slice per epoch, and return the dir of the emitted rows.
 
-    Each slice is staged into a watched ingest dir and drained by an
-    ``availableNow`` pass that restarts from the same checkpoint, so
-    epoch q sees exactly slice q and the state of slices < q (epoch
-    order by construction, not by file-listing accident). Emissions
-    append to parquet per micro-batch (``foreachBatch``). ``prep``
-    maps the ingest stream before the grouping. The state store runs at
-    8 partitions. All three live in one ``nibbler-fold-*``
-    ``scratch_dir``: the ingest copy and the checkpoint are removed on
-    return, the emitted rows when the registered call's scope ends, so
-    the caller can still read them lazily."""
+    ``_drive_epochs`` stages slice q into a watched ingest dir and
+    drains it from the checkpoint of slices < q, so epoch q sees
+    exactly slice q and the state of the slices before it. Emissions
+    append to parquet per micro-batch (``foreachBatch``). ``prep`` maps
+    the ingest stream before the grouping. The state store runs at 8
+    partitions. The ingest copy is removed on return; the emitted rows
+    live in a ``nibbler-fold-*`` ``scratch_dir`` until the registered
+    call's scope ends, so the caller can still read them lazily."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     base = scratch_dir("fold")
     ingest = os.path.join(base, "ingest")
-    ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
     os.makedirs(ingest)
+    src = spark.readStream.schema(schema).parquet(ingest)
+    if prep is not None:
+        src = prep(src)
+    folded = src.groupBy(key).applyInPandasWithState(
+        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    )
     try:
-        for q in range(4):
-            _stage_slice(os.path.join(cache, f"slice{q}"), ingest, q)
-            src = spark.readStream.schema(schema).parquet(ingest)
-            if prep is not None:
-                src = prep(src)
-            folded = src.groupBy(key).applyInPandasWithState(
-                fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-            )
-            _drain(
-                folded.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(out)
-                ).outputMode("update"),
-                checkpoint=ckpt,
-                shuffle_partitions=8,
-            )
+        _drive_epochs(
+            folded.writeStream.foreachBatch(
+                lambda df, _eid: df.write.mode("append").parquet(out)
+            ).outputMode("update"),
+            [
+                functools.partial(_stage_slice, d, ingest, q)
+                for q, d in enumerate(_slice_dirs(cache))
+            ],
+            shuffle_partitions=8,
+        )
     finally:
         shutil.rmtree(ingest, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out
+
+
+def _running_fold(op: str):
+    """An ``applyInPandasWithState`` fold over ``(epoch, k, v)`` rows
+    that carries one running ``op`` of ``v`` per key (``count`` of
+    rows, or ``sum`` / ``max`` / ``min``) and emits ``(k, epoch,
+    running)`` once per key per micro-batch, ``epoch`` being the
+    batch's latest."""
+    import pandas as pd
+
+    combine = {"max": max, "min": min}.get(op, operator.add)
+
+    def fold(key, pdfs, state):
+        rows = pd.concat(list(pdfs))
+        running = len(rows) if op == "count" else int(getattr(rows["v"], op)())
+        if state.exists:
+            running = combine(state.get[0], running)
+        state.update((running,))
+        yield pd.DataFrame(
+            {"k": [key[0]], "epoch": [int(rows["epoch"].max())], "running": [running]}
+        )
+
+    return fold
+
+
+def _running_prefixes(spark: SparkSession, outdir: str, epochs: int) -> DataFrame:
+    """Per-epoch read-out of a ``_running_fold`` emission log: for every
+    key and every epoch e, the running value of the key's latest
+    emission at an epoch <= e (keys first emitted after e have no row)."""
+    em = spark.read.schema("k long, epoch long, running long").parquet(outdir)
+    grid = em.select("k").distinct().crossJoin(
+        F.broadcast(
+            spark.range(epochs).select(F.col("id").cast("long").alias("epoch"))
+        )
+    )
+    return (
+        grid.join(
+            em.select(
+                F.col("k").alias("ek"), F.col("epoch").alias("eep"), "running"
+            ),
+            (grid["k"] == F.col("ek")) & (F.col("eep") <= grid["epoch"]),
+            "inner",
+        )
+        .groupBy("k", "epoch")
+        .agg(F.max_by("running", "eep").alias("running"))
+        .orderBy("epoch", "k")
+    )
 
 
 @register(
@@ -624,6 +721,34 @@ def _write_golden_file(spark: SparkSession, d: str, rows, name: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
 
 
+def _drive_golden_windows(spark: SparkSession, base: str):
+    """The i04 scenario: ``_GOLDEN_ROWS_A`` then ``_GOLDEN_ROWS_B``, one
+    epoch each, through a watermarked 10-minute tumbling count in append
+    mode. Return the parquet sink's dir and the two terminated
+    queries."""
+    src_dir = os.path.join(base, "src")
+    out_dir = os.path.join(base, "out")
+    os.makedirs(src_dir)
+    passes = _drive_epochs(
+        spark.readStream.schema("event_id long, ts timestamp, user_id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir + "/*/")
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "10 minutes").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("window_start"), "n")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        [
+            lambda: _write_golden_file(spark, src_dir, _GOLDEN_ROWS_A, "step-a"),
+            lambda: _write_golden_file(spark, src_dir, _GOLDEN_ROWS_B, "step-b"),
+        ],
+        shuffle_partitions=4,
+    )
+    return out_dir, passes
+
+
 @register(
     "i04_watermark_late_drop_golden",
     survey_id="I4",
@@ -644,33 +769,7 @@ def i04_watermark_late_drop_golden(spark: SparkSession, sf_dir: str) -> DataFram
     watermark, DROPPED — plus 10:52 (closing the 10:30 window). The
     pinned output has exactly 3 windows; the 10:40 window never
     finalizes and the late row never appears."""
-    base = scratch_dir("i04")
-    src_dir = os.path.join(base, "src")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    schema = "event_id long, ts timestamp, user_id long"
-
-    def run_pass():
-        _drain(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir + "/*/")
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=4,
-        )
-
-    _write_golden_file(spark, src_dir, _GOLDEN_ROWS_A, "step-a")
-    run_pass()
-    _write_golden_file(spark, src_dir, _GOLDEN_ROWS_B, "step-b")
-    run_pass()
+    out_dir = _drive_golden_windows(spark, scratch_dir("i04"))[0]
     return spark.read.parquet(out_dir).orderBy("window_start")
 
 
@@ -694,26 +793,7 @@ def i07_dedup_within_watermark_golden(spark: SparkSession, sf_dir: str) -> DataF
     base = scratch_dir("i07")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    schema = "event_id long, ts timestamp, user_id long"
-
-    def run_pass():
-        _drain(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir + "/*/")
-            .withWatermark("ts", "10 minutes")
-            .select(F.col("event_id").alias("dedup_key"), "ts", "user_id")
-            .dropDuplicatesWithinWatermark(["dedup_key"])
-            .select("dedup_key", "ts")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=4,
-        )
-
+    os.makedirs(src_dir)
     rows_a = [
         (1, "2024-01-01 10:00:00", 1),
         (1, "2024-01-01 10:02:00", 1),  # dup within watermark → dropped
@@ -723,10 +803,23 @@ def i07_dedup_within_watermark_golden(spark: SparkSession, sf_dir: str) -> DataF
         (1, "2024-01-01 10:40:00", 1),  # state evicted → re-emitted
         (2, "2024-01-01 10:31:00", 1),  # dup within watermark → dropped
     ]
-    _write_golden_file(spark, src_dir, rows_a, "step-a")
-    run_pass()
-    _write_golden_file(spark, src_dir, rows_b, "step-b")
-    run_pass()
+    _drive_epochs(
+        spark.readStream.schema("event_id long, ts timestamp, user_id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir + "/*/")
+        .withWatermark("ts", "10 minutes")
+        .select(F.col("event_id").alias("dedup_key"), "ts", "user_id")
+        .dropDuplicatesWithinWatermark(["dedup_key"])
+        .select("dedup_key", "ts")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        [
+            lambda: _write_golden_file(spark, src_dir, rows_a, "step-a"),
+            lambda: _write_golden_file(spark, src_dir, rows_b, "step-b"),
+        ],
+        shuffle_partitions=4,
+    )
     return spark.read.parquet(out_dir).orderBy("ts", "dedup_key")
 
 
@@ -747,29 +840,24 @@ def i13_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir("i13")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
+    os.makedirs(src_dir)
     e = load_table(spark, sf_dir, "events").select("event_id", "value")
     mid = e.agg(F.expr("percentile(event_id, 0.5)")).head()[0]
 
-    def run_pass():
-        _drain(
-            spark.readStream.schema("event_id long, value double")
-            .parquet(src_dir + "/*/")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-        )
+    def half(cond, name: str) -> None:
+        e.where(cond).coalesce(1).write.parquet(os.path.join(src_dir, name))
 
-    e.where(F.col("event_id") <= mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(src_dir, "half1"))
-    run_pass()
-    e.where(F.col("event_id") > mid).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(src_dir, "half2"))
-    run_pass()
+    _drive_epochs(
+        spark.readStream.schema("event_id long, value double")
+        .parquet(src_dir + "/*/")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        [
+            lambda: half(F.col("event_id") <= mid, "half1"),
+            lambda: half(F.col("event_id") > mid, "half2"),
+        ],
+    )
     return spark.read.parquet(out_dir).orderBy("event_id")
 
 
@@ -1305,6 +1393,60 @@ def k15_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drive_click_purchase_join(
+    spark: SparkSession, base: str, how: str, cols, clicks, purchases
+) -> str:
+    """The i14/i17 scaffold: a stream-stream ``how`` join of clicks to
+    purchases of the same user within [click_ts, click_ts + 10m], both
+    sides watermarked at 10 minutes, selecting ``cols`` into a parquet
+    sink in append mode. Epoch 1 drops the literal ``(user_id, ts)``
+    rows of ``clicks`` and ``purchases``; epoch 2 drops a far-future
+    user-99 sentinel on BOTH sides, so the watermark sweeps past all
+    real state and flushes the null-extended rows. Return the sink's
+    dir (the sentinel rows included)."""
+    l_dir = os.path.join(base, "left")
+    r_dir = os.path.join(base, "right")
+    out_dir = os.path.join(base, "out")
+
+    def side(d: str, col: str):
+        return (
+            spark.readStream.schema(f"user_id long, {col} timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d + "/*/")
+            .withWatermark(col, "10 minutes")
+        )
+
+    def drop(l_rows, r_rows, name: str) -> None:
+        for d, rows, col in (
+            (l_dir, l_rows, "click_ts"), (r_dir, r_rows, "purchase_ts")
+        ):
+            _local_rows_df(spark, rows, "user_id long, ts_s string").select(
+                "user_id", F.col("ts_s").cast("timestamp").alias(col)
+            ).coalesce(1).write.parquet(os.path.join(d, name))
+
+    sentinel = [(99, "2024-01-01 12:00:00")]
+    joined = side(l_dir, "click_ts").alias("c").join(
+        side(r_dir, "purchase_ts").alias("p"),
+        F.expr(
+            "c.user_id = p.user_id AND "
+            "p.purchase_ts BETWEEN c.click_ts AND "
+            "c.click_ts + INTERVAL 10 MINUTES"
+        ),
+        how,
+    ).select(*cols)
+    _drive_epochs(
+        joined.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        [
+            lambda: drop(clicks, purchases, "step-a"),
+            lambda: drop(sentinel, sentinel, "step-b"),
+        ],
+        shuffle_partitions=4,
+    )
+    return out_dir
+
+
 @register(
     "i14_stream_stream_left_outer_golden",
     survey_id="I14",
@@ -1330,71 +1472,15 @@ def i14_stream_stream_left_outer_golden(
     pinned golden has the matched pairs AND user 2's null-extended row;
     state is bounded by the watermark on both sides (SCALE.md §streaming).
     """
-    base = scratch_dir("i14")
-    l_dir = os.path.join(base, "left")
-    r_dir = os.path.join(base, "right")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(l_dir, exist_ok=True)
-    os.makedirs(r_dir, exist_ok=True)
-
-    def write_side(d: str, rows, name: str, col: str) -> None:
-        df = _local_rows_df(
-            spark, rows, "user_id long, ts_s string"
-        ).select(
-            "user_id", F.col("ts_s").cast("timestamp").alias(col)
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
-
-    def run_pass() -> None:
-        clicks = (
-            spark.readStream.schema("user_id long, click_ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(l_dir + "/*/")
-            .withWatermark("click_ts", "10 minutes")
-        )
-        purchases = (
-            spark.readStream.schema("user_id long, purchase_ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(r_dir + "/*/")
-            .withWatermark("purchase_ts", "10 minutes")
-        )
-        joined = clicks.alias("c").join(
-            purchases.alias("p"),
-            F.expr(
-                "c.user_id = p.user_id AND "
-                "p.purchase_ts BETWEEN c.click_ts AND "
-                "c.click_ts + INTERVAL 10 MINUTES"
-            ),
-            "leftOuter",
-        ).select("c.user_id", "c.click_ts", "p.purchase_ts")
-        _drain(
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=4,
-        )
-
-    write_side(
-        l_dir,
+    out_dir = _drive_click_purchase_join(
+        spark,
+        scratch_dir("i14"),
+        "leftOuter",
+        ["c.user_id", "c.click_ts", "p.purchase_ts"],
         [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:05:00"),
          (3, "2024-01-01 10:10:00")],
-        "step-a",
-        "click_ts",
-    )
-    write_side(
-        r_dir,
         [(1, "2024-01-01 10:04:00"), (3, "2024-01-01 10:15:00")],
-        "step-a",
-        "purchase_ts",
     )
-    run_pass()
-    # Sentinel far in the future on BOTH sides: watermark sweeps past all
-    # real state, flushing user 2's unmatched row with nulls.
-    write_side(l_dir, [(99, "2024-01-01 12:00:00")], "step-b", "click_ts")
-    write_side(r_dir, [(99, "2024-01-01 12:00:00")], "step-b", "purchase_ts")
-    run_pass()
     return (
         spark.read.parquet(out_dir)
         .where(F.col("user_id") != 99)
@@ -1495,7 +1581,7 @@ def k16_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir("k16")
     src = os.path.join(base, "src")
     store = os.path.join(base, "store")
-    os.makedirs(src, exist_ok=True)
+    os.makedirs(src)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     schema = "content_key string, keeper_doc_id long"
     spark.createDataFrame([], schema).write.mode("overwrite").parquet(store)
@@ -1512,22 +1598,17 @@ def k16_incremental_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fresh.write.mode("append").parquet(store)
 
-    def run_pass() -> None:
-        _drain(
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(src + "/*/")
-            .writeStream.foreachBatch(ingest),
-            checkpoint=os.path.join(base, "ckpt"),
-        )
-
-    d.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(src, "step-a"))
-    run_pass()
-    d.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(src, "step-b")
+    _drive_epochs(
+        spark.readStream.schema("doc_id long, text string")
+        .parquet(src + "/*/")
+        .writeStream.foreachBatch(ingest),
+        [
+            lambda: d.where(F.col("doc_id") % 2 == 0)
+            .coalesce(1)
+            .write.parquet(os.path.join(src, "step-a")),
+            lambda: d.coalesce(1).write.parquet(os.path.join(src, "step-b")),
+        ],
     )
-    run_pass()
     return spark.read.parquet(store).orderBy("content_key")
 
 
@@ -1594,8 +1675,7 @@ def i16_stateful_session_timeout_golden(
     base = scratch_dir("i16")
     src = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src, exist_ok=True)
+    os.makedirs(src)
 
     def sessionize(key, pdfs, state):
         if state.hasTimedOut:
@@ -1640,45 +1720,39 @@ def i16_stateful_session_timeout_golden(
                 }
             )
 
-    def run_pass() -> None:
-        _drain(
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*/")
-            .withWatermark("ts", "10 minutes")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                sessionize,
-                "user_id long, session_start timestamp, n_events long",
-                "start long, last long, cnt long",
-                "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=4,
-        )
-
     def drop(rows, name):
         _local_rows_df(spark, rows, "user_id long, ts_s string").select(
             "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, name)
-        )
+        ).coalesce(1).write.parquet(os.path.join(src, name))
 
-    drop(
-        [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:05:00"),
-         (1, "2024-01-01 10:10:00"), (2, "2024-01-01 10:00:00"),
-         (2, "2024-01-01 11:00:00")],
-        "step-a",
+    _drive_epochs(
+        spark.readStream.schema("user_id long, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*/")
+        .withWatermark("ts", "10 minutes")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            sessionize,
+            "user_id long, session_start timestamp, n_events long",
+            "start long, last long, cnt long",
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        [
+            lambda: drop(
+                [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:05:00"),
+                 (1, "2024-01-01 10:10:00"), (2, "2024-01-01 10:00:00"),
+                 (2, "2024-01-01 11:00:00")],
+                "step-a",
+            ),
+            lambda: drop([(99, "2024-01-01 12:00:00")], "step-b"),
+            lambda: drop([(99, "2024-01-01 13:00:00")], "step-c"),
+        ],
+        shuffle_partitions=4,
     )
-    run_pass()
-    drop([(99, "2024-01-01 12:00:00")], "step-b")
-    run_pass()
-    drop([(99, "2024-01-01 13:00:00")], "step-c")
-    run_pass()
     return (
         spark.read.parquet(out_dir)
         .where(F.col("user_id") != 99)
@@ -1708,71 +1782,18 @@ def i17_stream_stream_full_outer_golden(
     purchased AND user 4's purchase with no click both emit
     null-extended once the watermark clears their join windows.
     Same sentinel-advance discipline as i14."""
-    base = scratch_dir("i17")
-    l_dir = os.path.join(base, "left")
-    r_dir = os.path.join(base, "right")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(l_dir, exist_ok=True)
-    os.makedirs(r_dir, exist_ok=True)
-
-    def write_side(d, rows, name, col):
-        _local_rows_df(spark, rows, "user_id long, ts_s string").select(
-            "user_id", F.col("ts_s").cast("timestamp").alias(col)
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
-
-    def run_pass():
-        clicks = (
-            spark.readStream.schema("user_id long, click_ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(l_dir + "/*/")
-            .withWatermark("click_ts", "10 minutes")
-        )
-        purchases = (
-            spark.readStream.schema("user_id long, purchase_ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(r_dir + "/*/")
-            .withWatermark("purchase_ts", "10 minutes")
-        )
-        joined = clicks.alias("c").join(
-            purchases.alias("p"),
-            F.expr(
-                "c.user_id = p.user_id AND "
-                "p.purchase_ts BETWEEN c.click_ts AND "
-                "c.click_ts + INTERVAL 10 MINUTES"
-            ),
-            "fullOuter",
-        ).select(
-            F.coalesce(F.col("c.user_id"), F.col("p.user_id")).alias(
-                "user_id"
-            ),
+    out_dir = _drive_click_purchase_join(
+        spark,
+        scratch_dir("i17"),
+        "fullOuter",
+        [
+            F.coalesce(F.col("c.user_id"), F.col("p.user_id")).alias("user_id"),
             "c.click_ts",
             "p.purchase_ts",
-        )
-        _drain(
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=4,
-        )
-
-    write_side(
-        l_dir,
+        ],
         [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:05:00")],
-        "step-a",
-        "click_ts",
-    )
-    write_side(
-        r_dir,
         [(1, "2024-01-01 10:04:00"), (4, "2024-01-01 10:20:00")],
-        "step-a",
-        "purchase_ts",
     )
-    run_pass()
-    write_side(l_dir, [(99, "2024-01-01 12:00:00")], "step-b", "click_ts")
-    write_side(r_dir, [(99, "2024-01-01 12:00:00")], "step-b", "purchase_ts")
-    run_pass()
     return (
         spark.read.parquet(out_dir)
         .where(F.col("user_id") != 99)
@@ -2663,38 +2684,14 @@ def ext_stream_dropped_rows_metric(spark: SparkSession, sf_dir: str) -> DataFram
     a golden cross-check that the metric agrees with the scripted
     ground truth. Scale: progress metrics are O(1) driver-side
     bookkeeping per epoch."""
-    base = scratch_dir("dropm")
-    src_dir = os.path.join(base, "src")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    schema = "event_id long, ts timestamp, user_id long"
-
-    def run_pass():
-        q = _drain(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir + "/*/")
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "n")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=4,
-        )
-        return sum(
+    d1, d2 = (
+        sum(
             op["numRowsDroppedByWatermark"]
             for p in q.recentProgress
             for op in p["stateOperators"]
         )
-
-    _write_golden_file(spark, src_dir, _GOLDEN_ROWS_A, "step-a")
-    d1 = run_pass()
-    _write_golden_file(spark, src_dir, _GOLDEN_ROWS_B, "step-b")
-    d2 = run_pass()
+        for q in _drive_golden_windows(spark, scratch_dir("dropm"))[1]
+    )
     total = d1 + d2
     return spark.createDataFrame(
         [(total, total == 1 and d1 == 0)],
@@ -4324,8 +4321,7 @@ def i36_tumbling_append_watermark(
     base = scratch_dir("i36")
     src_dir = os.path.join(base, "src")
     out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
+    os.makedirs(src_dir)
 
     e = load_table(spark, sf_dir, "events")
     gmin, gmax = e.agg(
@@ -4333,52 +4329,41 @@ def i36_tumbling_append_watermark(
     ).head()
     cut = gmin + datetime.timedelta(days=1)
 
-    def run_pass() -> None:
-        _drain(
-            spark.readStream.schema(_EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir + "/*/")
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "10 minutes").alias("w"))
-            .agg(
-                F.count("*").alias("n_events"),
-                dsum("value").alias("total_value"),
-            )
-            .select(
-                F.col("w.start").alias("bucket_start"),
-                "n_events",
-                "total_value",
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append"),
-            checkpoint=ckpt,
-            shuffle_partitions=8,
-        )
-
-    e.where(F.col("ts") >= F.lit(cut)).coalesce(1).write.parquet(
-        os.path.join(src_dir, "step-a")
-    )
-    run_pass()
-    e.where(F.col("ts") < F.lit(cut)).coalesce(1).write.parquet(
-        os.path.join(src_dir, "step-b")
-    )
-    run_pass()
-    _local_rows_df(
+    sentinel = _local_rows_df(
         spark,
+        [(-1, gmax + datetime.timedelta(days=2), 0, "sentinel", 0.0, "{}")],
+        _EVENT_SCHEMA,
+    )
+    _drive_epochs(
+        spark.readStream.schema(_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir + "/*/")
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "10 minutes").alias("w"))
+        .agg(
+            F.count("*").alias("n_events"),
+            dsum("value").alias("total_value"),
+        )
+        .select(
+            F.col("w.start").alias("bucket_start"),
+            "n_events",
+            "total_value",
+        )
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
         [
-            (
-                -1,
-                gmax + datetime.timedelta(days=2),
-                0,
-                "sentinel",
-                0.0,
-                "{}",
+            functools.partial(
+                step.coalesce(1).write.parquet, os.path.join(src_dir, name)
+            )
+            for step, name in (
+                (e.where(F.col("ts") >= F.lit(cut)), "step-a"),
+                (e.where(F.col("ts") < F.lit(cut)), "step-b"),
+                (sentinel, "step-c"),
             )
         ],
-        _EVENT_SCHEMA,
-    ).coalesce(1).write.parquet(os.path.join(src_dir, "step-c"))
-    run_pass()
+        shuffle_partitions=8,
+    )
     return (
         spark.read.parquet(out_dir)
         .where(F.col("bucket_start") <= F.lit(gmax))
@@ -4906,18 +4891,16 @@ def _docs_packing_dir(spark: SparkSession, sf_dir: str) -> str:
     stream moves three narrow columns, not document text."""
 
     def build(tmp: str) -> None:
-        d = load_table(spark, sf_dir, "documents").select(
+        d = load_table(spark, sf_dir, "documents")
+        hi = d.agg(F.max("doc_id")).first()[0]
+        # slice q holds doc_id in [(hi+1)*q DIV 4, (hi+1)*(q+1) DIV 4)
+        d = d.select(
+            F.expr(f"CAST((doc_id * 4 + 3) DIV {hi + 1} AS INT)").alias("epoch"),
             "doc_id",
             "lang",
             F.size(F.split("text", " ")).cast("int").alias("n_tokens"),
         )
-        hi = d.agg(F.max("doc_id")).first()[0]
-        for q in range(4):
-            lo_q = (hi + 1) * q // 4
-            hi_q = (hi + 1) * (q + 1) // 4
-            d.where(
-                (F.col("doc_id") >= lo_q) & (F.col("doc_id") < hi_q)
-            ).coalesce(1).write.parquet(os.path.join(tmp, f"slice{q}"))
+        _write_slices(d, tmp, 4)
 
     return cached_dir(sf_dir, "documents", "pack-slices-x4", build)
 
@@ -5101,10 +5084,7 @@ def _docs_token_slices_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("epoch"),
             F.explode(F.split("text", " ")).alias("token"),
         )
-        for q in range(4):
-            tok.where(F.col("epoch") == q).coalesce(1).write.parquet(
-                os.path.join(tmp, f"slice{q}")
-            )
+        _write_slices(tok, tmp, 4)
 
     return cached_dir(sf_dir, "documents", "vocab-slices-x4", build)
 
@@ -5769,10 +5749,7 @@ def _events_funnel_slices_dir(spark: SparkSession, sf_dir: str) -> str:
                 F.unix_micros("ts").alias("t"),
             )
         )
-        for q in range(4):
-            t.where(F.col("epoch") == q).coalesce(1).write.parquet(
-                os.path.join(tmp, f"slice{q}")
-            )
+        _write_slices(t, tmp, 4)
 
     return cached_dir(sf_dir, "events", "funnel-slices-x4", build)
 
@@ -5961,10 +5938,7 @@ def _docs_lang_len_slices_dir(spark: SparkSession, sf_dir: str) -> str:
             "lang",
             F.col("n_chars").cast("long").alias("x"),
         )
-        for q in range(4):
-            t.where(F.col("epoch") == q).coalesce(1).write.parquet(
-                os.path.join(tmp, f"slice{q}")
-            )
+        _write_slices(t, tmp, 4)
 
     return cached_dir(sf_dir, "documents", "moments-slices-x4", build)
 
@@ -6785,6 +6759,7 @@ def i53_stream_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("epoch")
     )
 
+
 def stream_join_then_fold(
     spark: SparkSession,
     sf_dir: str,
@@ -6804,10 +6779,13 @@ def stream_join_then_fold(
     whose per-key state carries across the same epochs.  Watermark
     delay exceeds the event span, so no eviction clouds the trajectory
     (eviction-at-watermark is the single-drain join family's job).
+    The fold is ``_drive_epochs``-driven; its staging step for epoch q
+    stages slice q and runs the join's pass, so the fold's epoch q reads
+    exactly the pairs slice q completes. Both checkpoints, the ingest
+    copy and the pair log are removed on return.
     Shared by the i54 declared query and the fuzzer's
     stream_join_then_fold family (tools/fuzz_differential.py)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev = load_table(spark, sf_dir, "events")
     hi = ev.agg(F.max("event_id")).first()[0]
@@ -6815,142 +6793,93 @@ def stream_join_then_fold(
         ep = (F.col("event_id") % E).cast("int")
     else:
         ep = F.expr(f"CAST(event_id * {E} DIV {hi + 1} AS INT)")
-    src = ev.select(
-        ep.alias("ep"), "event_id", "user_id", "ts", "event_type", "value"
-    )
     base = scratch_dir("jf")
     ingest = os.path.join(base, "ingest")
     pairdir = os.path.join(base, "pairs")
     outdir = os.path.join(base, "out")
     ckpt_j = os.path.join(base, "ckpt_join")
-    ckpt_f = os.path.join(base, "ckpt_fold")
     os.makedirs(ingest)
     os.makedirs(pairdir)
-    for e in range(E):
-        src.where(F.col("ep") == e).repartition(1).write.parquet(
-            os.path.join(base, f"slice{e}")
-        )
-
-    schema = (
-        "ep int, event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
+    _write_slices(
+        ev.select(
+            ep.alias("epoch"), "event_id", "user_id", "ts", "event_type", "value"
+        ),
+        base,
+        E,
     )
 
-    def fold(key, pdfs, state: GroupState):
-        (k,) = key
-        rows = pd.concat(list(pdfs))
-        if op == "count":
-            batch = len(rows)
-        elif op == "sum":
-            batch = int(rows["v"].sum())
-        elif op == "max":
-            batch = int(rows["v"].max())
-        else:
-            batch = int(rows["v"].min())
-        if state.exists:
-            prior = state.get[0]
-            if op in ("count", "sum"):
-                running = prior + batch
-            elif op == "max":
-                running = max(prior, batch)
-            else:
-                running = min(prior, batch)
-        else:
-            running = batch
-        state.update((running,))
-        yield pd.DataFrame(
-            {
-                "k": [k],
-                "epoch": [int(rows["pep"].max())],
-                "running": [running],
-            }
-        )
+    schema = (
+        "epoch int, event_id bigint, user_id bigint, ts timestamp, "
+        "event_type string, value double"
+    )
+    a = spark.readStream.schema(schema).parquet(ingest)
+    if afilter is not None:
+        a = a.where(F.col("value") >= afilter)
+    a = a.withWatermark("ts", "100000 minutes").alias("a")
+    b = (
+        spark.readStream.schema(schema).parquet(ingest)
+        .where(F.col("event_type") == rt)
+        .withColumnRenamed("ts", "ts_b")
+        .withColumnRenamed("event_id", "event_id_b")
+        .withColumnRenamed("user_id", "user_id_b")
+        .withColumnRenamed("epoch", "ep_b")
+        .withWatermark("ts_b", "100000 minutes")
+        .alias("b")
+    )
+    if op == "count":
+        vexpr = F.lit(1).cast("long")
+    else:
+        vexpr = (
+            F.col("a.event_id") % 97 + F.col("b.event_id_b") % 89
+        ).cast("long")
+    joined = a.join(
+        b,
+        (F.col("a.user_id") == F.col("b.user_id_b"))
+        & (F.col("b.ts_b") >= F.col("a.ts"))
+        & (F.col("b.ts_b") <= F.col("a.ts") + F.expr(f"INTERVAL {m} MINUTES"))
+        & (F.col("a.event_id") != F.col("b.event_id_b")),
+        "inner",
+    ).select(
+        F.greatest(F.col("a.epoch"), F.col("b.ep_b")).cast("long").alias("epoch"),
+        (F.col("a.user_id") % W).cast("long").alias("k"),
+        vexpr.alias("v"),
+    )
+    join_pass = joined.writeStream.foreachBatch(
+        lambda df, _eid: df.write.mode("append").parquet(pairdir)
+    ).outputMode("append")
 
-    for e in range(E):
-        _stage_slice(os.path.join(base, f"slice{e}"), ingest, e)
-        a = spark.readStream.schema(schema).parquet(ingest)
-        if afilter is not None:
-            a = a.where(F.col("value") >= afilter)
-        a = a.withWatermark("ts", "100000 minutes").alias("a")
-        b = (
-            spark.readStream.schema(schema).parquet(ingest)
-            .where(F.col("event_type") == rt)
-            .withColumnRenamed("ts", "ts_b")
-            .withColumnRenamed("event_id", "event_id_b")
-            .withColumnRenamed("user_id", "user_id_b")
-            .withColumnRenamed("ep", "ep_b")
-            .withWatermark("ts_b", "100000 minutes")
-            .alias("b")
+    def stage(q: int, d: str) -> None:
+        # Epoch q of the fold is the pairs the join emits for slice q.
+        _stage_slice(d, ingest, q)
+        _drain(join_pass, checkpoint=ckpt_j, shuffle_partitions=8)
+
+    keyed = (
+        spark.readStream.schema("epoch long, k long, v long")
+        .parquet(pairdir)
+        .groupBy("k")
+        .applyInPandasWithState(
+            _running_fold(op),
+            "k long, epoch long, running long",
+            "run long",
+            "update",
+            GroupStateTimeout.NoTimeout,
         )
-        if op == "count":
-            vexpr = F.lit(1).cast("long")
-        else:
-            vexpr = (
-                F.col("a.event_id") % 97 + F.col("b.event_id_b") % 89
-            ).cast("long")
-        joined = a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id_b"))
-            & (F.col("b.ts_b") >= F.col("a.ts"))
-            & (
-                F.col("b.ts_b")
-                <= F.col("a.ts") + F.expr(f"INTERVAL {m} MINUTES")
-            )
-            & (F.col("a.event_id") != F.col("b.event_id_b")),
-            "inner",
-        ).select(
-            F.greatest(F.col("a.ep"), F.col("b.ep_b"))
-            .cast("long")
-            .alias("pep"),
-            (F.col("a.user_id") % W).cast("long").alias("k"),
-            vexpr.alias("v"),
-        )
-        _drain(
-            joined.writeStream.foreachBatch(
-                lambda df, _eid: df.write.mode("append").parquet(pairdir)
-            ).outputMode("append"),
-            checkpoint=ckpt_j,
-            shuffle_partitions=8,
-        )
-        keyed = (
-            spark.readStream.schema("pep long, k long, v long")
-            .parquet(pairdir)
-            .groupBy("k")
-            .applyInPandasWithState(
-                fold,
-                "k long, epoch long, running long",
-                "run long",
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
-        )
-        _drain(
+    )
+    try:
+        _drive_epochs(
             keyed.writeStream.foreachBatch(
                 lambda df, _eid: df.write.mode("append").parquet(outdir)
             ).outputMode("update"),
-            checkpoint=ckpt_f,
+            [
+                functools.partial(stage, q, d)
+                for q, d in enumerate(_slice_dirs(base))
+            ],
             shuffle_partitions=8,
         )
-
-    em = spark.read.schema("k long, epoch long, running long").parquet(
-        outdir
-    )
-    epochs = spark.range(E).select(F.col("id").cast("long").alias("epoch"))
-    grid = em.select("k").distinct().crossJoin(F.broadcast(epochs))
-    return (
-        grid.join(
-            em.select(
-                F.col("k").alias("ek"),
-                F.col("epoch").alias("eep"),
-                "running",
-            ),
-            (grid["k"] == F.col("ek")) & (F.col("eep") <= grid["epoch"]),
-            "inner",
-        )
-        .groupBy("k", "epoch")
-        .agg(F.max_by("running", "eep").alias("running"))
-        .orderBy("epoch", "k")
-    )
+    finally:
+        for d in (ingest, pairdir, ckpt_j):
+            shutil.rmtree(d, ignore_errors=True)
+    return _running_prefixes(spark, outdir, E)
 
 
 def stream_join_then_fold_oracle(
@@ -7335,10 +7264,7 @@ def _docs_gate_slices_dir(spark: SparkSession, sf_dir: str) -> str:
             "source",
             "n_chars",
         )
-        for q in range(4):
-            rows.where(F.col("epoch") == q).coalesce(1).write.parquet(
-                os.path.join(tmp, f"slice{q}")
-            )
+        _write_slices(rows, tmp, 4)
 
     return cached_dir(sf_dir, "documents", "gate-slices-x4", build)
 

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from nibbler_spark.session import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -41,10 +43,12 @@ TABLES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 # The session confs that change the schema Spark infers from a parquet
 # footer; their values are part of the cache key.
 _SCHEMA_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
+    _NANOS_AS_LONG,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -73,14 +77,39 @@ def _version(path: str) -> tuple:
     return (st.st_ino, st.st_size, st.st_mtime_ns)
 
 
+def _stores_nanos(path: str) -> bool:
+    """Whether the footer of ``path`` (of its first part file, if the
+    table is a directory) has a TIMESTAMP(NANOS) column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        if not parts:
+            return False
+        path = os.path.join(path, parts[0])
+    return any(
+        pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        for f in pq.read_schema(path)
+    )
+
+
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` through a schema inferred once per
-    file version and inference confs, so the scan runs no Spark job."""
+    file version and inference confs, so the scan runs no Spark job.
+
+    Spark 4 rejects a TIMESTAMP(NANOS) column when it infers a schema,
+    so on a miss a file that has one is inferred with the legacy
+    nanos-as-long conf held for the inference only; the column reads as
+    int64 nanos, and a scan built from that schema needs no conf."""
     real = os.path.realpath(path)
     key = (_version(real), tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
     hit = _schemas.get(real)
     if hit is None or hit[0] != key:
-        hit = _schemas[real] = (key, spark.read.parquet(path).schema)
+        nanos = {_NANOS_AS_LONG: "true"} if _stores_nanos(real) else {}
+        with scoped_conf(spark, nanos):
+            schema = spark.read.parquet(path).schema
+        hit = _schemas[real] = (key, schema)
     return spark.read.schema(hit[1]).parquet(path)
 
 
@@ -126,9 +155,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     handles predicate pushdown / column pruning into the scan.
 
     ``events.ts`` has shipped both as TIMESTAMP(NANOS) (which Spark 4
-    rejects outright — read via the legacy nanos-as-long conf and
-    floor-truncated to microseconds, matching DuckDB's truncation) and as
-    a native µs timestamp; the shim keys off the actual column type so
+    rejects outright — ``_read_parquet`` reads it as int64 nanos, here
+    floor-truncated to microseconds, matching DuckDB's truncation) and
+    as a native µs timestamp; the shim keys off the actual column type so
     either vintage of the testdata loads to the same µs-timestamp schema.
 
     Both branches read through ``_read_parquet``: the file's schema is
@@ -142,7 +171,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = _read_parquet(spark, table_path(sf_dir, name))
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

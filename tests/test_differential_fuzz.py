@@ -1,15 +1,18 @@
 """Differential fuzzing as CI: 40 seeded random queries run as
 identical SQL on Spark and DuckDB must agree exactly (the SQLancer
 recipe, restricted to the engine-exact grammar in
-tools/fuzz_differential.py). A failing seed is a pinned regression —
-reproduce with `python tools/fuzz_differential.py`."""
+tools/fuzz_differential.py), and one seed of each multi-epoch streaming
+family agrees with its DuckDB prefix oracle. A failing seed is a pinned
+regression — reproduce with `python tools/fuzz_differential.py`."""
 
 from __future__ import annotations
 
 import random
 
+import pytest
+
 from nibbler_spark.oracle import compare
-from tools.fuzz_differential import gen_query
+from tools.fuzz_differential import DSL_FAMILIES, gen_query
 
 
 def test_forty_random_queries_agree(spark, sf_dir, duck):
@@ -24,6 +27,21 @@ def test_forty_random_queries_agree(spark, sf_dir, duck):
         if not rep.ok:
             bad.append((seed, sql, rep.first_diffs[:2]))
     assert not bad, bad
+
+
+@pytest.mark.parametrize(
+    "family,seed",
+    [
+        # E=4 contiguous doc_id ranges, 2 part files per epoch, sum fold
+        ("stream_keyed_fold", 97_007),
+        # E=3 range slices, error-typed right side, sum fold
+        ("stream_join_then_fold", 97_013),
+    ],
+)
+def test_streaming_family_agrees(family, seed, spark, sf_dir, duck):
+    build, sql = DSL_FAMILIES[family](random.Random(seed))
+    rep = compare(f"{family}-{seed}", build(spark, sf_dir), duck, sql)
+    assert rep.ok, str(rep)
 
 
 def test_rollup_empty_divergence(spark, sf_dir):

@@ -1,9 +1,11 @@
 """Ownership of a streaming drain's temporary resources.
 
-Every ``availableNow`` pass in ``streaming_q`` goes through ``_drain``,
-which owns its checkpoint and its state-partition conf;
-``_drain_to_memory`` drops its memory-sink view and ``_fold_slices``
-removes its ingest copy. Session-conf overrides anywhere in the package
+Every ``availableNow`` pass in the package and its tools goes through
+``streaming_q._drain``, which owns its checkpoint and its
+state-partition conf; ``_drive_epochs`` owns the one checkpoint a
+multi-epoch drive restarts from; ``_drain_to_memory`` drops its
+memory-sink view and ``_fold_slices`` removes its ingest copy.
+Session-conf overrides anywhere in the package
 go through ``session.scoped_conf``. These tests pin that a query leaves
 none of those behind, and that the session conf reads the same after a
 query as before it.
@@ -12,8 +14,10 @@ query as before it.
 from __future__ import annotations
 
 import glob
+import inspect
 import re
 import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -106,6 +110,7 @@ def test_conf_override_queries_leave_session_conf_unchanged(
         "i01_tumbling_window_parity",  # memory drain
         "i04_watermark_late_drop_golden",  # restarts from its own checkpoint
         "i45_stream_vocab_growth",  # fold over staged slices
+        "i54_stream_join_fold_compose",  # join pass staging a fold's epochs
     ],
 )
 def test_streaming_query_leaves_no_drain_debris(
@@ -119,6 +124,7 @@ def test_streaming_query_leaves_no_drain_debris(
     report = compare(name, spec.spark(spark, sf_dir), duck, spec.oracle)
     assert report.ok, str(report)
     assert glob.glob(str(tmp_path / "nibbler-ck-*")) == []
+    assert glob.glob(str(tmp_path / "nibbler-*" / "ckpt*")) == []
     assert glob.glob(str(tmp_path / "nibbler-*" / "ingest")) == []
     new_views = {t.name for t in spark.catalog.listTables()} - views_before
     assert [v for v in new_views if v.startswith("mem_")] == []
@@ -126,14 +132,23 @@ def test_streaming_query_leaves_no_drain_debris(
 
 
 def test_streaming_q_has_one_drain():
-    """Source guard: one ``availableNow`` trigger (in ``_drain``), no
-    hand-set state-partition conf and no env knob for it."""
+    """Source guard: one ``availableNow`` trigger across
+    ``nibbler_spark/`` and ``tools/`` (in ``_drain``), no hand-set
+    state-partition conf and no env knob for it."""
     import nibbler_spark.queries.streaming_q as sq
 
-    with open(sq.__file__) as fh:
-        src = fh.read()
-    assert src.count("trigger(availableNow=True)") == 1
+    repo = Path(sq.__file__).resolve().parents[2]
+    found = [
+        f"{path.relative_to(repo)}: {n}"
+        for top in ("nibbler_spark", "tools")
+        for path in sorted((repo / top).rglob("*.py"))
+        if (n := path.read_text().count("trigger(availableNow=True)"))
+    ]
+    assert found == ["nibbler_spark/queries/streaming_q.py: 1"]
+    assert "trigger(availableNow=True)" in inspect.getsource(sq._drain)
+    src = Path(sq.__file__).read_text()
     assert not re.search(
         r"conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions", src
     )
     assert "NIBBLER_STREAM_STATE_PARTITIONS" not in src
+

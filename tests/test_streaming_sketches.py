@@ -40,6 +40,7 @@ def test_multi_part_epoch_parity(spark, sf_dir):
     not depend on coalesce(1) staging."""
     import shutil
 
+    from nibbler_spark.queries.streaming_q import _write_slices
     from nibbler_spark.sources import load_table
     from nibbler_spark.sources.tables import cached_dir, table_path
 
@@ -64,10 +65,7 @@ def test_multi_part_epoch_parity(spark, sf_dir):
             "lang",
             F.col("n_chars").cast("long").alias("x"),
         )
-        for q in range(4):
-            t.where(F.col("epoch") == q).repartition(2).write.parquet(
-                os.path.join(tmp, f"slice{q}")
-            )
+        _write_slices(t, tmp, 4, parts=2)
 
     cache = cached_dir(tmp_sf, "documents", "moments-slices-x4", build_multipart)
     for q in range(4):

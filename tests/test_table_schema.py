@@ -15,6 +15,7 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from nibbler_spark.queries import load_all
 from nibbler_spark.session import scoped_conf
@@ -102,6 +103,52 @@ def test_inference_conf_flip_is_read_again(spark, tmp_path):
     assert as_binary.schema["r_name"].dataType.typeName() == "binary"
     assert as_string.schema["r_name"].dataType.typeName() == "string"
     assert [r.r_name for r in rows] == ["a", "b"]
+
+
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_loading_microsecond_events_leaves_the_nanos_conf_alone(spark, sf_dir):
+    spark.conf.unset(_NANOS)
+    load_table(spark, sf_dir, "events")
+    assert spark.conf.get(_NANOS, None) is None
+
+
+def test_second_pass_over_all_tables_runs_no_job(spark, sf_dir, monkeypatch):
+    """A conf flipped by one table's read must not change the schema key
+    of the tables read before it."""
+    monkeypatch.setattr(tables, "_schemas", {})
+    spark.conf.unset(_NANOS)
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+    _, jobs = _jobs(spark, lambda: [load_table(spark, sf_dir, n) for n in TABLES])
+    assert jobs == 0
+
+
+def test_nanosecond_events_load_as_floored_microseconds(spark, tmp_path, monkeypatch):
+    ns = [1704067200_123456789, 1704067201_999999999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": [1, 2],
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "user_id": [7, 8],
+                "event_type": ["view", "click"],
+                "value": [0.5, 1.5],
+                "props": ["{}", "{}"],
+            }
+        ),
+        table_path(str(tmp_path), "events"),
+    )
+    spark.conf.unset(_NANOS)
+    df = load_table(spark, str(tmp_path), "events")
+    assert df.schema["ts"].dataType.typeName() == "timestamp"
+    micros = df.orderBy("event_id").select(F.unix_micros("ts").alias("us"))
+    assert [r.us for r in micros.collect()] == [n // 1000 for n in ns]
+    assert spark.conf.get(_NANOS, None) is None
+    # A cached call reads no footer.
+    monkeypatch.setattr(tables, "_stores_nanos", None)
+    assert load_table(spark, str(tmp_path), "events").schema == df.schema
 
 
 def test_no_query_spells_a_fixture_path_as_an_fstring():

@@ -657,9 +657,10 @@ def _stream_keyed_fold_case(rng: random.Random):
     """Randomized ONLINE keyed-fold trajectory (r7 verdict #8): the
     i47/i48 state-carry pattern — an applyInPandasWithState fold over a
     randomized epoch slicing of the documents token stream, driven one
-    availableNow drain per epoch through the real checkpoint machinery,
-    with the per-epoch read-out reconstructed from the emission log
-    (max_by(running, emitted_epoch)) and compared against DuckDB
+    availableNow drain per epoch through the registry's own
+    streaming_q._fold_slices, with the per-epoch read-out reconstructed
+    from the emission log (streaming_q._running_prefixes, a
+    max_by(running, emitted_epoch)) and compared against DuckDB
     rebuilding every epoch PREFIX from scratch.  Randomized dimensions:
     epoch count, slice rule (doc_id mod vs contiguous doc_id ranges),
     part files per epoch (multi-part epochs must still fold as ONE
@@ -674,18 +675,16 @@ def _stream_keyed_fold_case(rng: random.Random):
     minlen = rng.choice([0, 3, 5])
 
     def build(spark, sf_dir):
-        import os as _os
-        import tempfile
-
-        import pandas as pd
         from pyspark.sql import functions as F
-        from pyspark.sql.streaming.state import (
-            GroupState,
-            GroupStateTimeout,
-        )
 
+        from nibbler_spark.queries import scratch_dir
         from nibbler_spark.queries.sketches import _nib_hash
-        from nibbler_spark.queries.streaming_q import _stage_slice
+        from nibbler_spark.queries.streaming_q import (
+            _fold_slices,
+            _running_fold,
+            _running_prefixes,
+            _write_slices,
+        )
         from nibbler_spark.sources import load_table
 
         d = load_table(spark, sf_dir, "documents")
@@ -712,99 +711,21 @@ def _stream_keyed_fold_case(rng: random.Random):
             .where(F.length("token") >= minlen)
             .select("epoch", "token", v.alias("v"))
         )
-
-        base = tempfile.mkdtemp(prefix="nibbler-fuzzfold-")
-        ingest = _os.path.join(base, "ingest")
-        outdir = _os.path.join(base, "out")
-        ckpt = _os.path.join(base, "ckpt")
-        _os.makedirs(ingest)
-        for e in range(E):
-            tok.where(F.col("epoch") == e).repartition(parts).write.parquet(
-                _os.path.join(base, f"slice{e}")
-            )
-
-        def fold(key, pdfs, state: GroupState):
-            (k,) = key
-            rows = pd.concat(list(pdfs))
-            if op == "count":
-                batch = len(rows)
-            elif op == "sum":
-                batch = int(rows["v"].sum())
-            elif op == "max":
-                batch = int(rows["v"].max())
-            else:
-                batch = int(rows["v"].min())
-            if state.exists:
-                prior = state.get[0]
-                if op in ("count", "sum"):
-                    running = prior + batch
-                elif op == "max":
-                    running = max(prior, batch)
-                else:
-                    running = min(prior, batch)
-            else:
-                running = batch
-            state.update((running,))
-            yield pd.DataFrame(
-                {
-                    "k": [k],
-                    "epoch": [int(rows["epoch"].max())],
-                    "running": [running],
-                }
-            )
-
-        for e in range(E):
-            _stage_slice(_os.path.join(base, f"slice{e}"), ingest, e)
-            keyed = (
-                spark.readStream.schema("epoch int, token string, v long")
-                .parquet(ingest)
-                .select(
-                    "epoch",
-                    _nib_hash(F.col("token"), W).cast("long").alias("k"),
-                    "v",
-                )
-                .groupBy("k")
-                .applyInPandasWithState(
-                    fold,
-                    "k long, epoch long, running long",
-                    "run long",
-                    "update",
-                    GroupStateTimeout.NoTimeout,
-                )
-            )
-            sq = (
-                keyed.writeStream.foreachBatch(
-                    lambda df, _eid: df.write.mode("append").parquet(outdir)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-
-        em = spark.read.schema("k long, epoch long, running long").parquet(
-            outdir
+        slices = scratch_dir("fuzzfold")
+        _write_slices(tok, slices, E, parts)
+        outdir = _fold_slices(
+            spark,
+            slices,
+            "epoch int, token string, v long",
+            "k",
+            _running_fold(op),
+            "k long, epoch long, running long",
+            "run long",
+            prep=lambda s: s.select(
+                "epoch", _nib_hash(F.col("token"), W).cast("long").alias("k"), "v"
+            ),
         )
-        epochs = spark.range(E).select(
-            F.col("id").cast("long").alias("epoch")
-        )
-        grid = em.select("k").distinct().crossJoin(F.broadcast(epochs))
-        return (
-            grid.join(
-                em.select(
-                    F.col("k").alias("ek"),
-                    F.col("epoch").alias("eep"),
-                    "running",
-                ),
-                (grid["k"] == F.col("ek"))
-                & (F.col("eep") <= grid["epoch"]),
-                "inner",
-            )
-            .groupBy("k", "epoch")
-            .agg(F.max_by("running", "eep").alias("running"))
-            .orderBy("epoch", "k")
-        )
+        return _running_prefixes(spark, outdir, E)
 
     from nibbler_spark.queries.sketches import _sql_nib_hash
 
