@@ -90,20 +90,6 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
-def drop_debris(spark) -> None:
-    """Session-debris cleanup BETWEEN headline rows (r10): release the
-    cached tables and pinned localCheckpoint blocks earlier rows left,
-    so each row measures in the clean-session state its anchor was
-    measured in (the r10 driver-style run read ext_kcore_decomposition
-    at 5.6 s in-bench vs 2.3–2.7 s isolated, ext_crawl_pipeline 2.54
-    vs 1.26 s). Streaming drains drop their own memory-sink views, so
-    there are none to drop here."""
-    spark.catalog.clearCache()
-    persistent = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(persistent.keySet()):
-        persistent.get(rid).rdd().unpersist(False)
-
-
 def main() -> None:
     from nibbler_spark.queries import load_all
     from nibbler_spark.session import get_spark
@@ -144,7 +130,6 @@ def main() -> None:
         spec = specs.get(name)
         if spec is None:
             continue
-        drop_debris(spark)
         # One untimed warm-up pass: page cache + codegen + broadcast
         # build are amortized in any steady-state deployment, and the
         # timed medians should measure the query, not the first touch
@@ -162,14 +147,6 @@ def main() -> None:
     # the r7 frozen-anchor split; their measured contrast and the AQE
     # skew-split assertion live on in BASELINE.md and
     # tests/test_aqe_scale.py.
-
-    # Release session debris the headline loop accumulated before the
-    # composite below is timed (r5 verdict #5 — the tq_power_22 drift).
-    # Isolated-session steady state is stable (consecutive runs within
-    # 1%, code cache ~80/240 MB — measured r6, see NOTES.md); what moves
-    # the in-bench number across rounds is the growing pile of pinned
-    # localCheckpoint RDD blocks competing with execution memory.
-    drop_debris(spark)
 
     # TPC-H power run (BENCH-B9): all 22 reduced-schema analogues
     # executed sequentially as ONE timed metric — the classic composite

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nibbler_spark.queries import pin
+
 
 def canonical_edges(e: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Normalize an arbitrary (src, dst) edge list to canonical (hi, lo)."""
@@ -76,12 +78,12 @@ def _signature(e: DataFrame) -> tuple:
 def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     """(node, component) for every node in the canonical edge set, where
     component = the minimum node id reachable from it. Converges in
-    O(log n) large-star/small-star rounds; each round localCheckpoints
-    to cut lineage (the iterative-algorithm discipline)."""
-    e = edges.localCheckpoint()
+    O(log n) large-star/small-star rounds; each round is pinned (a
+    localCheckpoint) to cut lineage (the iterative-algorithm discipline)."""
+    e = pin(edges)
     sig = _signature(e)
     for _ in range(max_rounds):
-        nxt = small_star(large_star(e)).localCheckpoint()
+        nxt = pin(small_star(large_star(e)))
         nsig = _signature(nxt)
         # equal counts + one-direction exceptAll empty ⇒ multisets equal
         same = sig == nsig and nxt.exceptAll(e).isEmpty()

@@ -17,11 +17,15 @@ Conventions (FIXTURES.md §4):
   percentiles).
 - Bounded-mode ops (sketches, LSH, sampling) return the *assertion result*
   (boolean bound check) so they hash-compare against a constant oracle.
+- Temp dirs come from :func:`scratch_dir` and local checkpoints from
+  :func:`pin`; each registered call's :func:`call_scope` owns both, so a
+  query leaves nothing for its caller to clean up.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import importlib
 import os
@@ -31,6 +35,7 @@ import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -102,12 +107,13 @@ def load_all() -> dict[str, QuerySpec]:
 
 
 class _CallScope(threading.local):
-    """One thread's scratch dirs and its depth of nested registered
-    calls."""
+    """One thread's scratch dirs, pinned RDDs and its depth of nested
+    registered calls."""
 
     def __init__(self) -> None:
         self.depth = 0
         self.dirs: list[str] = []
+        self.pins: list[tuple[SparkContext, int]] = []
 
 
 _scope = _CallScope()
@@ -130,6 +136,19 @@ def scratch_dir(name: str) -> str:
     return d
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()``, its blocks owned like a
+    :func:`scratch_dir` dir: by the calling thread's current registered
+    call, until that thread starts its next outermost one.
+
+    Only the checkpointed RDD's id is kept, so Spark's ContextCleaner can
+    still free the blocks earlier once the DataFrame is gone."""
+    cp = df.localCheckpoint()
+    rdd_id = cp._jdf.queryExecution().analyzed().rdd().id()
+    _scope.pins.append((cp.sparkSession.sparkContext, rdd_id))
+    return cp
+
+
 def _release(dirs) -> None:
     for d in dirs:
         shutil.rmtree(d, ignore_errors=True)
@@ -137,10 +156,41 @@ def _release(dirs) -> None:
         _live.difference_update(dirs)
 
 
+def _unpin(pins) -> None:
+    live = {}
+    for sc, rdd_id in pins:
+        if sc._jsc is None:  # stopped: the blocks went with it
+            continue
+        if sc not in live:
+            live[sc] = sc._jsc.getPersistentRDDs()
+        rdd = live[sc].get(rdd_id)
+        if rdd is not None:
+            rdd.unpersist(False)
+
+
 @atexit.register
 def _release_all() -> None:
     if os.getpid() == _owner_pid:  # not in a forked child
         _release(list(_live))
+
+
+@contextlib.contextmanager
+def call_scope():
+    """One registered call on this thread. An outermost call first
+    releases what the thread's previous outermost call left (its
+    :func:`scratch_dir` dirs and :func:`pin` blocks); a call inside
+    another joins the outer call's scope."""
+    if _scope.depth == 0:
+        _release(_scope.dirs)
+        _scope.dirs = []
+        if _scope.pins:
+            _unpin(_scope.pins)
+            _scope.pins = []
+    _scope.depth += 1
+    try:
+        yield
+    finally:
+        _scope.depth -= 1
 
 
 def register(
@@ -158,10 +208,10 @@ def register(
     the SparkSession. ANSI mode stays at the engine default (on in
     Spark 4) — the whole declared suite is validated under it.
 
-    The wrapper also owns the call's :func:`scratch_dir` dirs. An
-    outermost call on a thread first removes the dirs of that thread's
-    previous outermost call; a registered query called inside another
-    joins the outer call's scope, whose DataFrame reads its results.
+    The wrapper runs the query in a :func:`call_scope`, which owns the
+    call's :func:`scratch_dir` dirs and :func:`pin` blocks: they live
+    until the thread's next outermost registered call, so the DataFrame
+    the query returns can still read them.
     """
     if category not in CATEGORIES:
         raise ValueError(f"unknown category {category!r} for query {name!r}")
@@ -174,14 +224,8 @@ def register(
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.adaptive.enabled", "true")
             ship_package(spark)  # workers must import our Python operators
-            if _scope.depth == 0:
-                _release(_scope.dirs)
-                _scope.dirs = []
-            _scope.depth += 1
-            try:
+            with call_scope():
                 return fn(spark, sf_dir)
-            finally:
-                _scope.depth -= 1
 
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")

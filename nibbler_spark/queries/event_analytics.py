@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.sources import load_table
 
 
@@ -2452,8 +2452,8 @@ def ext_incremental_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    stored = sessions(e.where(F.col("day") <= 15)).localCheckpoint()
-    fresh = sessions(e.where(F.col("day") >= 16)).localCheckpoint()
+    stored = pin(sessions(e.where(F.col("day") <= 15)))
+    fresh = pin(sessions(e.where(F.col("day") >= 16)))
 
     last_stored = stored.groupBy("user_id").agg(
         F.max(F.struct("e", "s", "n")).alias("ls")
@@ -2464,14 +2464,14 @@ def ext_incremental_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary = last_stored.join(first_fresh, "user_id").where(
         F.col("ff.s") - F.col("ls.e") <= 1800000000
     )
-    merged = boundary.select(
+    merged = pin(boundary.select(
         "user_id",
         F.col("ls.s").alias("s"),
         F.col("ff.e").alias("e"),
         (F.col("ls.n") + F.col("ff.n")).alias("n"),
         F.col("ls.e").alias("_drop_stored_e"),
         F.col("ff.s").alias("_drop_fresh_s"),
-    ).localCheckpoint()
+    ))
     drops = merged.select("user_id", "_drop_stored_e", "_drop_fresh_s")
     kept_stored = stored.join(
         drops.select(
@@ -2821,7 +2821,7 @@ def ext_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         >= half,
         "B",
     ).otherwise("A")
-    armed = per_user.select(arm.alias("arm"), "x", "y").localCheckpoint()
+    armed = pin(per_user.select(arm.alias("arm"), "x", "y"))
     g = armed.agg(
         F.count("*").cast("double").alias("n"),
         F.sum("x").cast("double").alias("sx"),
@@ -3036,13 +3036,12 @@ def ext_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    inter = (
+    inter = pin(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(
             F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")
         )
         .distinct()
-        .localCheckpoint()
     )
     cnt = inter.groupBy("i").agg(F.count("*").alias("n"))
     a = inter.select("u", F.col("i").alias("ia"))
@@ -3292,7 +3291,7 @@ def ext_attribution_time_decay(
         F.col("event_type").isin("click", "view", "signup")
     ).select("user_id", F.col("tu").alias("tt"), "event_type")
     day_us = 86400000000
-    credits = (
+    credits = pin(
         purch.join(touch, "user_id")
         .where(
             (F.col("tt") < F.col("pt"))
@@ -3304,7 +3303,6 @@ def ext_attribution_time_decay(
                 f"shiftright(64, CAST((pt - tt) div {day_us} AS INT))"
             ).alias("w"),
         )
-        .localCheckpoint()
     )
     total = credits.agg(F.sum("w").alias("tw"))
     return (
@@ -5116,13 +5114,12 @@ def ext_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers throughout; stickiness rides the 1e6 grid. The windowed
     complement of ext_cumulative_distinct_users."""
     e = load_table(spark, sf_dir, "events")
-    ud = (
+    ud = pin(
         e.select(
             "user_id",
             F.expr("unix_micros(ts) div 86400000000").alias("day"),
         )
         .distinct()
-        .localCheckpoint()
     )
     spine = ud.select("day").distinct()
     dau = ud.groupBy("day").agg(F.count("*").cast("bigint").alias("dau"))
@@ -5910,11 +5907,11 @@ def ext_policy_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.col("user_id") % 16).cast("int"),
     )
-    pol = e.select(
+    pol = pin(e.select(
         F.col("event_type").alias("action"),
         F.floor(F.col("value") * 100).cast("bigint").alias("reward_cents"),
         pi.alias("pi_hash"),
-    ).localCheckpoint()
+    ))
 
     def row(policy: str, cond):
         src = pol.where(cond) if cond is not None else pol

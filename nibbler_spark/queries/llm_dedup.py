@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from nibbler_spark.queries._helpers import seq1, spread
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.sources import load_table
 
 
@@ -183,9 +183,9 @@ def k04_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.log(c.cast("double")) / F.log(F.lit(1.25))
         ).cast("int")
 
-    t = d.select(
+    t = pin(d.select(
         "doc_id", "lang", "source", toks.alias("ts"), F.size(toks).alias("sz")
-    ).localCheckpoint()
+    ))
     build = t.withColumn("band", band_of(F.col("sz")))
     # Integer-exact partner-size interval for tau = 4/5.
     lo = F.floor((4 * F.col("sz") + 4) / 5).cast("int")  # ceil(4*sz/5)
@@ -337,7 +337,7 @@ def k05_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>"))
     )
-    t = d.select("doc_id", shingles.alias("ts")).localCheckpoint()
+    t = pin(d.select("doc_id", shingles.alias("ts")))
     tf = HashingTF(
         inputCol="ts", outputCol="features", numFeatures=1 << 18, binary=True
     )
@@ -352,8 +352,8 @@ def k05_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = mh.fit(feats)
     # Slim the join inputs to (doc_id, features): shingle arrays must
     # not ride the band-explode shuffle.
-    slim = feats.select("doc_id", "features").localCheckpoint()
-    found = (
+    slim = pin(feats.select("doc_id", "features"))
+    found = pin(
         model.approxSimilarityJoin(slim, slim, 0.4, distCol="jdist")
         .where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
         .select(
@@ -362,7 +362,6 @@ def k05_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(1.0) - F.col("jdist")).alias("jaccard"),
         )
     )
-    found.cache()
     all_above = (
         found.where(F.col("jaccard") < 0.6 - 1e-12).count() == 0
     )
@@ -540,7 +539,7 @@ def ext_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>"))
     )
-    t = d.select("doc_id", shingles.alias("ts")).localCheckpoint()
+    t = pin(d.select("doc_id", shingles.alias("ts")))
     hashed = (
         t.select("doc_id", F.explode("ts").alias("tok"))
         .select(
@@ -772,9 +771,9 @@ def ext_char_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    t = d.select(
+    t = pin(d.select(
         "doc_id", "lang", "source", grams.alias("gs")
-    ).localCheckpoint()
+    ))
     a = t.alias("a")
     b = t.alias("b")
     n_common = F.size(F.array_intersect(F.col("a.gs"), F.col("b.gs")))
@@ -868,19 +867,19 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(n_common.cast("double") / n_union >= 0.8)
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    edges = pairs.union(
+    edges = pin(pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = d.select(
+    ))
+    labels = pin(d.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
-    ).localCheckpoint()
+    ))
     while True:
         prop = (
             edges.join(labels, edges["src"] == labels["node"])
             .groupBy(F.col("dst").alias("pnode"))
             .agg(F.min("label").alias("plabel"))
         )
-        new_labels = (
+        new_labels = pin(
             labels.join(prop, labels["node"] == prop["pnode"], "left")
             .select(
                 "node",
@@ -888,7 +887,6 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("label"), F.coalesce("plabel", F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -959,13 +957,12 @@ def ext_cc_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text (the probe side additionally under an explode); repartition
     # first so the row-local split/sort spreads over every core instead
     # of the table's single local parquet split (no-op at real scale).
-    t = (
+    t = pin(
         d.select(
             "doc_id", "lang", "source", toks.alias("ts"),
             F.size(toks).alias("sz"),
         )
         .transform(spread)
-        .localCheckpoint()
     )
     build = t.withColumn("band", band_of(F.col("sz")))
     lo_b = F.floor((4 * F.col("sz") + 4) / 5).cast("int")
@@ -1104,13 +1101,13 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(n_common.cast("double") / n_union >= 0.8)
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    edges = pairs.union(
+    edges = pin(pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()
-    ranks = nodes.withColumn("r", F.lit(1.0 / n)).localCheckpoint()
+    ranks = pin(nodes.withColumn("r", F.lit(1.0 / n)))
     for _ in range(3):
         contrib = (
             edges.join(ranks, edges["src"] == ranks["node"])
@@ -1120,7 +1117,7 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("r") / F.col("d")).cast("decimal(28,18)").alias("c"),
             )
         )
-        ranks = (
+        ranks = pin(
             contrib.groupBy(F.col("cnode").alias("node"))
             .agg(
                 (
@@ -1128,7 +1125,6 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.lit(0.85) * F.sum("c").cast("double")
                 ).alias("r")
             )
-            .localCheckpoint()
         )
     return ranks.select(
         F.col("node").alias("doc_id"),
@@ -1393,9 +1389,9 @@ def ext_two_hop_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(n_common.cast("double") / n_union >= 0.8)
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    edges = pairs.union(
+    edges = pin(pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     two_hop = (
@@ -1649,7 +1645,7 @@ def ext_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = t.alias("a"), t.alias("b")
     n_common = F.size(F.array_intersect(F.col("a.ts"), F.col("b.ts")))
     n_union = F.size(F.col("a.ts")) + F.size(F.col("b.ts")) - n_common
-    pairs = (
+    pairs = pin(
         a.join(
             b,
             (F.col("a.lang") == F.col("b.lang"))
@@ -1658,7 +1654,6 @@ def ext_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(n_common.cast("double") / n_union >= 0.8)
         .select(F.col("a.doc_id").alias("u"), F.col("b.doc_id").alias("v"))
-        .localCheckpoint()
     )
     und = pairs.union(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1945,9 +1940,9 @@ def ext_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.src", "p.dst")
         .distinct()
     )
-    edges = e0.unionAll(
+    edges = pin(e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
     labels = d.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
     )
@@ -2037,7 +2032,7 @@ def ext_graph_feature_propagation(
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", F.split("text", " ").alias("toks")
     )
-    sh = d.select(
+    sh = pin(d.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -2054,7 +2049,7 @@ def ext_graph_feature_propagation(
                 ),
             )
         ).alias("sh"),
-    ).distinct().localCheckpoint()
+    ).distinct())
     ok = (
         sh.groupBy("sh")
         .agg(F.count("*").alias("df"))
@@ -2069,9 +2064,9 @@ def ext_graph_feature_propagation(
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
         .distinct()
     )
-    edges = e0.unionAll(
+    edges = pin(e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
 
     feats = d.select(
         F.col("doc_id").alias("node"),
@@ -2088,7 +2083,7 @@ def ext_graph_feature_propagation(
                 F.count("*").alias("deg"),
             )
         )
-        nxt = (
+        nxt = pin(
             cur.join(agg, cur["node"] == agg["n"], "left")
             .select(
                 "node",
@@ -2101,7 +2096,6 @@ def ext_graph_feature_propagation(
                 .cast("bigint")
                 .alias("f"),
             )
-            .localCheckpoint()
         )
         layers.append(nxt)
     out = (
@@ -2271,7 +2265,7 @@ def _dfcap_shingle_digraph(spark, sf_dir):
     # repartition to the core count before the shingle-hash explode:
     # the single local parquet split would otherwise run the xxhash64
     # transform (interpreted per element inside the lambda) on one task.
-    sh = d.transform(spread).select(
+    sh = pin(d.transform(spread).select(
         "doc_id",
         F.explode(
             F.array_distinct(
@@ -2290,7 +2284,7 @@ def _dfcap_shingle_digraph(spark, sf_dir):
                 )
             )
         ).alias("sh"),
-    ).localCheckpoint()
+    ))
     ok = (
         sh.groupBy("sh")
         .agg(F.count("*").alias("df"))
@@ -2315,11 +2309,10 @@ def _dfcap_shingle_digraph(spark, sf_dir):
             ),
         )
     )
-    e0 = (
+    e0 = pin(
         groups.select(F.explode(pair_structs).alias("p"))
         .select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
         .distinct()
-        .localCheckpoint()
     )
     return d.select("doc_id"), e0
 
@@ -2394,13 +2387,13 @@ def ext_bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs anywhere."""
     nodes, e0 = _dfcap_shingle_digraph(spark, sf_dir)
     d = nodes
-    edges = e0.unionAll(
+    edges = pin(e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    cur = d.select(
+    ))
+    cur = pin(d.select(
         F.col("doc_id").alias("node"),
         F.when(F.col("doc_id") % 50 == 0, F.lit(0)).alias("dist"),
-    ).localCheckpoint()
+    ))
     for _ in range(3):
         frontier = cur.where(F.col("dist").isNotNull()).select(
             F.col("node").alias("fnode"), "dist"
@@ -2415,7 +2408,7 @@ def ext_bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with the per-round cut — unlike the label loops, each BFS
         # round's frontier filter re-reads cur twice and the recompute
         # outweighs the saved jobs; the eager cut stays.)
-        cur = (
+        cur = pin(
             cur.join(relaxed, "node", "left")
             .select(
                 "node",
@@ -2427,7 +2420,6 @@ def ext_bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(999),
                 ).alias("dist"),
             )
-            .localCheckpoint()
         )
     return (
         cur.groupBy(
@@ -2809,9 +2801,9 @@ def ext_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle unrolls the identical 3 rounds as CTEs; counts and
     doc_id checksums are integer-exact."""
     nodes, e0 = _dfcap_shingle_digraph(spark, sf_dir)
-    edges = e0.unionAll(
+    edges = pin(e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
     all_nodes = nodes.select(F.col("doc_id").alias("node"))
     # r9 verdict #2 variance pass: the old shape ran SEVEN eager
     # materialize jobs per query (edges + per-round new_alive + a
@@ -2830,11 +2822,11 @@ def ext_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             ay = alive.select(F.col("node").alias("dst"))
             e = e.join(ax, "src", "left_semi").join(ay, "dst", "left_semi")
         deg = e.groupBy("src").agg(F.count("*").alias("d"))
-        new_alive = prev.join(
+        new_alive = pin(prev.join(
             deg.where(F.col("d") >= 2).select(F.col("src").alias("node")),
             "node",
             "left_semi",
-        ).localCheckpoint()
+        ))
         peels.append(
             prev.join(new_alive, "node", "left_anti").select(
                 "node", F.lit(rnd).cast("bigint").alias("removed_round")
@@ -2927,7 +2919,7 @@ def ext_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    sh = t.select(
+    sh = pin(t.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -2940,7 +2932,7 @@ def ext_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("sh"),
-    ).distinct().localCheckpoint()
+    ).distinct())
     sizes = sh.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("n"))
     common = (
         sh.alias("a")
@@ -2955,7 +2947,7 @@ def ext_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    pairs = (
+    pairs = pin(
         common.join(
             F.broadcast(sizes.withColumnRenamed("n", "na")),
             F.col("doc_a") == F.col("doc_id"),
@@ -2966,7 +2958,6 @@ def ext_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_b") == F.col("doc_id"),
         )
         .drop("doc_id")
-        .localCheckpoint()
     )
     taus = spark.createDataFrame([(5,), (7,), (9,)], "tau10 int")
     hit = 10 * F.col("c") >= F.col("tau10") * (
@@ -3061,9 +3052,9 @@ def ext_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the df-cap bounds; candidates carry three bigints; existing
     edges drop via one anti-join."""
     _, e0 = _dfcap_shingle_digraph(spark, sf_dir)
-    edges = e0.unionAll(
+    edges = pin(e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     lngrid = F.floor(F.log(F.col("d")) * F.lit(1000000.0)).cast("bigint")
     degs = deg.select(F.col("src").alias("z"), lngrid.alias("lg"))
@@ -3170,7 +3161,7 @@ def ext_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("toks"),
     )
     corpus = d.unionByName(exc)
-    sh = corpus.select(
+    sh = pin(corpus.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -3187,7 +3178,7 @@ def ext_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("sh"),
-    ).distinct().localCheckpoint()
+    ).distinct())
     sz = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     ok = (
         sh.groupBy("sh")
@@ -3295,9 +3286,9 @@ def ext_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The oracle unrolls the identical LPA round and the same
     scaled sum."""
     nodes, e0 = _dfcap_shingle_digraph(spark, sf_dir)
-    edges = e0.unionAll(
+    edges = pin(e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    ))
     l0 = nodes.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
     )
@@ -3313,9 +3304,9 @@ def ext_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("src").alias("node"), F.col("best.label").alias("nl"))
     )
-    l1 = l0.join(r1m, "node", "left").select(
+    l1 = pin(l0.join(r1m, "node", "left").select(
         "node", F.coalesce("nl", "label").alias("label")
-    ).localCheckpoint()
+    ))
     m = e0.count()  # bounded: one scalar
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     comm = (
@@ -3438,7 +3429,7 @@ def _louvain_frames(spark, sf_dir):
     d = _lt(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    sh = (
+    sh = pin(
         d.select(
             "doc_id",
             F.explode(
@@ -3458,7 +3449,6 @@ def _louvain_frames(spark, sf_dir):
             ).alias("sh"),
         )
         .distinct()
-        .localCheckpoint()
     )
     ok = (
         sh.groupBy("sh")
@@ -3467,7 +3457,7 @@ def _louvain_frames(spark, sf_dir):
         .select("sh")
     )
     capped = sh.join(ok, "sh")
-    ew = (
+    ew = pin(
         capped.alias("a")
         .join(capped.alias("b"), "sh")
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -3475,7 +3465,6 @@ def _louvain_frames(spark, sf_dir):
             F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
         )
         .agg(F.count("*").cast("bigint").alias("w"))
-        .localCheckpoint()
     )
     sym = ew.unionByName(
         ew.select(
@@ -3748,13 +3737,12 @@ def ext_suffix_array_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
         # single-file corpus -> one input split: widen before the
         # 48x suffix expansion and the per-doc rank maps so every
         # downstream map stage uses the cluster (the k05/i42 lesson)
-        d.select("doc_id", "text")
+        pin(d.select("doc_id", "text")
         .transform(spread)
         .select(
             "doc_id", F.slice(F.split("text", " "), 1, 48).alias("t")
         )
-        .where(F.size("t") >= 1)
-        .localCheckpoint()
+        .where(F.size("t") >= 1))
     )
     ex0 = tk.select(
         "doc_id",
@@ -3780,7 +3768,7 @@ def ext_suffix_array_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("vmap")
         )
     )
-    arr = (
+    arr = pin(
         tk.crossJoin(vmap_row)
         .select(
             "doc_id",
@@ -3790,7 +3778,6 @@ def ext_suffix_array_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize once: the pack explode feeds BOTH the window
         # exchange and the boundary min_by/max_by aggregate
-        .localCheckpoint()
     )
 
     # fixed-width pack: tpl vocab ranks per long, L longs cover the
@@ -4232,7 +4219,7 @@ def ext_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     index) and shared by all four configs."""
     d = spread(load_table(spark, sf_dir, "documents"))
     t = d.select("doc_id", pmh_shingles(F.col("text")).alias("ts"))
-    t = t.localCheckpoint()
+    t = pin(t)
 
     def mh(seed: int):
         return F.array_min(
@@ -4253,15 +4240,14 @@ def ext_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equi-joining all short docs into spurious candidates. The oracle's
     # mins CTE (UNNEST) simply produces no rows for them, so drop them
     # here before building signatures — they can never be candidates.
-    sig = (
+    sig = pin(
         t.filter(F.size("ts") > 0)
         .select(
             "doc_id",
             F.array(*[mh(s) for s in range(_PMH_SEEDS)]).alias("mhs"),
         )
-        .localCheckpoint()
     )
-    truth = exact_jaccard_pairs(t, _LSH_SWEEP_TAU, 1000).localCheckpoint()
+    truth = pin(exact_jaccard_pairs(t, _LSH_SWEEP_TAU, 1000))
     nt = truth.agg(F.count("*").cast("bigint").alias("n_true"))
     theory = _lsh_sweep_theory()
     out = None
@@ -4290,7 +4276,7 @@ def ext_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("bs"),
         ).select("doc_id", "bs.band_id", "bs.bkey")
-        cand = (
+        cand = pin(
             bands.alias("a")
             .join(
                 bands.alias("b"),
@@ -4303,7 +4289,6 @@ def ext_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b.doc_id").alias("db"),
             )
             .distinct()
-            .localCheckpoint()
         )
         nc = cand.agg(F.count("*").cast("bigint").alias("n_candidates"))
         nh = cand.join(
@@ -4742,7 +4727,7 @@ def ext_dedup_index_compaction(
     rev_text = F.concat(
         F.col("text"), F.lit(" compaction revision marker")
     )
-    vers = (
+    vers = pin(
         d.where(F.col("doc_id") % 3 < 2)
         .select("doc_id", F.lit(1).alias("epoch"), "text")
         .unionByName(
@@ -4764,9 +4749,8 @@ def ext_dedup_index_compaction(
             "doc_id", "epoch", pmh_shingles(F.col("text")).alias("ts")
         )
         .transform(spread)
-        .localCheckpoint()
     )
-    entries = (
+    entries = pin(
         vers.select(
             "doc_id",
             "epoch",
@@ -4779,7 +4763,6 @@ def ext_dedup_index_compaction(
             F.col("bs.v1").alias("v1"),
             F.col("bs.v2").alias("v2"),
         )
-        .localCheckpoint()
     )
     # latest derives FROM entries: rename its key so the semi-style
     # join does not trip derived-dataframe attribute ambiguity
@@ -4831,9 +4814,9 @@ def ext_dedup_index_compaction(
             .distinct()
         )
 
-    compacted = compacted.localCheckpoint()
-    cp = pairs(compacted).localCheckpoint()
-    fp = pairs(fresh).localCheckpoint()
+    compacted = pin(compacted)
+    cp = pin(pairs(compacted))
+    fp = pin(pairs(fresh))
     # (r11 note: a single full-outer-join symmetric-difference pass was
     # measured ~0.4 s SLOWER than the two exceptAll counts here — the
     # checkpointed inputs are tiny, so two small jobs beat one wider
@@ -4895,7 +4878,7 @@ def _pmh_dup_graph_labels(spark, sf_dir, extra_cols):
     # scale- and core-count-adaptive (the driver benches at two core
     # counts); at real scale the scan already has many splits and one
     # narrow pre-expansion round-robin pass is noise.
-    d = (
+    d = pin(
         load_table(spark, sf_dir, "documents")
         .transform(spread)
         .select(
@@ -4904,7 +4887,6 @@ def _pmh_dup_graph_labels(spark, sf_dir, extra_cols):
             pmh_shingles(F.col("text")).alias("ts"),
         )
         .withColumn("bands", pmh_band_structs(F.col("ts")))
-        .localCheckpoint()
     )
     bands = d.select(
         "doc_id",
@@ -4933,12 +4915,11 @@ def _pmh_dup_graph_labels(spark, sf_dir, extra_cols):
     common = F.size(F.array_intersect(F.col("ta.ts"), F.col("tb.ts")))
     union = F.size(F.col("ta.ts")) + F.size(F.col("tb.ts")) - common
     dv = d.select("doc_id", "ts")
-    e0 = (
+    e0 = pin(
         cand.join(dv.alias("ta"), F.col("doc_a") == F.col("ta.doc_id"))
         .join(dv.alias("tb"), F.col("doc_b") == F.col("tb.doc_id"))
         .where(5 * common >= 3 * union)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
     )
     edges = e0.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -5407,11 +5388,10 @@ def ext_minhash_param_planner(
     # repartition first: the single local parquet split would run the
     # shingle transform AND the exploded per-(doc, seed, tok) md5 stage
     # below on one task (see the pmh helper's measured 11.3 s).
-    d = (
+    d = pin(
         load_table(spark, sf_dir, "documents")
         .transform(spread)
         .select("doc_id", pmh_shingles(F.col("text")).alias("ts"))
-        .localCheckpoint()
     )
     # r11 perf (guide §2.3/§2.4): the per-seed minimums are ROW-LOCAL
     # (array_min over the shingle array per seed — the pmh_band_structs
@@ -5436,13 +5416,12 @@ def ext_minhash_param_planner(
 
     # Docs with an empty shingle set had no exploded rows (no minimum)
     # in the old shape — exclude them identically.
-    sig = (
+    sig = pin(
         d.where(F.size("ts") > 0)
         .select(
             "doc_id",
             F.array(*[mh(s) for s in range(_PMH_SEEDS)]).alias("mhs"),
         )
-        .localCheckpoint()
     )
     cands = []
     for r in (1, 2, 3, 4):
@@ -5485,16 +5464,15 @@ def ext_minhash_param_planner(
     cand = cands[0]
     for c in cands[1:]:
         cand = cand.unionByName(c)
-    cand = cand.localCheckpoint()
+    cand = pin(cand)
     common = F.size(F.array_intersect(F.col("ta.ts"), F.col("tb.ts")))
     union = F.size(F.col("ta.ts")) + F.size(F.col("tb.ts")) - common
-    ver1 = (
+    ver1 = pin(
         cand.where(F.col("r") == 1)
         .join(d.alias("ta"), F.col("da") == F.col("ta.doc_id"))
         .join(d.alias("tb"), F.col("db") == F.col("tb.doc_id"))
         .where(5 * common >= 3 * union)
         .select("da", "db")
-        .localCheckpoint()
     )
     n1 = F.broadcast(ver1.agg(F.count("*").cast("bigint").alias("nv")))
     est = F.when(F.col("r_rows") == 1, F.lit(_mpp_est_micro(1)))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.queries._helpers import davg, seq1, spread
 from nibbler_spark.sources import load_table
 
@@ -202,17 +202,20 @@ def ext_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_ratio = n_stop.cast("double") / n_words
     long_ratio = n_long.cast("double") / n_words
     length_score = F.least(n_chars_t / F.lit(500.0), F.lit(1.0))
+    quality = (
+        F.lit(0.4) * length_score
+        + F.lit(0.4) * stop_ratio
+        + F.lit(0.2) * (F.lit(1.0) - long_ratio)
+    )
+    # Round the scaled double, as DuckDB's ROUND(x, 4) does; Spark's
+    # round(x, 4) rounds x's decimal string half-up, which lands on the
+    # other side for some docs (720 and 1747 at sf0.1).
     return d.select(
         "doc_id",
         stop_ratio.alias("stopword_ratio"),
         long_ratio.alias("long_word_ratio"),
         length_score.alias("length_score"),
-        F.round(
-            F.lit(0.4) * length_score
-            + F.lit(0.4) * stop_ratio
-            + F.lit(0.2) * (F.lit(1.0) - long_ratio),
-            4,
-        ).alias("quality"),
+        (F.round(quality * F.lit(10000.0)) / F.lit(10000.0)).alias("quality"),
     ).orderBy("doc_id")
 
 
@@ -1769,7 +1772,7 @@ def ext_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     islands = flagged.withColumn("island", F.sum("is_stop").over(win))
-    nonstop = islands.where(F.col("is_stop") == 0).localCheckpoint()
+    nonstop = pin(islands.where(F.col("is_stop") == 0))
     phrases = (
         nonstop.groupBy("doc_id", "island")
         .agg(
@@ -1884,7 +1887,7 @@ def ext_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
     )
     stop = ("the", "a", "of", "and", "to")
-    ns = toks.where(~F.col("w").isin(*stop)).localCheckpoint()
+    ns = pin(toks.where(~F.col("w").isin(*stop)))
     a, b = ns.alias("a"), ns.alias("b")
     e0 = (
         a.join(
@@ -1899,14 +1902,13 @@ def ext_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").cast("bigint").alias("wt"))
     )
-    edges = (
+    edges = pin(
         e0.select(F.col("u").alias("src"), F.col("v").alias("dst"), "wt")
         .unionAll(
             e0.select(
                 F.col("v").alias("src"), F.col("u").alias("dst"), "wt"
             )
         )
-        .localCheckpoint()
     )
     wdeg = edges.groupBy("src").agg(F.sum("wt").cast("bigint").alias("d"))
     scores = wdeg.select(
@@ -1921,12 +1923,11 @@ def ext_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("85 * (wt * s div d) div 100").alias("c"),
             )
         )
-        scores = (
+        scores = pin(
             contrib.groupBy("w")
             .agg(
                 (F.lit(150_000) + F.sum("c").cast("bigint")).alias("s")
             )
-            .localCheckpoint()
         )
     return (
         scores.orderBy(F.col("s").desc(), "w")
@@ -3190,11 +3191,10 @@ def ext_lang_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (marginal, lang totals, corpus total, terms) re-scans
     # the corpus — 5 scans of 100 TB instead of 1 scan + 4 passes over
     # a vocab-sized table. Plan-asserted in test_plans.py.
-    tf = (
+    tf = pin(
         d.select("lang", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("lang", "token")
         .agg(F.count("*").cast("bigint").alias("c_lw"))
-        .localCheckpoint()
     )
     cw = tf.groupBy("token").agg(F.sum("c_lw").cast("bigint").alias("c_w"))
     nl = tf.groupBy("lang").agg(
@@ -3305,7 +3305,7 @@ def ext_bigram_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFram
     # local scan — spread() widens it (conditional; no-op on wide scans).
     d = spread(load_table(spark, sf_dir, "documents"))
     tk = F.split("text", " ")
-    bg = (
+    bg = pin(
         d.select(
             "lang",
             F.explode(
@@ -3332,7 +3332,6 @@ def ext_bigram_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFram
         # materialized once: both the c1 rollup and the terms join
         # consume it, and Catalyst would otherwise re-scan the corpus
         # per consumer (see ext_lang_kl_divergence)
-        .localCheckpoint()
     )
     c1t = bg.groupBy("lang", "w1").agg(
         F.sum("c12").cast("bigint").alias("c1")
@@ -3631,7 +3630,7 @@ def ext_kn_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.lit(3), (F.col("doc_id") * 4 / (F.col("m") + 1)).cast("int"))
         .alias("epoch"),
     )
-    train_bg = (
+    train_bg = pin(
         tagged.where(F.col("epoch") <= 2)
         .select("lang", bigrams.alias("b"))
         .select(
@@ -3641,7 +3640,6 @@ def ext_kn_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("lang", "w1", "w2")
         .agg(F.count("*").cast("bigint").alias("c12"))
-        .localCheckpoint()
     )
     lhs = train_bg.groupBy("lang", "w1").agg(
         F.sum("c12").cast("bigint").alias("c1"),
@@ -3771,11 +3769,10 @@ def ext_jensen_shannon_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals broadcast (L rows). For L languages the matrix costs
     O(vocab * L), never O(corpus)."""
     d = load_table(spark, sf_dir, "documents")
-    tf = (
+    tf = pin(
         d.select("lang", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("lang", "token")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()
     )
     nl = tf.groupBy("lang").agg(F.sum("c").cast("bigint").alias("n"))
     src = tf.select(
@@ -4173,22 +4170,20 @@ def ext_symspell_typo_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("token").substr(F.lit(1).cast("int"), dpos - 1),
         F.col("token").substr(dpos + 1, F.length("token")),
     )
-    obs = toks.select(
+    obs = pin(toks.select(
         F.when(sel, corrupted).otherwise(F.col("token")).alias("tok"),
         F.when(sel, F.col("token")).alias("orig"),
-    ).localCheckpoint()
-    truth = (
+    ))
+    truth = pin(
         obs.where(
             F.col("orig").isNotNull() & (F.col("tok") != F.col("orig"))
         )
         .select(F.col("orig"), F.col("tok").alias("variant"))
         .distinct()
-        .localCheckpoint()
     )
-    tf = (
+    tf = pin(
         obs.groupBy(F.col("tok").alias("token"))
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()
     )
     tot = tf.agg(F.sum("c").cast("bigint").alias("t"))
     thr = F.greatest(F.lit(3).cast("bigint"), F.expr("t DIV 1000"))
@@ -4339,7 +4334,7 @@ def ext_bigram_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sep = chr(31)
     d = load_table(spark, sf_dir, "documents")
     tk = F.split("text", " ")
-    bg = (
+    bg = pin(
         d.select(
             F.explode(
                 F.when(
@@ -4361,14 +4356,12 @@ def ext_bigram_greedy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("w1", "w2")
         .agg(F.count("*").cast("bigint").alias("c12"))
-        .localCheckpoint()
     )
     w = Window.partitionBy("w1").orderBy(F.col("c12").desc(), "w2")
-    nxt = (
+    nxt = pin(
         bg.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") == 1)
         .select("w1", "w2", "c12")
-        .localCheckpoint()
     )
     seed = (
         bg.groupBy("w1")
@@ -4442,13 +4435,12 @@ def ext_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     a top-3-per-doc window (WindowGroupLimit). The idf table is the
     only broadcast-worthy side at 100 TB; nothing is corpus x vocab."""
     d = load_table(spark, sf_dir, "documents")
-    tf = (
+    tf = pin(
         d.select(
             "doc_id", F.explode(F.split("text", " ")).alias("term")
         )
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("bigint").alias("f"))
-        .localCheckpoint()
     )
     df = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
     nd = d.agg(F.count("*").cast("bigint").alias("nd"))
@@ -5642,7 +5634,7 @@ def ext_speculative_acceptance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     t = d.select("lang", toks.alias("t")).where(F.size("t") >= 2)
-    pairs = t.select(
+    pairs = pin(t.select(
         "lang",
         F.explode(
             F.transform(
@@ -5653,7 +5645,7 @@ def ext_speculative_acceptance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("p"),
-    ).select("lang", "p.prev", "p.nxt").localCheckpoint()
+    ).select("lang", "p.prev", "p.nxt"))
     big = pairs.groupBy("lang", "prev").agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -5888,7 +5880,7 @@ def ext_sampling_temperature_curve(
     output), then three combinable aggregates over the vocab table —
     the corpus is scanned once."""
     d = load_table(spark, sf_dir, "documents")
-    uni = (
+    uni = pin(
         d.select("lang", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("lang", "tok")
         .agg(
@@ -5896,7 +5888,6 @@ def ext_sampling_temperature_curve(
             .cast("bigint")
             .alias("lc")
         )
-        .localCheckpoint()
     )
     out = None
     for num, den in _TEMP_CURVE:

@@ -19,7 +19,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register, scratch_dir
+from nibbler_spark.queries import pin, register, scratch_dir
 from nibbler_spark.queries._helpers import spread
 from nibbler_spark.sources import load_table
 
@@ -224,10 +224,9 @@ def k07_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    e = load_table(spark, sf_dir, "embeddings").select(
+    e = pin(load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", array_to_vector("embedding").alias("vec")
-    )
-    e.cache()
+    ))
     key_arr = e.where(F.col("vec_id") == 0)
     lsh = BucketedRandomProjectionLSH(
         inputCol="vec", outputCol="hashes", bucketLength=2.0,
@@ -446,7 +445,7 @@ def ext_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialized once: feeds the signature stage AND both exact-verify
     # joins (three consumers of the same 64-double vectors)
-    aug = e.unionAll(planted).localCheckpoint()
+    aug = pin(e.unionAll(planted))
 
     # Signatures via ONE Arrow-vectorized numpy stage: all 144
     # hyperplane dot products per vector are a single (n, dim) x
@@ -485,9 +484,9 @@ def ext_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    sigs = aug.mapInPandas(
+    sigs = pin(aug.mapInPandas(
         signatures, "vec_id long, band_id int, band_val long"
-    ).localCheckpoint()
+    ))
     cand = (
         sigs.alias("sa")
         .join(
@@ -684,10 +683,9 @@ def ext_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("nrm")
         )
-        vdf = (
+        vdf = pin(
             w.crossJoin(F.broadcast(norm))
             .select("pos", (F.col("w") / F.col("nrm")).alias("v"))
-            .localCheckpoint()
         )
     return vdf.select(
         "pos", F.col("v").cast("decimal(18,12)").cast("double").alias("weight")
@@ -806,7 +804,7 @@ def ext_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for _ in range(2):
         a = assign(cent)
-        cent = (
+        cent = pin(
             ex.join(a, "vec_id")
             .groupBy("cid", "pos")
             .agg(
@@ -815,7 +813,6 @@ def ext_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.count("*")
                 ).alias("c")
             )
-            .localCheckpoint()
         )
     final = assign(cent)
     return final.select(
@@ -1047,14 +1044,14 @@ def ext_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    ex = e.select(
+    ex = pin(e.select(
         "vec_id", F.posexplode("embedding").alias("pos0", "xf")
     ).select(
         "vec_id",
         (F.col("pos0") + 1).alias("pos"),
         F.floor(F.col("pos0") / 8).cast("int").alias("sub"),
         F.col("xf").cast("double").alias("x"),
-    ).localCheckpoint()
+    ))
     c0 = ex.where(F.col("vec_id") < 4).select(
         "sub", F.col("vec_id").alias("cid"), "pos", F.col("x").alias("c")
     )
@@ -1083,7 +1080,7 @@ def ext_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     a1 = assign(c0, ex)
-    c1 = (
+    c1 = pin(
         ex.alias("e")
         .join(
             a1.alias("a"),
@@ -1097,7 +1094,6 @@ def ext_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count("*")
             ).alias("c")
         )
-        .localCheckpoint()
     )
     codes = assign(c1, ex.where(F.col("vec_id") >= 4)).select(
         "vec_id", "sub", F.col("cid").alias("code")
@@ -1287,7 +1283,7 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    ex = e.select(
+    ex = pin(e.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos0", "xf")
     ).select(
         "vec_id",
@@ -1295,8 +1291,8 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos0") + 1).alias("pos"),
         F.floor(F.col("pos0") / 8).cast("int").alias("sub"),
         F.col("xf").cast("double").alias("x"),
-    ).localCheckpoint()
-    cells = (
+    ))
+    cells = pin(
         ex.groupBy(F.col("label").alias("c_label"), F.col("pos").alias("c_pos"))
         .agg(
             (
@@ -1309,9 +1305,8 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count("*")
             ).alias("c")
         )
-        .localCheckpoint()
     )
-    resid = (
+    resid = pin(
         ex.join(
             cells,
             (F.col("c_label") == F.col("label"))
@@ -1324,7 +1319,6 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sub",
             (F.col("x") - F.col("c")).alias("r"),
         )
-        .localCheckpoint()
     )
     rc0 = resid.where(F.col("vec_id") < 4).select(
         "sub", F.col("vec_id").alias("cid"), "pos", F.col("r").alias("c")
@@ -1354,7 +1348,7 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ra1 = assign_res(rc0, resid)
-    rc1 = (
+    rc1 = pin(
         resid.alias("v")
         .join(
             ra1.alias("a"),
@@ -1368,13 +1362,12 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count("*")
             ).alias("c")
         )
-        .localCheckpoint()
     )
     codes = assign_res(rc1, resid.where(F.col("vec_id") != 0)).select(
         "vec_id", "label", "sub", F.col("cid").alias("code")
     )
     qx = ex.where(F.col("vec_id") == 0)
-    probes = (
+    probes = pin(
         qx.join(cells, F.col("c_pos") == F.col("pos"))
         .groupBy("c_label")
         .agg(
@@ -1389,7 +1382,6 @@ def ext_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("d", "c_label")
         .limit(2)
         .select(F.col("c_label").alias("p_label"))
-        .localCheckpoint()
     )
     qres = (
         qx.join(cells, F.col("c_pos") == F.col("pos"))
@@ -1692,7 +1684,7 @@ def _rq_errs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "pos", "x", (F.col("x") - F.col("c1")).alias("r"),
         "c1",
     )
-    resid = resid.localCheckpoint()
+    resid = pin(resid)
     cells = resid.groupBy("vec_id").agg(
         (
             4 * F.max(F.when((F.col("pos") == 1) & (F.col("r") >= 0), 1).otherwise(0))
@@ -1857,9 +1849,9 @@ def ext_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.floor((F.lit(0.5) - F.col("y")) * 1e10).cast("bigint").alias("rg"),
     )
-    w1 = grad_of(r1).select(
+    w1 = pin(grad_of(r1).select(
         "pos", (F.lit(0.0) - F.lit(1.0) * F.col("grad")).alias("w")
-    ).localCheckpoint()
+    ))
     # Round 2: margin under w1, gridded sigmoid residual.
     m2 = (
         ex.join(F.broadcast(w1), "pos")
@@ -2103,10 +2095,9 @@ def ext_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast assignment runs 64 fold expressions per vector on aug's
     # partitioning, which locally is the scan's 1-2 splits (no-op at
     # real scale).
-    aug = (
+    aug = pin(
         base.unionAll(planted)
         .transform(spread)
-        .localCheckpoint()
     )
 
     cent = base.where(F.col("vec_id") < _SD_K).select(
@@ -2133,7 +2124,7 @@ def ext_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") == 1)
         .select("vec_id", F.col("cid").cast("bigint").alias("cluster_id"))
     )
-    assigned = (
+    assigned = pin(
         pick.join(aug, "vec_id")
         .select(
             "vec_id",
@@ -2141,7 +2132,6 @@ def ext_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e",
             F.sqrt(dec_dot(F.col("e"), F.col("e"))).alias("vnorm"),
         )
-        .localCheckpoint()
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     dropped = (
@@ -2236,7 +2226,7 @@ def ext_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is deterministic), so the full ranking hash-matches with raw
     doubles, no rounding. Per-query argmax is a q_id-partitioned
     row_number."""
-    base = load_table(spark, sf_dir, "embeddings").select(
+    base = pin(load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         "embedding",
@@ -2247,7 +2237,7 @@ def ext_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("embedding")[i] >= 0, F.lit(1 << i)).otherwise(0)
             for i in range(8)
         ).alias("bucket"),
-    ).localCheckpoint()
+    ))
     q = base.where(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),
@@ -2367,8 +2357,8 @@ def ext_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scan the embeddings parquet for every commit (2 batches x
     # |labels| scans); the commit sequence itself (the declared
     # append-only maintenance story) is unchanged.
-    base = e.where(F.col("vec_id") % 5 != 0).localCheckpoint()
-    new = e.where(F.col("vec_id") % 5 == 0).localCheckpoint()
+    base = pin(e.where(F.col("vec_id") % 5 != 0))
+    new = pin(e.where(F.col("vec_id") % 5 == 0))
     table = os.path.join(scratch_dir("ivfi"), "table")
     files: list[str] = []
     for batch in (base, new):
@@ -2790,11 +2780,10 @@ def ext_dim_truncation_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id", "d").orderBy(
         F.desc("cos"), F.col("cand_id")
     )
-    topk = (
+    topk = pin(
         per_d.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 10)
         .select("q_id", "cand_id", "d")
-        .localCheckpoint()
     )
     truth = topk.where(F.col("d") == 64).select("q_id", "cand_id")
     hits = (
@@ -3393,7 +3382,7 @@ def ext_kmeanspp_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    c0 = (
+    c0 = pin(
         e.orderBy("vec_id")
         .limit(1)
         .select(
@@ -3401,7 +3390,6 @@ def ext_kmeanspp_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("c_id"),
             F.col("embedding").alias("c_emb"),
         )
-        .localCheckpoint()
     )
     centers = [c0]
     picked = [
@@ -3460,14 +3448,13 @@ def ext_kmeanspp_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.key").alias("key"),
             (-F.col("b.nv")).alias("vec_id"),
         )
-        cr = (
+        cr = pin(
             best.join(e, "vec_id")
             .select(
                 F.lit(r).cast("bigint").alias("c_round"),
                 F.col("vec_id").alias("c_id"),
                 F.col("embedding").alias("c_emb"),
             )
-            .localCheckpoint()
         )
         centers.append(cr)
         picked.append(
@@ -3681,7 +3668,7 @@ def ext_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pipeline hash-matches."""
     from pyspark.sql import Window
 
-    xp = (
+    xp = pin(
         margin_candidate_frame(spark, sf_dir)
         .select(
             "src_id",
@@ -3690,7 +3677,6 @@ def ext_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cg"),
         )
-        .localCheckpoint()
     )
     wa = Window.partitionBy("src_id").orderBy(
         F.col("cg").desc(), "tgt_id"
@@ -4171,7 +4157,7 @@ def ext_binary_embedding_recall(
         F.col("h2").alias("p2"),
         F.col("embedding").alias("pe"),
     )
-    ham = (
+    ham = pin(
         packed.crossJoin(F.broadcast(probes))
         .where(F.col("probe_id") != F.col("vec_id"))
         .select(
@@ -4185,7 +4171,6 @@ def ext_binary_embedding_recall(
             .cast("bigint")
             .alias("cg"),
         )
-        .localCheckpoint()
     )
     w_bq = Window.partitionBy("probe_id").orderBy("hd", "vec_id")
     bq = (
@@ -4515,10 +4500,9 @@ def ext_srp_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint folds and the exact-cosine probe product both consume
     # t row-locally, and the local embeddings scan is ONE split (no-op
     # at real scale where the scan is already wide).
-    t = (
+    t = pin(
         e.select("vec_id", "embedding", fv.alias("f"))
         .transform(spread)
-        .localCheckpoint()
     )
 
     def bit(i: int):
@@ -4530,7 +4514,7 @@ def ext_srp_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0))
 
-    bands = t.select(
+    bands = pin(t.select(
         "vec_id",
         *[
             F.struct(
@@ -4547,7 +4531,7 @@ def ext_srp_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array(*[F.col(f"s{b}") for b in range(_SRP_BANDS)])
         ).alias("s"),
-    ).select("vec_id", "s.band_id", "s.bv").localCheckpoint()
+    ).select("vec_id", "s.band_id", "s.bv"))
     probes = t.where(F.col("vec_id") % md == 0).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe")
     )
@@ -4555,7 +4539,7 @@ def ext_srp_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes.select("probe_id"),
         bands["vec_id"] == F.col("probe_id"),
     ).select("probe_id", F.col("band_id").alias("pb_id"), F.col("bv").alias("pbv"))
-    cand = (
+    cand = pin(
         pbands.join(
             bands,
             (F.col("band_id") == F.col("pb_id"))
@@ -4564,7 +4548,6 @@ def ext_srp_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != F.col("probe_id"))
         .select("probe_id", "vec_id")
         .distinct()
-        .localCheckpoint()
     )
     scored = (
         t.crossJoin(F.broadcast(probes))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.queries._helpers import dsum, spread, sql_dsum
 from nibbler_spark.sources import load_table
 
@@ -1209,7 +1209,7 @@ def ext_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("user_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    walk = (
+    walk = pin(
         t.join(F.broadcast(offs), "bkt")
         .select(
             "user_id",
@@ -1219,7 +1219,6 @@ def ext_sprt_sequential_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             )).alias("rn"),
             (F.col("ollr") + F.sum("t").over(win)).alias("llr_q"),
         )
-        .localCheckpoint()
     )
     crossed = (
         walk.where(
@@ -1776,7 +1775,7 @@ def ext_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ≤ 11 distinct discounts: tiny-aggregate windows
     w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    pre = pts.select(
+    pre = pin(pts.select(
         "x",
         "n",
         "s",
@@ -1784,7 +1783,7 @@ def ext_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("s").over(w) - F.col("s")).alias("ps"),
         F.sum("n").over(w).alias("cn"),
         F.sum("s").over(w).alias("cs"),
-    ).localCheckpoint()
+    ))
     i = pre.select(F.col("x").alias("xi"), "n", "s")
     j = pre.select(F.col("x").alias("xj"), F.col("pn").alias("jpn"), F.col("ps").alias("jps"))
     k = pre.select(F.col("x").alias("xk"), F.col("cn").alias("kcn"), F.col("cs").alias("kcs"))
@@ -3246,11 +3245,11 @@ def ext_adaboost_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact passes total (round-1 hist, round-2 hist over tagged rows,
     ensemble eval), each O(rows) with kilobyte reductions."""
     li = load_table(spark, sf_dir, "lineitem")
-    rows_f = li.select(
+    rows_f = pin(li.select(
         F.col("l_quantity").cast("int").alias("qty"),
         F.round(F.col("l_discount") * 100).cast("int").alias("disc_cents"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("pos"),
-    ).localCheckpoint()
+    ))
 
     def fit_stump(df, wcol):
         longs = []
@@ -3293,15 +3292,14 @@ def ext_adaboost_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nt").alias("den_w"),
             F.when(err_a <= err_b, 1).otherwise(0).alias("left_pos"),
         )
-        return (
+        return pin(
             scored.orderBy("err_w", "feature", "v")
             .limit(1)
-            .localCheckpoint()
         )
 
     one = rows_f.withColumn("w1", F.lit(1))
     best1 = fit_stump(one, "w1")
-    tagged = rows_f.crossJoin(F.broadcast(best1)).select(
+    tagged = pin(rows_f.crossJoin(F.broadcast(best1)).select(
         "qty",
         "disc_cents",
         "pos",
@@ -3315,13 +3313,13 @@ def ext_adaboost_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(1 - F.col("left_pos"))
         .alias("h1"),
-    ).localCheckpoint()
-    m1 = tagged.agg(
+    ))
+    m1 = pin(tagged.agg(
         F.sum(F.when(F.col("h1") != F.col("pos"), 1).otherwise(0))
         .cast("bigint")
         .alias("m"),
         F.count("*").cast("bigint").alias("n"),
-    ).localCheckpoint()
+    ))
     two = tagged.crossJoin(F.broadcast(m1)).withColumn(
         "w2",
         F.when(F.col("h1") != F.col("pos"), F.col("n") - F.col("m"))
@@ -3342,10 +3340,9 @@ def ext_adaboost_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         * 5e5
     ).cast("bigint")
-    alpha = (
+    alpha = pin(
         m1.crossJoin(F.broadcast(best2.select("den_w", "err_w")))
         .select(a1.alias("a1"), a2.alias("a2"))
-        .localCheckpoint()
     )
     b2r = best2.select(
         F.col("feature").alias("f2"),
@@ -3663,13 +3660,13 @@ def ext_successive_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type", F.col("user_id") % 4).orderBy(
         "ts", "event_id"
     )
-    ranked = e.select(
+    ranked = pin(e.select(
         F.concat_ws(
             ":", "event_type", (F.col("user_id") % 4).cast("string")
         ).alias("arm"),
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
         F.row_number().over(w).alias("rk"),
-    ).localCheckpoint()
+    ))
     survivors = ranked.select("arm").distinct()
     out = None
     for i, n in enumerate(_SH_BUDGETS, start=1):
@@ -3682,7 +3679,7 @@ def ext_successive_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").cast("bigint").alias("sum_cents"),
             )
         )
-        r = a.select(
+        r = pin(a.select(
             "arm",
             "n_used",
             "sum_cents",
@@ -3693,7 +3690,7 @@ def ext_successive_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(
                 Window.orderBy(F.col("mean_nano").desc(), "arm")
             ),
-        ).withColumn("k", F.count("*").over(Window.partitionBy())).cache()
+        ).withColumn("k", F.count("*").over(Window.partitionBy())))
         row = r.select(
             F.lit(i).cast("bigint").alias("round"),
             "arm",
@@ -3703,10 +3700,9 @@ def ext_successive_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("arank") * 2 <= F.col("k") + 1).alias("survived"),
         )
         out = row if out is None else out.unionByName(row)
-        survivors = (
+        survivors = pin(
             r.where(F.col("arank") * 2 <= F.col("k") + 1)
             .select("arm")
-            .localCheckpoint()
         )
     return out.orderBy("round", "arm")
 
@@ -3887,13 +3883,13 @@ def ext_best_of_n_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_all = Window.partitionBy("lang")
-    dist = dist0.select(
+    dist = pin(dist0.select(
         "lang",
         "q",
         "cnt",
         F.sum("cnt").over(w_cum).alias("cf"),
         F.sum("cnt").over(w_all).alias("nd"),
-    ).localCheckpoint()
+    ))
 
     def pn(col, n):
         p = col
@@ -4066,7 +4062,7 @@ def ext_elo_arena_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sa"),
         )
     )
-    sides = (
+    sides = pin(
         m.select("ep", F.col("pa").alias("p"), F.col("pb").alias("o"), F.col("sa").alias("s"))
         .unionByName(
             m.select(
@@ -4076,7 +4072,6 @@ def ext_elo_arena_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.lit(1000000) - F.col("sa")).cast("bigint").alias("s"),
             )
         )
-        .localCheckpoint()
     )
     ratings = {
         r["source"]: 1_500_000_000
@@ -4787,13 +4782,12 @@ def ext_quality_distillation(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.size(toks_arr) <= 90)
         & (15 * stop >= F.size(toks_arr))
     ).cast("int")
-    lab = (
+    lab = pin(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", toks_arr.alias("toks"), teacher.alias("y"))
-        .localCheckpoint()
     )
     tk = lab.select("doc_id", "y", F.explode("toks").alias("w"))
-    wc = (
+    wc = pin(
         tk.groupBy("w")
         .agg(
             F.sum("y").cast("bigint").alias("pc"),
@@ -4803,7 +4797,6 @@ def ext_quality_distillation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "weight_g",
             _gridln(F.col("pc") + 1) - _gridln(F.col("nc") + 1),
         )
-        .localCheckpoint()
     )
     tot = F.broadcast(
         wc.agg(

@@ -25,7 +25,7 @@ from nibbler_spark.operators.multimodal import (
     frame_sample_batches,
     resize_batches,
 )
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.queries._helpers import spread
 from nibbler_spark.sources import load_table
 
@@ -100,13 +100,13 @@ def ext_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     decoded = decode_batches(attach_synthetic_payload(d))
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return decoded.select(
+    return pin(decoded.select(
         "doc_id",
         "mime",
         "n_bytes",
         F.col("width").cast("int").alias("width"),
         F.col("height").cast("int").alias("height"),
-    ).localCheckpoint().orderBy("doc_id")
+    )).orderBy("doc_id")
 
 
 @register(
@@ -149,7 +149,7 @@ def ext_image_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     # The chained-map/no-shuffle plan property lives on the
     # pre-checkpoint frame (tests/test_plans.py asserts it there).
-    return bmp_pipeline(spark, sf_dir).localCheckpoint().orderBy("doc_id")
+    return pin(bmp_pipeline(spark, sf_dir)).orderBy("doc_id")
 
 
 def bmp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,7 +255,7 @@ def ext_image_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -318,7 +318,7 @@ def ext_image_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -394,7 +394,7 @@ def ext_image_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -448,7 +448,7 @@ def ext_image_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -480,7 +480,7 @@ def ext_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     decoded = decode_batches(attach_synthetic_payload(d))
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return resize_batches(decoded).localCheckpoint().orderBy("doc_id")
+    return pin(resize_batches(decoded)).orderBy("doc_id")
 
 
 @register(
@@ -707,7 +707,7 @@ def ext_audio_decode_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return decode_audio_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -776,7 +776,7 @@ def ext_audio_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return decode_audio_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -846,7 +846,7 @@ def ext_video_decode_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return decode_video_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_video_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -974,11 +974,11 @@ def ext_image_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return encoded.mapInPandas(
+    return pin(encoded.mapInPandas(
         decode,
         "doc_id long, fmt string, width int, height int, n_pixels long, "
         "r_sum long, g_sum long, b_sum long, pixel_sum long",
-    ).localCheckpoint().orderBy("doc_id")
+    )).orderBy("doc_id")
 
 
 @register(
@@ -1046,7 +1046,7 @@ def ext_image_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -1147,9 +1147,9 @@ def ext_audio_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return encoded.mapInPandas(
+    return pin(encoded.mapInPandas(
         decode, "doc_id long, n_samples long, within_bound boolean"
-    ).localCheckpoint().orderBy("doc_id")
+    )).orderBy("doc_id")
 
 
 @register(
@@ -1323,7 +1323,7 @@ def ext_image_decode_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -1570,9 +1570,9 @@ def ext_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["domain", "path", "text"]
             )
 
-    fetched = blobs.mapInPandas(
+    fetched = pin(blobs.mapInPandas(
         extract, "domain string, path string, text string"
-    ).localCheckpoint()
+    ))
     # doc_id is recoverable from the deterministic mapping only via the
     # keeper join below — recompute it from path+domain is ambiguous, so
     # carry it INSIDE the funnel by re-deriving: kept rows join back to
@@ -1814,7 +1814,7 @@ def ext_image_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -1885,7 +1885,7 @@ def ext_audio_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return decode_audio_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -2639,11 +2639,11 @@ def ext_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame(out)
 
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return d.mapInPandas(
+    return pin(d.mapInPandas(
         run,
         "doc_id long, n_frames int, total_energy long, "
         "max_frame_energy long, zero_crossings long",
-    ).localCheckpoint().orderBy("doc_id")
+    )).orderBy("doc_id")
 
 
 @register(
@@ -2726,7 +2726,7 @@ def ext_image_decode_jpeg_progressive(
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -2804,7 +2804,7 @@ def ext_image_decode_jpeg_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
-    return decode_image_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_image_batches(encoded)).orderBy("doc_id")
 
 
 @register(
@@ -2880,11 +2880,11 @@ def ext_video_decode_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield _pd.DataFrame(out)
 
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return d.mapInPandas(
+    return pin(d.mapInPandas(
         run,
         "doc_id long, fmt string, n_frames int, frame_bytes long, "
         "frame_sum long",
-    ).localCheckpoint().orderBy("doc_id")
+    )).orderBy("doc_id")
 
 
 @register(
@@ -2967,7 +2967,7 @@ def ext_audio_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     encoded = d.mapInPandas(encode, "doc_id long, payload binary")
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return decode_audio_batches(encoded).localCheckpoint().orderBy("doc_id")
+    return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
 
 @register(

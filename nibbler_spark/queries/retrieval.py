@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.sources import load_table
 
 # Fixed retrieval query for BM25 — terms from the synthetic vocabulary.
@@ -896,7 +896,7 @@ def ext_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("term").cast("bigint").alias("score_cov"),
         )
     )
-    top = (
+    top = pin(
         hits.join(d, "doc_id")
         .select(
             "doc_id",
@@ -907,7 +907,6 @@ def ext_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("score_tf").desc(), "doc_id")
         .limit(50)
-        .localCheckpoint()
     )
     a = top.select(
         F.col("doc_id").alias("i"),
@@ -1114,7 +1113,7 @@ def nsw_assignment(spark: SparkSession, sf_dir: str):
             ),
         )
     )
-    assigned = (
+    assigned = pin(
         e.crossJoin(seed_row)
         .select(
             "vec_id",
@@ -1122,7 +1121,6 @@ def nsw_assignment(spark: SparkSession, sf_dir: str):
             ranked_cells[0]["cell"].alias("cell"),
             ranked_cells[1]["cell"].alias("cell2"),
         )
-        .localCheckpoint()
     )
     return assigned, n, md
 
@@ -1239,7 +1237,7 @@ def nsw_round_candidates(g: DataFrame) -> DataFrame:
         .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     und = (
-        g.select("src", "dst").unionByName(rev).distinct().localCheckpoint()
+        pin(g.select("src", "dst").unionByName(rev).distinct())
     )
     non = (
         und.alias("u1")
@@ -1261,14 +1259,13 @@ def nsw_descent_edges_inline(spark: SparkSession, sf_dir: str):
     assigned, n, md = nsw_assignment(spark, sf_dir)
     cg = _nsw_cg()
     embs = _nsw_embs(assigned)
-    g = _nsw_topk(nsw_seed_candidates(assigned), embs, cg).localCheckpoint()
+    g = pin(_nsw_topk(nsw_seed_candidates(assigned), embs, cg))
     for _ in range(_NSW_ROUNDS):
-        g = _nsw_topk(nsw_round_candidates(g), embs, cg).localCheckpoint()
-    edges = (
+        g = pin(_nsw_topk(nsw_round_candidates(g), embs, cg))
+    edges = pin(
         g.select("src", "dst")
         .unionByName(_nsw_long_edges(assigned))
         .distinct()
-        .localCheckpoint()
     )
     return edges, assigned, n, md
 
@@ -1313,10 +1310,10 @@ def nsw_descent_edges(spark: SparkSession, sf_dir: str):
     with open(_os.path.join(root, "meta.json")) as fh:
         n = _json.load(fh)["n"]
     md = max(1, n // 16)
-    edges = spark.read.parquet(_os.path.join(root, "edges")).localCheckpoint()
-    assigned = spark.read.parquet(
+    edges = pin(spark.read.parquet(_os.path.join(root, "edges")))
+    assigned = pin(spark.read.parquet(
         _os.path.join(root, "assigned")
-    ).localCheckpoint()
+    ))
     return edges, assigned, n, md
 
 
@@ -1328,13 +1325,13 @@ def nsw_build_candidate_volume(spark: SparkSession, sf_dir: str) -> int:
     assigned, _, _ = nsw_assignment(spark, sf_dir)
     cg = _nsw_cg()
     embs = _nsw_embs(assigned)
-    seed = nsw_seed_candidates(assigned).localCheckpoint()
+    seed = pin(nsw_seed_candidates(assigned))
     total = seed.count()
-    g = _nsw_topk(seed, embs, cg).localCheckpoint()
+    g = pin(_nsw_topk(seed, embs, cg))
     for _ in range(_NSW_ROUNDS):
-        cand = nsw_round_candidates(g).localCheckpoint()
+        cand = pin(nsw_round_candidates(g))
         total += cand.count()
-        g = _nsw_topk(cand, embs, cg).localCheckpoint()
+        g = pin(_nsw_topk(cand, embs, cg))
     return total
 
 
@@ -1353,7 +1350,7 @@ def _greedy_walk(
             )
             .where(F.col("cand") != F.col("qid"))
         )
-        state = (
+        state = pin(
             cands.join(embs, cands["cand"] == embs["cand_id"])
             .select(
                 "qid",
@@ -1371,7 +1368,6 @@ def _greedy_walk(
             .select(
                 "qid", F.col("m.qe").alias("qe"), F.col("m.cand").alias("cur")
             )
-            .localCheckpoint()
         )
     return state
 
@@ -1809,13 +1805,12 @@ def ext_hnsw_layered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = math.isqrt(max(n, 1))
     ncells = r if r * r == max(n, 1) else r + 1
     n4 = int(math.ceil(math.sqrt(math.sqrt(max(n, 1)))))
-    seeds = (
+    seeds = pin(
         e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(ncells)
         .select(
             F.col("vec_id").alias("cell"), F.col("embedding").alias("se")
         )
-        .localCheckpoint()
     )
     l2 = (
         e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -1823,7 +1818,7 @@ def ext_hnsw_layered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("node"), F.col("embedding").alias("se"))
     )
     w_l1 = Window.partitionBy("src").orderBy(F.col("s").desc(), "dst")
-    l1g = (
+    l1g = pin(
         seeds.alias("a")
         .join(seeds.alias("b"), F.col("a.cell") != F.col("b.cell"))
         .select(
@@ -1834,7 +1829,6 @@ def ext_hnsw_layered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.row_number().over(w_l1))
         .where(F.col("rk") <= _NSW_KNN)
         .select("src", "dst")
-        .localCheckpoint()
     )
     q = e.where(F.col("vec_id") % md == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
@@ -1903,7 +1897,7 @@ def ext_hnsw_layered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(cg(F.col("qe"), F.col("cand_emb"))).alias("best_cg")
         )
     )
-    per = (
+    per = pin(
         lay_f.join(base_f, F.col("bqid") == F.col("qid"))
         .join(exact, F.col("xqid") == F.col("qid"))
         .select(
@@ -1920,7 +1914,6 @@ def ext_hnsw_layered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("l0_regret_nano"),
         )
-        .localCheckpoint()
     )
     tot = per.agg(
         (F.sum("regret_nano") <= F.sum("l0_regret_nano")).alias(

@@ -13,7 +13,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register, scratch_dir
+from nibbler_spark.queries import pin, register, scratch_dir
 from nibbler_spark.queries._helpers import dec, dsum, spread, sql_dsum
 from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table, table_path
@@ -934,9 +934,9 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .where(F.levenshtein("na", "nb") <= 2)
     )
-    edges = pairs.unionAll(
+    edges = pin(pairs.unionAll(
         pairs.select(F.col("nb").alias("na"), F.col("na").alias("nb"))
-    ).localCheckpoint()
+    ))
     labels = names.select(
         F.col("p_name").alias("node"), F.col("p_name").alias("label")
     )
@@ -946,7 +946,7 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(edges["na"].alias("n"))
             .agg(F.min("label").alias("nb_label"))
         )
-        labels = (
+        labels = pin(
             labels.join(nb_min, labels["node"] == nb_min["n"], "left")
             .select(
                 "node",
@@ -954,7 +954,6 @@ def ext_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "label", F.coalesce("nb_label", "label")
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
     p = load_table(spark, sf_dir, "part")
     return (
@@ -1116,14 +1115,13 @@ def ext_grid_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass below used to recompute the md5 coordinates four times.
     # Repartition first so the md5 projection spreads (locally the
     # events scan is one split; no-op at real scale).
-    cells = (
+    cells = pin(
         pts.select(
             "event_id", "xi", "yi",
             F.expr("xi div 500").alias("cx"),
             F.expr("yi div 500").alias("cy"),
         )
         .transform(spread)
-        .localCheckpoint()
     )
     offs = F.array(
         *[
@@ -1157,11 +1155,10 @@ def ext_grid_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast count, once under the sort). One linear write of 24-byte
     # pair rows replaces a second 9x-fanout shuffle join — the exact
     # count forces a full pass over the pairs either way (guide §2.4).
-    pairs = (
+    pairs = pin(
         probe.join(build, ["jx", "jy"])
         .where((F.col("a_id") < F.col("b_id")) & (d2 <= 250000))
         .select("a_id", "b_id", d2.alias("d2"))
-        .localCheckpoint()
     )
     tot = pairs.agg(F.count("*").cast("bigint").alias("n_pairs_total"))
     return (
@@ -2018,12 +2015,12 @@ def ext_hilbert_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         start=F.lit(0),
     )
-    curve = spine.select(
+    curve = pin(spine.select(
         "cell_x",
         "cell_y",
         d.cast("bigint").alias("hd"),
         zd.cast("bigint").alias("zd"),
-    ).localCheckpoint()
+    ))
     w = Window.orderBy("hd")
     walk = curve.select(
         "cell_x",
@@ -2251,7 +2248,7 @@ def _dbscan_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
         return expr
 
     planted = F.col("event_id") % 67 < 2
-    return e.select(
+    return pin(e.select(
         "event_id",
         F.when(planted, center(cx_centers) + h("x") % 300)
         .otherwise(h("x") % 100000)
@@ -2259,7 +2256,7 @@ def _dbscan_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(planted, center(cy_centers) + h("y") % 300)
         .otherwise(h("y") % 100000)
         .alias("yi"),
-    ).localCheckpoint()
+    ))
 
 
 def _dbscan_capped(
@@ -2328,7 +2325,7 @@ def _dbscan_capped(
             + F.expr(f"yi div {ws2}")
         ).alias("mid"),
     )
-    subagg = (
+    subagg = pin(
         sub.groupBy("scx", "scy")
         .agg(
             F.count("*").alias("cnt"),
@@ -2337,7 +2334,6 @@ def _dbscan_capped(
             F.min("yi").alias("miny"),
             F.max("yi").alias("maxy"),
         )
-        .localCheckpoint()
     )
     dense_cells = subagg.where(F.col("cnt") >= 4).select(
         (F.col("scx") * F.lit(1_000_000) + F.col("scy")).alias("cid"),
@@ -2348,10 +2344,9 @@ def _dbscan_capped(
         "miny",
         "maxy",
     )
-    dmem = (
+    dmem = pin(
         sub.join(dense_cells.select("scx", "scy", "cid"), ["scx", "scy"])
         .select("node", "xi", "yi", "cid", "mid")
-        .localCheckpoint()
     )
     sparse = sub.join(
         dense_cells.select("scx", "scy"), ["scx", "scy"], "left_anti"
@@ -2385,16 +2380,15 @@ def _dbscan_capped(
     d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
         F.col("ay") - F.col("by")
     ) * (F.col("ay") - F.col("by"))
-    pr = (
+    pr = pin(
         probe.join(build, ["jx", "jy"])
         .where(d2 <= F.lit(eps2))
         .select("a_id", "b_id")
-        .localCheckpoint()
     )
     deg = pr.groupBy(F.col("a_id").alias("node")).agg(
         F.count("*").alias("n_nbr")
     )
-    score = deg.where(F.col("n_nbr") >= 4).select("node").localCheckpoint()
+    score = pin(deg.where(F.col("n_nbr") >= 4).select("node"))
     core_nodes = dmem.select("node").unionByName(score)
 
     # Dense-cell adjacency via a (2K+1)^2 sub-cell stencil + bbox
@@ -2440,7 +2434,7 @@ def _dbscan_capped(
     my = F.greatest(
         F.col("bmaxy") - F.col("aminy"), F.col("amaxy") - F.col("bminy")
     )
-    cand = (
+    cand = pin(
         da.join(db, ["jx", "jy"])
         .where(F.col("cid_a") != F.col("cid_b"))
         .select(
@@ -2450,7 +2444,6 @@ def _dbscan_capped(
             (mx * mx + my * my).alias("maxd2"),
         )
         .where(F.col("mind2") <= F.lit(eps2))
-        .localCheckpoint()
     )
     cert = cand.where(F.col("maxd2") <= F.lit(eps2)).select("cid_a", "cid_b")
     amb = cand.where(F.col("maxd2") > F.lit(eps2)).select("cid_a", "cid_b")
@@ -2463,7 +2456,7 @@ def _dbscan_capped(
     # contributions; only the residual ambiguous RING of micro pairs
     # pays point-level work (measured: adaptive sf1 wall 209s -> the
     # ladder row, e_dd from ~60M rows to the ring).
-    m2 = (
+    m2 = pin(
         dmem.groupBy("cid", "mid")
         .agg(
             F.min("xi").alias("minx"),
@@ -2471,7 +2464,6 @@ def _dbscan_capped(
             F.min("yi").alias("miny"),
             F.max("yi").alias("maxy"),
         )
-        .localCheckpoint()
     )
     # The micro-cell grid (side ws2) does NOT align with the dense-cell
     # grid (side ws), so one micro cell can straddle two dense cells;
@@ -2497,7 +2489,7 @@ def _dbscan_capped(
         F.col("miny").alias("bminy"),
         F.col("maxy").alias("bmaxy"),
     )
-    cand2 = (
+    cand2 = pin(
         amb.join(m2a, "cid_a")
         .join(m2b, "cid_b")
         .select(
@@ -2509,7 +2501,6 @@ def _dbscan_capped(
             (mx * mx + my * my).alias("maxd2"),
         )
         .where(F.col("mind2") <= F.lit(eps2))
-        .localCheckpoint()
     )
     cert2 = cand2.where(F.col("maxd2") <= F.lit(eps2)).select(
         "cid_a", "mid_a", "cid_b", "mid_b"
@@ -2531,12 +2522,11 @@ def _dbscan_capped(
         F.col("xi").alias("bx"),
         F.col("yi").alias("by"),
     )
-    e_dd = (
+    e_dd = pin(
         amb2.join(ma, ["cid_a", "mid_a"])
         .join(mb, ["cid_b", "mid_b"])
         .where(d2 <= F.lit(eps2))
         .select(F.col("na").alias("src"), F.col("nb").alias("dst"))
-        .localCheckpoint()
     )
     pr_core = pr.join(
         score.select(F.col("node").alias("a_id")), "a_id", "left_semi"
@@ -2547,7 +2537,7 @@ def _dbscan_capped(
     # sparse endpoints) and duplicate-free by construction, so it stays
     # OUT of the distinct and feeds its own per-round min — the 62M-row
     # global distinct + pinned cache was the sf1 OOM.
-    e_pt = (
+    e_pt = pin(
         pr_core.select(
             F.col("a_id").alias("src"), F.col("b_id").alias("dst")
         )
@@ -2557,7 +2547,6 @@ def _dbscan_capped(
             )
         )
         .distinct()
-        .localCheckpoint()
     )
 
     labels = core_nodes.select("node", F.col("node").alias("label"))
@@ -2631,7 +2620,7 @@ def _dbscan_capped(
             .groupBy("node")
             .agg(F.min("m").alias("plabel"))
         )
-        labels = (
+        labels = pin(
             labels.join(pm, "node", "left")
             .select(
                 "node",
@@ -2640,7 +2629,6 @@ def _dbscan_capped(
                     F.coalesce(F.col("plabel"), F.col("label")),
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
     border = (
         pr.join(
@@ -2825,18 +2813,17 @@ def ext_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("bigint") % 100
-    edges = (
+    edges = pin(
         u.join(v, F.expr("v div 25") == F.expr("u div 25") + 1)
         .where(gate)
         .select("u", "v", w.alias("w"))
-        .localCheckpoint()
     )
     labels = nodes.where(F.col("n") < 25).select(
         F.col("n").alias("node"),
         F.lit(0).cast("bigint").alias("dist"),
         F.lit(1).cast("bigint").alias("paths"),
     )
-    labels = labels.localCheckpoint()
+    labels = pin(labels)
     all_l = labels
     for _ in range(5):
         prev = labels.select(
@@ -2849,7 +2836,7 @@ def ext_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("v").alias("d_node"))
             .agg(F.max(F.col("p_dist") + F.col("w")).alias("d_dist"))
         )
-        labels = (
+        labels = pin(
             dk.join(edges, F.col("v") == F.col("d_node"))
             .join(prev, F.col("p_node") == F.col("u"))
             .where(F.col("p_dist") + F.col("w") == F.col("d_dist"))
@@ -2858,7 +2845,6 @@ def ext_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("d_dist").alias("dist"),
             )
             .agg(F.sum("p_paths").cast("bigint").alias("paths"))
-            .localCheckpoint()
         )
         all_l = all_l.unionByName(labels)
     w_layer = Window.partitionBy(F.expr("node div 25"))
@@ -3350,11 +3336,11 @@ def ext_rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the assignment step ext_webdataset_shards' layout and the
     snapshot bucketing both assume."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    assign = d.select(
+    assign = pin(d.select(
         "doc_id",
         _hrw_pick_spark(8).alias("s8"),
         _hrw_pick_spark(9).alias("s9"),
-    ).localCheckpoint()
+    ))
     flags = F.broadcast(
         assign.agg(
             F.every(

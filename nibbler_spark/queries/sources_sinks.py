@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register, scratch_dir
+from nibbler_spark.queries import pin, register, scratch_dir
 from nibbler_spark.queries._helpers import spread
 from nibbler_spark.sources import load_table
 
@@ -273,7 +273,9 @@ def a15_cached_relation_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-consumer DAGs (use MEMORY_AND_DISK; partitions spill). The
     grand total is derived FROM the cached aggregate (sum of identical
     doubles, deterministic order via sort inside the reduce — here via a
-    second exact-decimal pass to stay order-free)."""
+    second exact-decimal pass to stay order-free). The result is pinned
+    and the cache released before returning, so no cached plan outlives
+    the call."""
     o = load_table(spark, sf_dir, "orders")
     from nibbler_spark.queries._helpers import dec
 
@@ -288,19 +290,21 @@ def a15_cached_relation_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand = o.agg(
         F.sum(dec("o_totalprice")).cast("double").alias("grand")
     )
-    return (
-        agg.crossJoin(F.broadcast(grand))
-        .select(
-            "o_orderstatus",
-            "n",
-            "total",
-            (F.col("total") / F.col("grand"))
-            .cast("decimal(18,10)")
-            .cast("double")
-            .alias("share"),
-        )
-        .orderBy("o_orderstatus")
-    )
+    try:
+        return pin(
+            agg.crossJoin(F.broadcast(grand))
+            .select(
+                "o_orderstatus",
+                "n",
+                "total",
+                (F.col("total") / F.col("grand"))
+                .cast("decimal(18,10)")
+                .cast("double")
+                .alias("share"),
+            )
+        ).orderBy("o_orderstatus")
+    finally:
+        agg.unpersist()
 
 
 @register(
@@ -991,11 +995,11 @@ def a31_msgpack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # localCheckpoint: the final sort's range-sampling job would run
     # BOTH chained msgpack Python stages twice (j04 A/B precedent).
-    return packed.mapInPandas(
+    return pin(packed.mapInPandas(
         dec,
         "o_orderkey long, o_orderpriority string, o_totalprice double, "
         "even_key boolean, opt_val bigint, pri_code string, meta_m long",
-    ).localCheckpoint().orderBy("o_orderkey")
+    )).orderBy("o_orderkey")
 
 
 @register(
@@ -1148,7 +1152,7 @@ def a34_msgpack_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert back.rdd.getNumPartitions() == 4  # one partition per file
     # localCheckpoint: the final sort's range-sampling job would run
     # the Python-datasource decode twice (j04 A/B precedent).
-    return back.localCheckpoint().orderBy("o_orderkey")
+    return pin(back).orderBy("o_orderkey")
 
 
 @register(
@@ -1300,11 +1304,11 @@ def a36_protobuf_wire_roundtrip(
 
     # localCheckpoint: the final sort's range-sampling job would run
     # both protobuf Python stages twice (j04 A/B precedent).
-    return packed.mapInPandas(
+    return pin(packed.mapInPandas(
         dec,
         "o_orderkey long, o_orderstatus string, o_totalprice double, "
         "signed_val long, flag boolean",
-    ).localCheckpoint().orderBy("o_orderkey")
+    )).orderBy("o_orderkey")
 
 
 @register(

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nibbler_spark.operators.merge import merge_upsert
-from nibbler_spark.queries import register, scratch_dir
+from nibbler_spark.queries import pin, register, scratch_dir
 from nibbler_spark.sources import load_table, register_temp_views
 
 
@@ -912,7 +912,7 @@ def sql07_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     5.5 s → measured-below noop median. The recursive CTE itself (the
     declared operator) is unchanged."""
     register_temp_views(spark, sf_dir)
-    seq = spark.sql(
+    seq = pin(spark.sql(
         """
         SELECT o_custkey,
                CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS cents,
@@ -921,7 +921,7 @@ def sql07_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
                ) AS rn
         FROM orders WHERE o_custkey % 97 = 0
         """
-    ).localCheckpoint()
+    ))
     seq.createOrReplaceTempView("sql07_seq_mat")
     return spark.sql(
         """
@@ -1342,9 +1342,9 @@ def ext_incremental_mv_maintenance(
             F.sum(cents).cast("bigint").alias("cents"),
         )
 
-    mv0 = rollup(
+    mv0 = pin(rollup(
         spark.read.parquet(*[os.path.join(table, p) for p in base_files])
-    ).localCheckpoint()
+    ))
 
     updates = o.where(F.col("o_orderkey") % 8 == 0).select(
         "o_orderkey",
@@ -3272,15 +3272,14 @@ def ext_mv_query_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderpriority", "o_custkey", "o_totalprice"
     )
-    mv = (
+    mv = pin(
         o.groupBy("o_orderstatus", "o_orderpriority")
         .agg(
             F.count("*").cast("bigint").alias("p_count"),
             F.sum(F.floor(F.col("o_totalprice") * 100).cast("bigint"))
             .cast("bigint")
             .alias("p_cents"),
-        )
-        .localCheckpoint()  # materialized: the fact scan happened ONCE here
+        )  # materialized: the fact scan happened ONCE here
     )
     mv_keys = {"o_orderstatus", "o_orderpriority"}
 

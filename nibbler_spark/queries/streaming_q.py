@@ -21,9 +21,11 @@ checkpoint that it owns and removes after the last pass.
 its ingest copy. The few passes that restart outside it (i54's join,
 a24, i17's kill-restart, the incremental rollup) hand ``_drain`` a
 checkpoint of their own. The base dirs of a query's source and sink files come
-from ``scratch_dir``: the registry wrapper keeps them while the returned
-DataFrame may read them lazily and removes them when the thread's next
-outermost registered call starts (or at interpreter exit).
+from ``scratch_dir`` and its local checkpoints from ``pin``: the registry
+wrapper keeps them while the returned DataFrame may read them lazily and
+releases them when the thread's next outermost registered call starts
+(dirs also at interpreter exit). A ``foreachBatch`` body runs on a py4j
+callback thread, outside that scope, so it releases what it persists.
 
 Scale notes: all stateful ops are keyed (user_id / window / event_id) so
 state partitions horizontally; watermarks bound state size; the memory
@@ -42,7 +44,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nibbler_spark.queries import register, scratch_dir
+from nibbler_spark.queries import pin, register, scratch_dir
 from nibbler_spark.queries._helpers import dsum, sql_dsum
 from nibbler_spark.queries.llm_dedup import _PMH_ORACLE
 from nibbler_spark.session import scoped_conf
@@ -2956,14 +2958,13 @@ def ext_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four-file layout, same stats, same pruning behavior), and the
     # three log files are written concurrently.  The remaining wall is
     # the per-epoch merge floor, documented in BASELINE.md.
-    base = (
+    base = pin(
         load_table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("k"),
             F.floor(F.col("c_acctbal") * 100).cast("bigint").alias("cents"),
             F.col("c_mktsegment").alias("seg"),
         )
-        .localCheckpoint()
     )
     write_snapshot(
         base.repartitionByRange(4, (F.col("k") % 4).asc()), table
@@ -3855,8 +3856,8 @@ def i32_kappa_reprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # v1 stays intact for rollback
     assert read_snapshot(spark, tbl_a).count() == a_rows_before
-    pin = catalog_read(catalog)["metrics"]
-    resolved = read_snapshot(spark, pin["dir"], pin["snapshot_id"])
+    current = catalog_read(catalog)["metrics"]
+    resolved = read_snapshot(spark, current["dir"], current["snapshot_id"])
     return (
         resolved.groupBy("event_type")
         .agg(
@@ -4012,19 +4013,24 @@ def i33_stream_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").cast("bigint").alias("n_events"),
                 F.sum("c").cast("bigint").alias("cents"),
             )
+            .persist()
         )
-        rollup = rollup.localCheckpoint()
-        for g in [
-            r["grp"] for r in rollup.select("grp").distinct().collect()
-        ]:
-            replace_where_snapshot(
-                spark,
-                table,
-                "grp",
-                "=",
-                int(g),
-                rollup.where(F.col("grp") == g),
-            )
+        # A foreachBatch body runs on a py4j callback thread, outside the
+        # registry call's scope, so it releases what it persisted itself.
+        try:
+            for g in [
+                r["grp"] for r in rollup.select("grp").distinct().collect()
+            ]:
+                replace_where_snapshot(
+                    spark,
+                    table,
+                    "grp",
+                    "=",
+                    int(g),
+                    rollup.where(F.col("grp") == g),
+                )
+        finally:
+            rollup.unpersist()
 
     # Pin through termination: backfill's rollup aggregate runs as a
     # BATCH job per epoch inside foreachBatch (conf read at execution).
@@ -4863,11 +4869,10 @@ def i42_stream_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole corpus's shingle computation onto one core (measured 3.5 s
     # of the r5 13.1 s row — the verify side, not the stream, was the
     # single-threaded stage).
-    t = (
+    t = pin(
         load_table(spark, sf_dir, "documents")
         .repartition(16)
         .select("doc_id", pmh_shingles(F.col("text")).alias("ts"))
-        .localCheckpoint()
     )
     n_common = F.size(F.array_intersect(F.col("ta.ts"), F.col("tb.ts")))
     n_union = F.size(F.col("ta.ts")) + F.size(F.col("tb.ts")) - n_common
@@ -7129,7 +7134,7 @@ def i55_stream_ddsketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs = spark.range(4).select(F.col("id").cast("bigint").alias("epoch"))
     # cumulative bucket counts at each epoch = the latest state emission
     # at or before it (counts are cumulative in state)
-    cum = (
+    cum = pin(
         em.select(
             F.col("idx").alias("ei"),
             F.col("epoch").alias("eep"),
@@ -7139,7 +7144,6 @@ def i55_stream_ddsketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("eep") <= F.col("epoch"))
         .groupBy(F.col("ei").alias("idx"), "epoch")
         .agg(F.max_by("ev", "eep").cast("bigint").alias("c"))
-        .localCheckpoint()
     )
     stats = cum.groupBy("epoch").agg(
         F.sum("c").cast("bigint").alias("n_values"),

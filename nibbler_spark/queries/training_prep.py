@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from nibbler_spark.queries._helpers import seq1, spread
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.sources import load_table
 
 # Context length for sequence packing (tokens per training sequence).
@@ -922,12 +922,11 @@ def ext_bpe_merge_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     a driver loop extends to k merges. Integer weights ⇒ exact.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = (
+    words = pin(
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
         .where(F.length("tok") >= 2)
-        .localCheckpoint()
     )
     pairs1 = words.select(
         F.explode(
@@ -1076,12 +1075,11 @@ def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int):
     """Shared BPE training loop: returns (merge rules, final symbol
     table). See ext_bpe_train_8rounds for the algorithm notes."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
+    words = pin(
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
         .where(F.length("tok") >= 2)
-        .localCheckpoint()
     )
     cur = words.select(F.split("tok", "").alias("ms"), "c")
     sep2 = _BPE_SEP + _BPE_SEP
@@ -1118,9 +1116,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int):
             F.lit(_BPE_SEP + a + _BPE_SEP + _BPE_SEP + b + _BPE_SEP),
             F.lit(_BPE_SEP + a + b + _BPE_SEP),
         )
-        cur = cur.select(
+        cur = pin(cur.select(
             F.split(F.btrim(merged, F.lit(_BPE_SEP)), sep2).alias("ms"), "c"
-        ).localCheckpoint()
+        ))
     return rules, cur
 
 
@@ -1800,7 +1798,7 @@ def _bpe_symbolized_words(docs: DataFrame) -> DataFrame:
         F.sequence(F.lit(1), F.length("tok")),
         lambda i: F.substring(F.col("tok"), i, F.lit(1)),
     )
-    return (
+    return pin(
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .where(F.length("tok") >= 1)
         .groupBy("tok")
@@ -1812,7 +1810,6 @@ def _bpe_symbolized_words(docs: DataFrame) -> DataFrame:
             ).alias("sym"),
             "c",
         )
-        .localCheckpoint()
     )
 
 
@@ -1848,13 +1845,13 @@ def _bpe_merge_loop(words: DataFrame, n_merges: int):
         trajectory.append((step, top["pair"], top["w"]))
         pat = F.lit(" " + top["pair"] + " ")
         rep = F.lit(" " + top["pair"].replace(" ", "") + " ")
-        words = words.select(
+        words = pin(words.select(
             "tok",
             F.replace(F.replace(F.col("sym"), pat, rep), pat, rep).alias(
                 "sym"
             ),
             "c",
-        ).localCheckpoint()
+        ))
     return words, trajectory
 
 
@@ -2307,12 +2304,11 @@ def ext_unigram_lm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.  Oracle: the identical DP unrolled as 12 generated CTE
     stages.""".replace("{maxlen}", str(_UNI_MAXLEN))
     docs = load_table(spark, sf_dir, "documents")
-    words = (
+    words = pin(
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("c"))
         .where(F.length("tok").between(1, _UNI_MAXLEN))
-        .localCheckpoint()
     )
     segs, pieces = _unigram_viterbi_segs(words)
     newcnt = (
@@ -2340,7 +2336,7 @@ def _unigram_viterbi_segs(words: DataFrame):
     LONGER piece).  words: (tok, c) with length(tok) <= _UNI_MAXLEN.
     Returns (segs (tok, seg, c), pieces (p, cnt))."""
     pos = F.explode(F.sequence(F.lit(1), F.length("tok")))
-    pieces = (
+    pieces = pin(
         words.select("tok", "c", pos.alias("i"))
         .select(
             "tok", "c", "i", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("l")
@@ -2351,7 +2347,6 @@ def _unigram_viterbi_segs(words: DataFrame):
         )
         .groupBy("p")
         .agg(F.sum("c").cast("bigint").alias("cnt"))
-        .localCheckpoint()
     )
     gridln = lambda c: F.floor(F.log(c) * F.lit(1e9)).cast("bigint")
     gn = pieces.agg(gridln(F.sum("cnt")).alias("gn"))
@@ -2783,7 +2778,7 @@ def ext_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         # single-file corpus -> one input split: widen BEFORE the
         # 200x shingle explode so the build uses the cluster, not one
         # task (the k05/i42 lesson; at 100 TB the scan is already wide)
-        d.select("doc_id", "text")
+        pin(d.select("doc_id", "text")
         .transform(spread)
         .select(
             "doc_id",
@@ -2803,8 +2798,7 @@ def ext_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.expr("CAST(array() AS ARRAY<BIGINT>)"))
             ).alias("sh"),
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct())
     )
     uni = ds.agg(F.countDistinct("sh").cast("bigint").alias("u"))
     selected = []  # list of (round, 1-row DataFrame with doc_id, gain)
@@ -2823,7 +2817,7 @@ def ext_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         gains = pool.groupBy("doc_id").agg(
             F.count("*").cast("bigint").alias("gain")
         )
-        best = (
+        best = pin(
             gains.agg(
                 F.max(
                     F.struct(
@@ -2836,17 +2830,15 @@ def ext_submodular_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (-F.col("b.nd")).alias("doc_id"),
                 F.col("b.gain").alias("gain"),
             )
-            .localCheckpoint()
         )
         selected.append(best)
         sel_union = selected[0].select("doc_id")
         for s in selected[1:]:
             sel_union = sel_union.unionByName(s.select("doc_id"))
-        covered = (
+        covered = pin(
             ds.join(F.broadcast(sel_union), "doc_id", "left_semi")
             .select("sh")
             .distinct()
-            .localCheckpoint()
         )
     out = selected[0]
     for s in selected[1:]:
@@ -3766,15 +3758,14 @@ def ext_iterative_quality_pruning(
     from nibbler_spark.queries._helpers import two_phase_rank
 
     d = load_table(spark, sf_dir, "documents")
-    tok = (
+    tok = pin(
         d.select("doc_id", "text")
         .transform(spread)
         .select(
             "doc_id", F.explode(F.split("text", " ")).alias("w")
         )
-        .localCheckpoint()
     )
-    remaining = tok.select("doc_id").distinct().localCheckpoint()
+    remaining = pin(tok.select("doc_id").distinct())
     out_rows = []
     for i in range(1, 4):
         tok_r = tok.join(remaining, "doc_id", "left_semi")
@@ -3806,9 +3797,9 @@ def ext_iterative_quality_pruning(
             [F.col("nll"), F.col("doc_id")],
             "rk",
         )
-        kept = ranked.where(
+        kept = pin(ranked.where(
             F.col("rk") <= F.expr("(n + 1) DIV 2")
-        ).localCheckpoint()
+        ))
         row = (
             kept.agg(
                 F.max("n").alias("n_in"),
@@ -3828,8 +3819,8 @@ def ext_iterative_quality_pruning(
         # references the un-materialized `tot` aggregate, so the final
         # 3-row union used to re-run one corpus-scale token aggregation
         # per round when the trajectory was finally evaluated.
-        out_rows.append(row.localCheckpoint())
-        remaining = kept.select("doc_id").localCheckpoint()
+        out_rows.append(pin(row))
+        remaining = pin(kept.select("doc_id"))
     out = out_rows[0]
     for r in out_rows[1:]:
         out = out.unionByName(r)
@@ -4605,21 +4596,19 @@ def ext_tokenizer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single broadcast rows; the md5 identity aggregates vocab-scale
     strings per language."""
     docs = load_table(spark, sf_dir, "documents")
-    wt = (
+    wt = pin(
         docs.select("lang", F.explode(F.split("text", " ")).alias("word"))
         .where(F.length("word") >= 1)
         .groupBy("lang", "word")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()
     )
-    gw = (
+    gw = pin(
         wt.groupBy("word")
         .agg(F.sum("c").cast("bigint").alias("gc"))
-        .localCheckpoint()
     )
 
     # --- BPE: learn 6 merges on the global word table, decode = strip
-    words0 = gw.select(
+    words0 = pin(gw.select(
         F.col("word").alias("tok"),
         F.concat(
             F.lit(" "),
@@ -4633,7 +4622,7 @@ def ext_tokenizer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" "),
         ).alias("sym"),
         F.col("gc").alias("c"),
-    ).localCheckpoint()
+    ))
     bpe_final, _ = _bpe_merge_loop(words0, _BPE_MERGES)
     bpe = bpe_final.select(
         F.col("tok").alias("word"),
@@ -4737,7 +4726,7 @@ def ext_tokenizer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     uw = gw.where(
         F.length("word").between(1, _UNI_MAXLEN)
     ).select(F.col("word").alias("tok"), F.col("gc").alias("c"))
-    usegs, _ = _unigram_viterbi_segs(uw.localCheckpoint())
+    usegs, _ = _unigram_viterbi_segs(pin(uw))
     uni = usegs.select(
         F.col("tok").alias("word"),
         F.size(F.split("seg", " ")).cast("bigint").alias("uni_pieces"),
@@ -4864,14 +4853,14 @@ def ext_preference_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_bot = Window.partitionBy("lang", "source").orderBy(
         F.col("q").asc(), "doc_id"
     )
-    ranked = scored.select(
+    ranked = pin(scored.select(
         "doc_id",
         "lang",
         "source",
         "q",
         F.row_number().over(w_top).alias("rtop"),
         F.row_number().over(w_bot).alias("rbot"),
-    ).localCheckpoint()
+    ))
     chosen = ranked.where(F.col("rtop") <= 2).select(
         "lang", "source",
         F.col("doc_id").alias("chosen_id"), F.col("q").alias("qc"),
@@ -4999,11 +4988,10 @@ def ext_wordpiece_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     table against broadcast inventories — vocabulary-scale per point,
     so the curve costs 4x a segmentation, not 4x a corpus scan."""
     d = load_table(spark, sf_dir, "documents")
-    wt = (
+    wt = pin(
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint()
     )
 
     def step(acc, inv):
@@ -5548,7 +5536,7 @@ def ext_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer from the aggregate the query already builds.
     dfw = m.groupBy("w").agg(F.count("*").cast("bigint").alias("dfw"))
     gridln = lambda c: F.floor(F.log(c) * F.lit(1e9)).cast("bigint")
-    rar = (
+    rar = pin(
         m.join(dfw, "w")
         .crossJoin(nd)
         .groupBy("doc_id", "lang")
@@ -5560,7 +5548,6 @@ def ext_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV SUM(mw) AS BIGINT)"
             ).alias("rarity_g"),
         )
-        .localCheckpoint()
     )
     n_docs = rar.count()
     staged = two_phase_rank(

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from nibbler_spark.queries import register
+from nibbler_spark.queries import pin, register
 from nibbler_spark.session import scoped_conf
 from nibbler_spark.sources import load_table, register_temp_views
 
@@ -40,9 +40,9 @@ def j01_scalar_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sampling job re-executes the stage above the last exchange, so
     # without the cut the Python UDF stage runs TWICE (guide §4/§5;
     # r11 A/B on the sibling j04: 10.4 s -> 5.0 s).
-    return li.select(
+    return pin(li.select(
         "l_orderkey", "l_linenumber", f("l_quantity").alias("qty_udf")
-    ).localCheckpoint().orderBy("l_orderkey", "l_linenumber")
+    )).orderBy("l_orderkey", "l_linenumber")
 
 
 @register(
@@ -123,9 +123,8 @@ def j04_apply_in_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint: the final sort's range-sampling job would run
     # the grouped-map Python stage twice (A/B: 10.4 s -> 5.0 s).
     return (
-        e.groupBy("user_id")
-        .applyInPandas(zscore, "event_id long, user_id long, zscore double")
-        .localCheckpoint()
+        pin(e.groupBy("user_id")
+        .applyInPandas(zscore, "event_id long, user_id long, zscore double"))
         .orderBy("event_id")
     )
 
@@ -318,13 +317,12 @@ def j09_cogrouped_apply_in_pandas(
     # localCheckpoint: the final sort's range-sampling job would run
     # the cogrouped Python stage twice (j04 A/B precedent).
     return (
-        o.groupBy("user_id")
+        pin(o.groupBy("user_id")
         .cogroup(e.groupBy("user_id"))
         .applyInPandas(
             reconcile,
             "user_id long, n_orders long, spend double, n_events long",
-        )
-        .localCheckpoint()
+        ))
         .orderBy("user_id")
     )
 
@@ -525,7 +523,7 @@ def j12_udtf_table_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range partitioner's sampling job re-executes the stage above the
     # last exchange, so the one-statement form streamed all 600 k rows
     # through the Python UDTF TWICE for a 3-row result (guide §5).
-    summary = spark.sql(
+    summary = pin(spark.sql(
         """
         SELECT * FROM flag_summary(
           TABLE(
@@ -537,7 +535,7 @@ def j12_udtf_table_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
           ORDER BY (l_orderkey, l_linenumber)
         )
         """
-    ).localCheckpoint()
+    ))
     return summary.orderBy("l_returnflag")
 
 

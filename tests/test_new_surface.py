@@ -95,7 +95,7 @@ def test_scripting_thresholds_strictly_increase(spark, sf_dir):
 
 
 def test_concurrent_queries_share_one_session(spark, sf_dir):
-    """Durability: six registry queries running CONCURRENTLY on one
+    """Durability: seven registry queries running CONCURRENTLY on one
     SparkSession (the scheduler-fairness / thread-safety contract a
     multi-tenant driver relies on) must produce exactly the rows they
     produce sequentially."""
@@ -111,6 +111,7 @@ def test_concurrent_queries_share_one_session(spark, sf_dir):
         "e05_lag_lead",
         "g04_intersect",
         "ext_seasonal_decompose",
+        "sql07_recursive_cte",  # pins: no thread releases another's
     ]
     sequential = {
         n: [tuple(r) for r in specs[n].spark(spark, sf_dir).collect()]

@@ -1,9 +1,10 @@
-"""Ownership of a registry query's scratch dirs.
+"""Ownership of a registry query's scratch dirs and pinned blocks.
 
-Queries make their temp dirs with ``queries.scratch_dir``. The registry
-wrapper keeps a thread's dirs while the DataFrame its outermost call
-returned may still read them, removes them when that thread starts its
-next outermost registered call, and removes whatever is left at
+Queries make their temp dirs with ``queries.scratch_dir`` and their
+local checkpoints with ``queries.pin``. The registry wrapper keeps a
+thread's dirs and pins while the DataFrame its outermost call returned
+may still read them, releases them when that thread starts its next
+outermost registered call, and removes whatever dirs are left at
 interpreter exit. A registered query called inside another joins the
 outer call's scope.
 """
@@ -22,7 +23,8 @@ import pytest
 
 import nibbler_spark.queries as registry
 from nibbler_spark.oracle import compare
-from nibbler_spark.queries import load_all, register, scratch_dir
+from nibbler_spark.queries import load_all, pin, register, scratch_dir
+from nibbler_spark.session import scoped_conf
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 
@@ -42,6 +44,14 @@ def _run(spark, sf_dir, duck, name: str):
     spec = load_all()[name]
     df = spec.spark(spark, sf_dir)
     return lambda: compare(name, df, duck, spec.oracle)
+
+
+def _pinned(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_dirs_live_until_the_next_registry_call(spark, sf_dir, duck, tmp_root):
@@ -130,6 +140,77 @@ spark.stop()
     assert glob.glob(str(root / "nibbler-*")) == []
 
 
+@pytest.mark.parametrize("name", ["sql07_recursive_cte", "k05_minhash_lsh"])
+def test_the_next_call_releases_what_a_call_pinned_or_cached(
+    spark, sf_dir, duck, name
+):
+    before = _pinned(spark)
+    check = _run(spark, sf_dir, duck, name)
+    pinned = _pinned(spark) - before
+    assert pinned
+    report = check()  # the result still reads its pinned blocks
+    assert report.ok, str(report)
+
+    load_all()["q1_pricing_summary"].spark(spark, sf_dir)
+    assert not pinned & _pinned(spark)
+    assert _cache_is_empty(spark)
+
+
+def test_nested_call_keeps_the_outer_calls_pins(
+    spark, sf_dir, duck, monkeypatch
+):
+    """A pin the outer ``ext_dedup_keep_best`` made before its two
+    nested registered calls must survive both, as must the nested
+    ``ext_dedup_clusters`` pins its result reads."""
+    import nibbler_spark.queries.llm_dedup as llm_dedup
+
+    made = []
+    clusters = llm_dedup.ext_dedup_clusters
+
+    def clusters_after_a_pin(spark, sf_dir):
+        made.append(pin(spark.range(3)))
+        return clusters(spark, sf_dir)
+
+    monkeypatch.setattr(llm_dedup, "ext_dedup_clusters", clusters_after_a_pin)
+    check = _run(spark, sf_dir, duck, "ext_dedup_keep_best")
+    assert len(made) == 1 and made[0].count() == 3
+    report = check()
+    assert report.ok, str(report)
+
+
+def test_a_call_on_another_thread_keeps_this_threads_pins(
+    spark, sf_dir, duck
+):
+    before = _pinned(spark)
+    check = _run(spark, sf_dir, duck, "sql07_recursive_cte")
+    mine = _pinned(spark) - before
+    reports: list = []
+
+    def two_calls():  # the second releases the first's pins
+        for _ in range(2):
+            reports.append(_run(spark, sf_dir, duck, "sql07_recursive_cte")())
+
+    t = threading.Thread(target=two_calls)
+    t.start()
+    t.join()
+    assert len(reports) == 2 and all(r.ok for r in reports), str(reports)
+    assert mine and mine <= _pinned(spark)
+    report = check()
+    assert report.ok, str(report)
+
+
+def test_fuzzer_cases_release_their_dirs_like_registered_calls(
+    spark, sf_dir, tmp_root
+):
+    from tools.fuzz_differential import run
+
+    # run() shares this session; keep its partition count to the run
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        assert run(3, sf_dir, "stream_keyed_fold") == 0
+    assert len(_entries(tmp_root, "fold")) <= 1
+    assert len(_entries(tmp_root, "fuzzfold")) <= 1
+
+
 def test_register_rejects_an_unknown_category():
     with pytest.raises(ValueError, match="category"):
         register("never_registered", survey_id="X", category="llm-vectors")
@@ -153,3 +234,22 @@ def test_mkdtemp_only_inside_scratch_dir():
         ln for ln in reversed(src[:line_no]) if ln.startswith("def ")
     )
     assert name == "__init__.py" and owner.startswith("def scratch_dir(")
+
+
+def test_local_checkpoint_only_inside_pin():
+    """Source guard: every local checkpoint in the package and the
+    fuzzer is a ``pin``, so a registered call owns its blocks."""
+    pkg = Path(registry.__file__).parent.parent
+    fuzzer = pkg.parent / "tools" / "fuzz_differential.py"
+    owners = set()
+    for path in [*sorted(pkg.rglob("*.py")), fuzzer]:
+        src = path.read_text().splitlines()
+        for i, line in enumerate(src):
+            if "localCheckpoint(" in line:
+                owner = next(
+                    ln for ln in reversed(src[: i + 1]) if ln.startswith("def ")
+                )
+                owners.add((path.relative_to(pkg.parent).as_posix(), owner))
+    assert owners == {
+        ("nibbler_spark/queries/__init__.py", "def pin(df: DataFrame) -> DataFrame:")
+    }

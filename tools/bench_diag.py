@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Diagnostic bench — reproduces bench.py's headline loop (same order,
-same timed action, same debris cleanup) while probing session state
+same timed action) while probing session state
 BETWEEN rows, to attribute the 32-core mid-bench slowdown cluster
 (positions 17-21: kcore / cdc / a41 / i42, r11 VERDICT item #1).
 
@@ -36,7 +36,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from bench import HEADLINE, RUNS, SF_DIR, drop_debris  # noqa: E402
+from bench import HEADLINE, RUNS, SF_DIR  # noqa: E402
 
 
 def _py_worker_count() -> int:
@@ -99,10 +99,6 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=RUNS)
     ap.add_argument("--rows", type=str, default="")
     ap.add_argument("--out", type=str, default="/tmp/bench_diag.jsonl")
-    ap.add_argument(
-        "--gc-between", action="store_true",
-        help="call System.gc() in the between-rows cleanup (A/B knob)",
-    )
     args = ap.parse_args()
 
     from nibbler_spark.queries import load_all
@@ -124,9 +120,6 @@ def main() -> None:
     out = open(args.out, "w")
     for i, name in enumerate(rows):
         spec = specs[name]
-        drop_debris(spark)
-        if args.gc_between:
-            spark.sparkContext._jvm.System.gc()
         pre_workers = _py_worker_count()
         pre_bytes, pre_files = _local_dir_stats(spark)
         spec.spark(spark, SF_DIR).collect()  # warm-up (untimed)

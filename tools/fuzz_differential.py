@@ -393,19 +393,19 @@ def _pack_densify_trajectory_case(rng: random.Random):
     def build(spark, sf_dir):
         from pyspark.sql import functions as F
 
+        from nibbler_spark.queries import pin
         from nibbler_spark.queries._helpers import two_phase_rank
         from nibbler_spark.sources import load_table
 
         W = 2**20
         d = load_table(spark, sf_dir, "documents")
-        tk = (
+        tk = pin(
             d.select(
                 "doc_id",
                 F.slice(F.split("text", " "), 1, cap).alias("t"),
             )
             .where(F.size("t") >= 1)
             .repartition(8)
-            .localCheckpoint()
         )
         n_docs = tk.count()
         assert cap * n_docs < W, "fuzz corpus exceeds the W=2^20 bound"
@@ -424,7 +424,7 @@ def _pack_densify_trajectory_case(rng: random.Random):
                 ).alias("vmap")
             )
         )
-        arr = (
+        arr = pin(
             tk.crossJoin(vmap_row)
             .select(
                 "doc_id",
@@ -433,7 +433,6 @@ def _pack_densify_trajectory_case(rng: random.Random):
                     lambda tok: F.try_element_at(F.col("vmap"), tok),
                 ).alias("ranks"),
             )
-            .localCheckpoint()
         )
         covered = 1
         traj = None
@@ -466,14 +465,13 @@ def _pack_densify_trajectory_case(rng: random.Random):
             rk = two_phase_rank(
                 dv, F.expr(f"rc DIV {64 * W ** (m - 1)}"), [F.col("rc")], "nr"
             )
-            narrow = (
+            narrow = pin(
                 ex.join(rk, "rc")
                 .select(
                     "doc_id",
                     (F.col("pos0") + 1).alias("pos"),
                     F.col("nr").cast("bigint").alias("r"),
                 )
-                .localCheckpoint()
             )
             covered = min(covered * m, cap)
             point = narrow.agg(
@@ -487,7 +485,7 @@ def _pack_densify_trajectory_case(rng: random.Random):
             )
             traj = point if traj is None else traj.unionByName(point)
             if covered < cap:
-                arr = (
+                arr = pin(
                     narrow.groupBy("doc_id")
                     .agg(
                         F.transform(
@@ -502,7 +500,6 @@ def _pack_densify_trajectory_case(rng: random.Random):
                             lambda s: s["r"],
                         ).alias("ranks")
                     )
-                    .localCheckpoint()
                 )
         return traj.orderBy("covered")
 
@@ -539,6 +536,7 @@ def _greedy_coverage_case(rng: random.Random):
     def build(spark, sf_dir):
         from pyspark.sql import functions as F
 
+        from nibbler_spark.queries import pin
         from nibbler_spark.sources import load_table
 
         d = load_table(spark, sf_dir, "documents").where(
@@ -549,7 +547,7 @@ def _greedy_coverage_case(rng: random.Random):
             " ",
             *[F.element_at(toks, i + j) for j in range(w)],
         )
-        ds = (
+        ds = pin(
             d.select("doc_id", "text")
             .repartition(8)
             .select(
@@ -565,7 +563,6 @@ def _greedy_coverage_case(rng: random.Random):
                 ).alias("sh"),
             )
             .distinct()
-            .localCheckpoint()
         )
         selected = []
         covered = None
@@ -578,7 +575,7 @@ def _greedy_coverage_case(rng: random.Random):
             gains = pool.groupBy("doc_id").agg(
                 F.count("*").cast("bigint").alias("gain")
             )
-            best = (
+            best = pin(
                 gains.agg(
                     F.max(
                         F.struct(
@@ -591,17 +588,15 @@ def _greedy_coverage_case(rng: random.Random):
                     (-F.col("b.nd")).alias("doc_id"),
                     F.col("b.gain").alias("gain"),
                 )
-                .localCheckpoint()
             )
             selected.append(best)
             sel = selected[0].select("doc_id")
             for s in selected[1:]:
                 sel = sel.unionByName(s.select("doc_id"))
-            covered = (
+            covered = pin(
                 ds.join(F.broadcast(sel), "doc_id", "left_semi")
                 .select("sh")
                 .distinct()
-                .localCheckpoint()
             )
         out = selected[0]
         for s in selected[1:]:
@@ -895,6 +890,7 @@ def run(n: int, sf_dir: str, family: str | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from nibbler_spark.oracle import compare, make_duckdb
+    from nibbler_spark.queries import call_scope
     from nibbler_spark.sources import register_temp_views
 
     spark = (
@@ -922,7 +918,10 @@ def run(n: int, sf_dir: str, family: str | None = None) -> int:
             sql = payload
             mk = lambda: spark.sql(sql)  # noqa: E731
         try:
-            rep = compare(f"fuzz-{seed}", mk(), con, sql)
+            # each case owns its scratch dirs and pins like a registered
+            # call: the next case releases them
+            with call_scope():
+                rep = compare(f"fuzz-{seed}", mk(), con, sql)
             ok = rep.ok
         except Exception as e:  # engine-level failure = a finding too
             print(f"fuzz-{seed}: EXC {type(e).__name__}: {e}\n{sql}\n")

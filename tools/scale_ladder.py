@@ -457,15 +457,11 @@ def main() -> None:
     specs = load_all()
     spark = get_spark(app_name="nibbler-scale-ladder")
 
-    from bench import drop_debris
     from nibbler_spark.stage_metrics import measure_stages
 
     out: dict[str, dict] = {}
     for name in names:
         spec = specs[name]
-        # Between ladder rows: session debris inflated late rows ~3x
-        # (r10: ext_minhash_lsh_portable 15.7x in-sweep vs 3.4x isolated).
-        drop_debris(spark)
         spec.spark(spark, small).collect()  # JVM/codegen warm-up, untimed
         t_small = []
         for _ in range(2):
