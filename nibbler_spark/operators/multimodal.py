@@ -4,7 +4,9 @@ Design: image/audio/video payloads ride as opaque ``binary`` columns next
 to a typed metadata struct; every transformation is an Arrow-batched
 ``mapInPandas`` over (payload, metadata) so a 100 TB corpus streams
 through Python workers batch-by-batch without ever materializing rows on
-the driver.
+the driver. A per-row payload map (one output row per input row, keyed
+by ``doc_id``) is a call to :func:`map_rows`, or :func:`encode_payloads`
+for an encoder; only the 1→N and N→1 maps write their own batch loop.
 
 Decoding: real, dependency-free codecs — uncompressed containers (BMP
 24-bit with bottom-up rows and 4-byte padding; binary PPM; WAV/PCM;
@@ -12,11 +14,11 @@ DIB-frame AVI) AND compressed formats built from their public specs:
 PNG (stdlib-zlib DEFLATE, chunk CRCs, all five scanline filters), GIF
 (from-scratch variable-width LZW), baseline JPEG (see
 ``operators/jpeg_codec.py``), G.711 μ-law WAV, and Motion-JPEG AVI
-(container walk composed with the JPEG decoder). ``decode_batches``
-dispatches on container magic; payloads that are not a known container
-fall back to a deterministic synthetic decode so the carriage queries
-over fake payloads keep working. Remaining formats (color JPEG, MP3,
-H.264) plug in at the same dispatch point.
+(container walk composed with the JPEG decoder). ``decode_image``
+dispatches on container magic and raises on an unknown one;
+``decode_batches`` is the deterministic synthetic decode the carriage
+queries over fake payloads use. Remaining formats (MP3, H.264) plug in
+at the same dispatch point.
 """
 
 from __future__ import annotations
@@ -28,11 +30,45 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 DECODED_SCHEMA = (
     "doc_id long, mime string, n_bytes long, width int, height int, "
     "payload_md5 string"
 )
+
+
+def map_rows(
+    df: DataFrame, col: str, fn: Callable[[object], dict], schema: str
+) -> DataFrame:
+    """One ``mapInPandas`` that calls ``fn`` on each value of ``col``.
+
+    ``fn`` gets a plain Python value (``int`` for ``doc_id``, ``bytes``
+    for a binary column) and returns a dict holding at least the
+    ``schema`` fields other than ``doc_id``; ``doc_id`` is carried over
+    from the input row by row."""
+    fields = [
+        f.name for f in DataType.fromDDL(schema).fields if f.name != "doc_id"
+    ]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [fn(v) for v in pdf[col].tolist()]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"]}
+                | {f: [r[f] for r in rows] for f in fields}
+            )
+
+    return df.mapInPandas(run, schema)
+
+
+def encode_payloads(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """``doc_id`` → ``(doc_id, payload)``, one ``make(doc_id)`` container
+    per row."""
+    return map_rows(
+        docs, "doc_id", lambda did: {"payload": make(did)},
+        "doc_id long, payload binary",
+    )
 
 
 def _decode_stub(payload: bytes, mime: str) -> dict:
@@ -510,7 +546,7 @@ def decode_image(payload: bytes) -> dict:
     raise ImageFormatError("unknown container format")
 
 
-def decode_batches(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_batches(df: DataFrame) -> DataFrame:
     """mapInPandas decode pipeline: binary payload → typed features.
 
     Arrow moves each partition through Python in columnar batches; the
@@ -529,7 +565,7 @@ def decode_batches(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             decoded = [
                 decode_one(p, m)
                 for p, m in zip(payloads, pdf["mime"], strict=True)
@@ -556,27 +592,12 @@ IMAGE_SCHEMA = (
 )
 
 
-def decode_image_batches(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_image_batches(df: DataFrame) -> DataFrame:
     """mapInPandas over REAL encoded containers (BMP/PPM): parses header
     and traverses actual pixel bytes (padding-aware), emitting dimensions
     and pixel statistics. Unknown containers raise — this path is for
     genuinely encoded payloads, not the synthetic-carriage stub."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_image(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fmt": [d["fmt"] for d in decoded],
-                    "width": [d["width"] for d in decoded],
-                    "height": [d["height"] for d in decoded],
-                    "n_pixels": [d["n_pixels"] for d in decoded],
-                    "pixel_sum": [d["pixel_sum"] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, IMAGE_SCHEMA)
+    return map_rows(df, "payload", decode_image, IMAGE_SCHEMA)
 
 
 RESIZED_SCHEMA = "doc_id long, width int, height int, out_w int, out_h int"
@@ -647,16 +668,12 @@ def feature_extract_batches(df: DataFrame, n: int = 8) -> DataFrame:
     [0,1] as a float vector — the stand-in for a real CNN/CLAP embedding
     head. Output is ArrayType(Float), joinable against the embeddings
     table's similarity operators (K6/K7)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                [round(b / 255.0, 4) for b in bytes(p)[:n]]
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(
+        df,
+        "payload",
+        lambda p: {"features": [round(b / 255.0, 4) for b in p[:n]]},
+        FEATURE_SCHEMA,
+    )
 
 
 def attach_synthetic_payload(docs: DataFrame) -> DataFrame:
@@ -819,28 +836,11 @@ def parse_wav(payload: bytes) -> dict:
     }
 
 
-def decode_audio_batches(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_audio_batches(df: DataFrame) -> DataFrame:
     """mapInPandas over REAL WAV containers: header walk + full sample
     traversal, emitting rate/duration and exact sample statistics. Same
     partition-local zero-shuffle shape as decode_image_batches."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_audio(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fmt": [d["fmt"] for d in decoded],
-                    "sample_rate": [d["sample_rate"] for d in decoded],
-                    "n_channels": [d["n_channels"] for d in decoded],
-                    "n_samples": [d["n_samples"] for d in decoded],
-                    "duration_ms": [d["duration_ms"] for d in decoded],
-                    "sample_sum": [d["sample_sum"] for d in decoded],
-                    "peak": [d["peak"] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, AUDIO_SCHEMA)
+    return map_rows(df, "payload", decode_audio, AUDIO_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -995,27 +995,10 @@ def parse_avi(payload: bytes) -> dict:
     }
 
 
-def decode_video_batches(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_video_batches(df: DataFrame) -> DataFrame:
     """mapInPandas over REAL AVI containers — partition-local, zero
     shuffles, the video leg of the decode triad."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [parse_avi(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fmt": [d["fmt"] for d in decoded],
-                    "width": [d["width"] for d in decoded],
-                    "height": [d["height"] for d in decoded],
-                    "n_frames": [d["n_frames"] for d in decoded],
-                    "us_per_frame": [d["us_per_frame"] for d in decoded],
-                    "frame_bytes": [d["frame_bytes"] for d in decoded],
-                    "frame_sum": [d["frame_sum"] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, VIDEO_SCHEMA)
+    return map_rows(df, "payload", parse_avi, VIDEO_SCHEMA)
 
 
 # --- TIFF (Compression=5, the TIFF flavour of LZW) ----------------------

@@ -5,25 +5,63 @@ the text) exercising binary/struct-metadata semantics with digests
 recomputable in SQL, and REAL encoded containers — ext_image_decode_bmp
 writes genuine 24-bit BMPs and parses them back pixel-by-pixel with the
 dependency-free codec in ``operators/multimodal.py`` (no stub on that
-path)."""
+path).
+
+A per-doc payload map — encode a doc into a container, decode or
+fingerprint one payload — is a call to ``map_rows`` or
+``encode_payloads`` (``operators/multimodal.py``); only the 1→N and N→1
+maps below (``extract``, ``assemble``, ``from_tar``, ``frame_rows``,
+``deltas``, ``frame_energies``) write their own ``mapInPandas`` loop.
+Rows whose codec is slow per doc ``spread()`` their sampled docs first,
+since the local one-split scan would otherwise run every doc in one
+task (at real scale the scan is already wide and ``spread`` adds no
+exchange)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nibbler_spark.operators.jpeg_codec import (
+    decode_jpeg,
+    encode_jpeg_color,
+    encode_jpeg_gray,
+    encode_jpeg_gray_progressive,
+    encode_jpeg_gray_progressive_sa,
+)
 from nibbler_spark.operators.multimodal import (
+    adpcm_decode,
     attach_synthetic_payload,
+    avi_frames,
+    decode_audio_batches,
     decode_batches,
+    decode_image,
     decode_image_batches,
+    decode_video_batches,
+    encode_aiff,
+    encode_avi,
     encode_bmp,
+    encode_flac,
     encode_gif,
-    encode_tga,
+    encode_mp4,
+    encode_payloads,
     encode_png,
     encode_qoi,
+    encode_tga,
+    encode_tiff_lzw,
+    encode_warc,
+    encode_wav,
+    encode_wav_adpcm,
+    encode_wav_mulaw,
     feature_extract_batches,
     frame_sample_batches,
+    map_rows,
+    parse_bmp,
+    parse_mp4,
+    parse_warc,
+    parse_wav,
     resize_batches,
+    wav_pcm_samples,
 )
 from nibbler_spark.queries import pin, register
 from nibbler_spark.queries._helpers import spread
@@ -157,35 +195,22 @@ def bmp_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint+sort — the frame whose physical plan must be two chained
     MapInPandas stages over a doc_id-pruned scan with no exchange
     (tests/test_plans.py::test_bmp_pipeline_chained_map_no_shuffle)."""
-    import pandas as _pd
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 17 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 1 + did % 13, 1 + did % 7
-                payloads.append(
-                    encode_bmp(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            (did + 3 * x + 7 * y) % 256,
-                            (did + 5 * x + 11 * y) % 256,
-                            (did + 13 * x + 17 * y) % 256,
-                        ),
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def bmp(did: int) -> bytes:
+        return encode_bmp(
+            1 + did % 13,
+            1 + did % 7,
+            lambda x, y: (
+                (did + 3 * x + 7 * y) % 256,
+                (did + 5 * x + 11 * y) % 256,
+                (did + 13 * x + 17 * y) % 256,
+            ),
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
-    return decode_image_batches(encoded)
+    return decode_image_batches(encode_payloads(d, bmp))
 
 
 @register(
@@ -225,34 +250,22 @@ def ext_image_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed in closed form by the oracle. Parser:
     `operators/multimodal.py:parse_png`. Both stages are
     partition-local mapInPandas with zero shuffles."""
-    import pandas as _pd
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 19 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 1 + did % 13, 2 + did % 9
-                payloads.append(
-                    encode_png(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            (did + 3 * x + 7 * y) % 256,
-                            (did + 5 * x + 11 * y) % 256,
-                            (did + 13 * x + 17 * y) % 256,
-                        ),
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def png(did: int) -> bytes:
+        return encode_png(
+            1 + did % 13,
+            2 + did % 9,
+            lambda x, y: (
+                (did + 3 * x + 7 * y) % 256,
+                (did + 5 * x + 11 * y) % 256,
+                (did + 13 * x + 17 * y) % 256,
+            ),
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, png)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -294,28 +307,16 @@ def ext_image_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes in closed form. Parser:
     `operators/multimodal.py:parse_gif`. Partition-local mapInPandas,
     zero shuffles."""
-    import pandas as _pd
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 29 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 1 + did % 15, 2 + did % 11
-                payloads.append(
-                    encode_gif(
-                        w, h, lambda x, y, did=did: (did + 3 * x + 7 * y) % 256
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def gif(did: int) -> bytes:
+        return encode_gif(
+            1 + did % 15, 2 + did % 11, lambda x, y: (did + 3 * x + 7 * y) % 256
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, gif)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -358,40 +359,20 @@ def ext_image_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless — so the decompressed pixel sum is closed-form for the
     oracle while the codec path stays fully general. Partition-local
     mapInPandas, zero shuffles."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.jpeg_codec import encode_jpeg_gray
-
-    # spread(): the from-scratch codec is Python-per-doc inside
-    # mapInPandas; the local 1-split scan would run every doc in
-    # one task (no-op at real scale where the scan is already wide).
     d = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 31 == 0)
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 1 + did % 20, 2 + did % 13
-                payloads.append(
-                    encode_jpeg_gray(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            did + 37 * (x // 8) + 91 * (y // 8)
-                        )
-                        % 256,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def jpeg(did: int) -> bytes:
+        return encode_jpeg_gray(
+            1 + did % 20,
+            2 + did % 13,
+            lambda x, y: (did + 37 * (x // 8) + 91 * (y // 8)) % 256,
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, jpeg)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -426,26 +407,16 @@ def ext_image_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/multimodal.py:parse_ppm`) recovers dimensions and the
     exact pixel-byte sum, recomputed in closed form by the oracle. Same
     two-Arrow-stage shuffle-free shape as EXT-MM-BMP."""
-    import pandas as _pd
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 23 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 1 + did % 11, 1 + did % 5
-                header = f"P6\n# doc {did}\n{w} {h}\n255\n".encode()
-                data = bytes((did * 7 + i) % 256 for i in range(3 * w * h))
-                payloads.append(header + data)
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def ppm(did: int) -> bytes:
+        w, h = 1 + did % 11, 1 + did % 5
+        header = f"P6\n# doc {did}\n{w} {h}\n255\n".encode()
+        return header + bytes((did * 7 + i) % 256 for i in range(3 * w * h))
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, ppm)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -567,49 +538,23 @@ def ext_video_decode_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     is closed-form for the oracle. frame_bytes (compressed size) is
     deliberately not in the output — it depends on entropy-coder
     details the oracle shouldn't pin. Partition-local mapInPandas."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.jpeg_codec import encode_jpeg_gray
-    from nibbler_spark.operators.multimodal import (
-        decode_video_batches,
-        encode_avi,
-    )
-
-    # spread(): the from-scratch codec is Python-per-doc inside
-    # mapInPandas; the local 1-split scan would run every doc in
-    # one task (no-op at real scale where the scan is already wide).
     d = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 41 == 0)
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 8 + 8 * (did % 2), 8
-                nf = 2 + did % 4
-                frames = [
-                    encode_jpeg_gray(
-                        w,
-                        h,
-                        lambda x, y, did=did, f=f: (
-                            did + 37 * (x // 8) + 11 * f
-                        )
-                        % 256,
-                    )
-                    for f in range(nf)
-                ]
-                payloads.append(
-                    encode_avi(frames, w, h, 40000, codec=b"MJPG")
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
+    def mjpeg(did: int) -> bytes:
+        w, h = 8 + 8 * (did % 2), 8
+        frames = [
+            encode_jpeg_gray(
+                w, h, lambda x, y, f=f: (did + 37 * (x // 8) + 11 * f) % 256
             )
+            for f in range(2 + did % 4)
+        ]
+        return encode_avi(frames, w, h, 40000, codec=b"MJPG")
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, mjpeg)
     return (
         decode_video_batches(encoded)
         .select(
@@ -676,36 +621,18 @@ def ext_audio_decode_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parser expands them through the same CCITT math; sample sums
     and peaks must hash-match. Partition-local mapInPandas, zero
     shuffles."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import (
-        decode_audio_batches,
-        encode_wav_mulaw,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 37 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 64 + did % 100
-                payloads.append(
-                    encode_wav_mulaw(
-                        n,
-                        8000,
-                        lambda i, did=did: ((did * 13 + 97 * i) % 65536)
-                        - 32768,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def mulaw(did: int) -> bytes:
+        return encode_wav_mulaw(
+            64 + did % 100,
+            8000,
+            lambda i: ((did * 13 + 97 * i) % 65536) - 32768,
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, mulaw)
     # localCheckpoint: avoid the sort-sampling double Python pass.
     return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
@@ -745,36 +672,16 @@ def ext_audio_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics, recomputed in closed form by the oracle. No codec
     library involved; both stages are partition-local mapInPandas with
     zero shuffles at any corpus size."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import (
-        decode_audio_batches,
-        encode_wav,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 19 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 8 + did % 25
-                payloads.append(
-                    encode_wav(
-                        n,
-                        8000,
-                        lambda i, did=did: ((did * 31 + 7 * i) % 4096)
-                        - 2048,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def wav(did: int) -> bytes:
+        return encode_wav(
+            8 + did % 25, 8000, lambda i: ((did * 31 + 7 * i) % 4096) - 2048
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, wav)
     # localCheckpoint: avoid the sort-sampling double Python pass.
     return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
@@ -816,35 +723,18 @@ def ext_video_decode_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks, and traverses every frame byte. The oracle recomputes the
     statistics in closed form. Same two-Arrow-stage zero-shuffle shape
     as EXT-MM-BMP/EXT-MM-WAV."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import (
-        decode_video_batches,
-        encode_avi,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 29 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 2 + did % 4
-                frames = [
-                    bytes(
-                        (did * 13 + f * 5 + j * 3) % 256 for j in range(12)
-                    )
-                    for f in range(nf)
-                ]
-                payloads.append(encode_avi(frames, 2, 2, 33333))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def avi(did: int) -> bytes:
+        frames = [
+            bytes((did * 13 + f * 5 + j * 3) % 256 for j in range(12))
+            for f in range(2 + did % 4)
+        ]
+        return encode_avi(frames, 2, 2, 33333)
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, avi)
     # localCheckpoint: avoid the sort-sampling double Python pass.
     return pin(decode_video_batches(encoded)).orderBy("doc_id")
 
@@ -914,68 +804,31 @@ def ext_image_decode_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's default decimal arithmetic would differ at .5 boundaries).
     Per-channel sums are checked separately. Partition-local
     mapInPandas both ways, zero shuffles, zero driver bytes."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.jpeg_codec import (
-        decode_jpeg,
-        encode_jpeg_color,
-    )
-
-    # spread(): the from-scratch codec is Python-per-doc inside
-    # mapInPandas; the local 1-split scan would run every doc in
-    # one task (no-op at real scale where the scan is already wide).
     d = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 41 == 0)
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 1 + did % 37, 2 + did % 21
-
-                def rgb(x, y, did=did):
-                    mx, my = x // 16, y // 16
-                    return (
-                        (did + 53 * mx + 101 * my) % 256,
-                        (2 * did + 71 * mx + 29 * my) % 256,
-                        (3 * did + 13 * mx + 59 * my) % 256,
-                    )
-
-                payloads.append(
-                    encode_jpeg_color(w, h, rgb, restart_interval=2)
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
+    def jpeg(did: int) -> bytes:
+        def rgb(x, y):
+            mx, my = x // 16, y // 16
+            return (
+                (did + 53 * mx + 101 * my) % 256,
+                (2 * did + 71 * mx + 29 * my) % 256,
+                (3 * did + 13 * mx + 59 * my) % 256,
             )
 
-    def decode(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                out = decode_jpeg(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id), out["fmt"], out["width"],
-                        out["height"], out["n_pixels"], out["r_sum"],
-                        out["g_sum"], out["b_sum"], out["pixel_sum"],
-                    )
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "width", "height", "n_pixels",
-                    "r_sum", "g_sum", "b_sum", "pixel_sum",
-                ],
-            )
+        return encode_jpeg_color(
+            1 + did % 37, 2 + did % 21, rgb, restart_interval=2
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, jpeg)
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return pin(encoded.mapInPandas(
-        decode,
+    return pin(map_rows(
+        encoded,
+        "payload",
+        decode_jpeg,
         "doc_id long, fmt string, width int, height int, n_pixels long, "
         "r_sum long, g_sum long, b_sum long, pixel_sum long",
     )).orderBy("doc_id")
@@ -1018,32 +871,16 @@ def ext_image_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages (`operators/multimodal.py:encode_tiff_lzw` /
     `parse_tiff`); the oracle recomputes the decoded pixel sums in
     closed form."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import encode_tiff_lzw
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 41 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 2 + did % 17, 3 + did % 13
-                payloads.append(
-                    encode_tiff_lzw(
-                        w,
-                        h,
-                        lambda x, y, did=did: (did + 11 * x + 13 * y) % 256,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def tiff(did: int) -> bytes:
+        return encode_tiff_lzw(
+            2 + did % 17, 3 + did % 13, lambda x, y: (did + 11 * x + 13 * y) % 256
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, tiff)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -1074,81 +911,50 @@ def ext_audio_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the max is the encoder's step-index ramp-in). Both stages are
     partition-local mapInPandas; n_samples is closed-form for the
     oracle."""
-    import pandas as _pd
+    import struct
 
-    from nibbler_spark.operators.multimodal import (
-        encode_wav_adpcm,
-        parse_wav,
-    )
-    from nibbler_spark.operators.multimodal import adpcm_decode  # noqa: F401
-
-    # spread(): the from-scratch codec is Python-per-doc inside
-    # mapInPandas; the local 1-split scan would run every doc in
-    # one task (no-op at real scale where the scan is already wide).
     d = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 43 == 0)
         .select("doc_id")
     )
 
-    def signal(did: int) -> list[int]:
-        n = 1000 + did % 997
+    def signal(n: int) -> list[int]:
         period, amp = 64, 3000
         return [
             amp - abs(i % period - period // 2) * (4 * amp // period)
             for i in range(n)
         ]
 
-    def encode(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        encode_wav_adpcm(signal(int(did)))
-                        for did in pdf["doc_id"]
-                    ],
-                }
-            )
+    def check(payload: bytes) -> dict:
+        meta = parse_wav(payload)
+        # re-decode the data block to compare sample-by-sample; the
+        # oracle pins n_samples to 1000 + doc_id % 997, so the signal
+        # rebuilt from it is the one this doc encoded
+        pos, block = 12, None
+        while pos + 8 <= len(payload):
+            cid, size = struct.unpack_from("<4sI", payload, pos)
+            if cid == b"data":
+                block = payload[pos + 8 : pos + 8 + size]
+            pos += 8 + size + (size & 1)
+        n = meta["n_samples"]
+        dec, orig = adpcm_decode(block, n), signal(n)
+        errs = [abs(a - b) for a, b in zip(orig, dec)]
+        return {
+            "n_samples": n,
+            "within_bound": meta["fmt"] == "wav-adpcm"
+            and len(dec) == len(orig)
+            and sum(errs) / len(errs) <= 64
+            and max(errs) <= 2048,
+        }
 
-    def decode(batches):
-        import struct as _struct
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = parse_wav(bytes(payload))
-                # re-decode the data block to compare sample-by-sample
-                pos, block = 12, None
-                pay = bytes(payload)
-                while pos + 8 <= len(pay):
-                    cid, size = _struct.unpack_from("<4sI", pay, pos)
-                    if cid == b"data":
-                        block = pay[pos + 8 : pos + 8 + size]
-                    pos += 8 + size + (size & 1)
-                dec = adpcm_decode(block, meta["n_samples"])
-                orig = signal(int(did))
-                errs = [abs(a - b) for a, b in zip(orig, dec)]
-                rows.append(
-                    (
-                        int(did),
-                        meta["n_samples"],
-                        bool(
-                            meta["fmt"] == "wav-adpcm"
-                            and len(dec) == len(orig)
-                            and sum(errs) / len(errs) <= 64
-                            and max(errs) <= 2048
-                        ),
-                    )
-                )
-            yield _pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "within_bound"]
-            )
-
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(
+        d, lambda did: encode_wav_adpcm(signal(1000 + did % 997))
+    )
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return pin(encoded.mapInPandas(
-        decode, "doc_id long, n_samples long, within_bound boolean"
+    return pin(map_rows(
+        encoded, "payload", check,
+        "doc_id long, n_samples long, within_bound boolean",
     )).orderBy("doc_id")
 
 
@@ -1182,38 +988,26 @@ def ext_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its ids exist in the corpus. At 100 TB: encode, decode and
     fingerprint are partition-local mapInPandas; only digests enter
     the dedup shuffle."""
-    import hashlib as _hashlib
-
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import encode_bmp, parse_bmp
+    import hashlib
 
     d = load_table(spark, sf_dir, "documents").where(
         (F.col("doc_id") % 19).isin(0, 1)
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                g = int(doc_id) // 19
-                # the three channels carry disjoint bytes of g, so the
-                # raster is injective in the group id up to 2^24 — groups
-                # g and g+256 must NOT render identical images
-                payloads.append(
-                    encode_bmp(
-                        8,
-                        6,
-                        lambda x, y, g=g: (
-                            (g % 256 + x) % 256,
-                            (g // 256 + 2 * y) % 256,
-                            (g // 65536 + x + y) % 256,
-                        ),
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def bmp(did: int) -> bytes:
+        g = did // 19
+        # the three channels carry disjoint bytes of g, so the raster is
+        # injective in the group id up to 2^24 — groups g and g+256 must
+        # NOT render identical images
+        return encode_bmp(
+            8,
+            6,
+            lambda x, y: (
+                (g % 256 + x) % 256,
+                (g // 256 + 2 * y) % 256,
+                (g // 65536 + x + y) % 256,
+            ),
+        )
 
     def raster(payload: bytes) -> bytes:
         # decode our 24bpp bottom-up BMP to padding-free pixel rows
@@ -1227,18 +1021,13 @@ def ext_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return f"{w}x{h}:".encode() + b"".join(rows)
 
-    def fingerprint(batches):
-        for pdf in batches:
-            fps = []
-            for p in pdf["payload"]:
-                parse_bmp(bytes(p))  # validate through the real parser
-                fps.append(
-                    _hashlib.md5(raster(bytes(p))).hexdigest()
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "fp": fps})
+    def fingerprint(payload: bytes) -> dict:
+        parse_bmp(payload)  # validate through the real parser
+        return {"fp": hashlib.md5(raster(payload)).hexdigest()}
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
-    fps = encoded.mapInPandas(fingerprint, "doc_id long, fp string")
+    fps = map_rows(
+        encode_payloads(d, bmp), "payload", fingerprint, "doc_id long, fp string"
+    )
     return (
         fps.groupBy("fp")
         .agg(
@@ -1293,34 +1082,22 @@ def ext_image_decode_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     in closed form. Codec: `operators/multimodal.py:encode_qoi/
     parse_qoi`. Both stages are partition-local mapInPandas — zero
     shuffles, zero driver bytes."""
-    import pandas as _pd
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 23 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 2 + did % 14, 1 + did % 11
-                payloads.append(
-                    encode_qoi(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            (did + 2 * (x // 3) + 5 * y) % 256,
-                            (did + 2 * (x // 3) + 5 * y + 1) % 256,
-                            (did + 7 * (x // 5) + 9 * y) % 256,
-                        ),
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def qoi(did: int) -> bytes:
+        return encode_qoi(
+            2 + did % 14,
+            1 + did % 11,
+            lambda x, y: (
+                (did + 2 * (x // 3) + 5 * y) % 256,
+                (did + 2 * (x // 3) + 5 * y + 1) % 256,
+                (did + 7 * (x // 5) + 9 * y) % 256,
+            ),
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, qoi)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -1354,8 +1131,6 @@ def ext_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is stage one of every web-corpus pipeline — one WARC file per
     task, records never cross the driver."""
     import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import encode_warc, parse_warc
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", (F.col("doc_id") % 50).alias("bucket")
@@ -1666,59 +1441,25 @@ def ext_mixed_format_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatch seam: unknown inputs raise rather than pass through, and
     one decode pipeline serves a heterogeneous lake. Scale: encode and
     sniff+decode are both partition-local mapInPandas."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import (
-        decode_image,
-        encode_bmp,
-        encode_gif,
-        encode_png,
-        encode_qoi,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 13 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        encoders = [encode_bmp, encode_png, encode_qoi, encode_gif]
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 2 + did % 9, 1 + did % 6
-                if did % 4 == 3:  # GIF: palette-indexed pixel fn
-                    payloads.append(
-                        encode_gif(
-                            w, h, lambda x, y, did=did: (did + x + y) % 16
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encoders[did % 4](
-                            w,
-                            h,
-                            lambda x, y, did=did: (
-                                (did + x) % 256,
-                                (did + y) % 256,
-                                (did + x + y) % 256,
-                            ),
-                        )
-                    )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def mixed(did: int) -> bytes:
+        w, h = 2 + did % 9, 1 + did % 6
+        if did % 4 == 3:  # GIF: palette-indexed pixel fn
+            return encode_gif(w, h, lambda x, y: (did + x + y) % 16)
+        return [encode_bmp, encode_png, encode_qoi][did % 4](
+            w,
+            h,
+            lambda x, y: ((did + x) % 256, (did + y) % 256, (did + x + y) % 256),
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def sniff(batches):
-        for pdf in batches:
-            fmts = [
-                decode_image(bytes(p))["fmt"] for p in pdf["payload"]
-            ]
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "fmt": fmts})
-
-    sniffed = encoded.mapInPandas(sniff, "doc_id long, fmt string")
+    # decode_image returns every field of the decode; map_rows keeps fmt
+    sniffed = map_rows(
+        encode_payloads(d, mixed), "payload", decode_image,
+        "doc_id long, fmt string",
+    )
     fmt_code = (
         F.when(F.col("fmt") == "bmp", 0)
         .when(F.col("fmt") == "png", 1)
@@ -1784,34 +1525,22 @@ def ext_image_decode_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     form. Codec: `operators/multimodal.py:encode_tga/parse_tga`. Both
     stages are partition-local mapInPandas — zero shuffles, zero
     driver bytes."""
-    import pandas as _pd
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 31 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 3 + did % 17, 1 + did % 9
-                payloads.append(
-                    encode_tga(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            (did + 2 * (x // 3) + 5 * y) % 256,
-                            (did + 2 * (x // 3) + 5 * y + 1) % 256,
-                            (did + 7 * (x // 5) + 9 * y) % 256,
-                        ),
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def tga(did: int) -> bytes:
+        return encode_tga(
+            3 + did % 17,
+            1 + did % 9,
+            lambda x, y: (
+                (did + 2 * (x // 3) + 5 * y) % 256,
+                (did + 2 * (x // 3) + 5 * y + 1) % 256,
+                (did + 7 * (x // 5) + 9 * y) % 256,
+            ),
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, tga)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -1854,36 +1583,16 @@ def ext_audio_decode_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     family, FORM → AIFF), mirroring the image-side seam. Exact sample
     statistics recomputed in closed form by the oracle; both stages
     partition-local mapInPandas."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import (
-        decode_audio_batches,
-        encode_aiff,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 37 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 6 + did % 21
-                payloads.append(
-                    encode_aiff(
-                        n,
-                        44100,
-                        lambda i, did=did: ((did * 37 + 11 * i) % 8192)
-                        - 4096,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def aiff(did: int) -> bytes:
+        return encode_aiff(
+            6 + did % 21, 44100, lambda i: ((did * 37 + 11 * i) % 8192) - 4096
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, aiff)
     # localCheckpoint: avoid the sort-sampling double Python pass.
     return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
@@ -2037,31 +1746,18 @@ def ext_video_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as _pd
 
-    from nibbler_spark.operators.multimodal import avi_frames, encode_avi
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 29 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 2 + did % 4
-                frames = [
-                    bytes(
-                        ((did * 13 + f * 5) % 16 + j * 3) % 256
-                        for j in range(12)
-                    )
-                    for f in range(nf)
-                ]
-                payloads.append(encode_avi(frames, 2, 2, 33333))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def avi(did: int) -> bytes:
+        frames = [
+            bytes(((did * 13 + f * 5) % 16 + j * 3) % 256 for j in range(12))
+            for f in range(2 + did % 4)
+        ]
+        return encode_avi(frames, 2, 2, 33333)
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, avi)
 
     def frame_rows(batches):
         for pdf in batches:
@@ -2444,9 +2140,6 @@ def ext_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles; only (doc_id, 64-bit hash) enters the 4-row-per-doc band
     exchange; the verify join carries two bigints per row."""
     import numpy as _np
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import encode_bmp
 
     K = 2654435761
     SMASK = 546  # blocks {1, 5, 9}: low-band bit flips on the copy
@@ -2455,50 +2148,44 @@ def ext_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 23).isin(0, 1)
     ).select("doc_id")
 
-    def encode_and_hash(batches):
-        for pdf in batches:
-            hashes = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                g = (did // 23) % 2147483648
-                h = g * K
-                copy = did % 23 == 1
+    def encode_and_hash(did: int) -> dict:
+        h = ((did // 23) % 2147483648) * K
+        copy = did % 23 == 1
 
-                def px(x, y, h=h, copy=copy):
-                    j = (y // 2) * 8 + (x // 2)
-                    bit = (h >> j) & 1
-                    v = 200 * bit + 10 + (x % 2)
-                    if copy:
-                        v += 3
-                        if (SMASK >> j) & 1 and bit == 0:
-                            v += 200
-                    return (v, v, v)
+        def px(x, y):
+            j = (y // 2) * 8 + (x // 2)
+            bit = (h >> j) & 1
+            v = 200 * bit + 10 + (x % 2)
+            if copy:
+                v += 3
+                if (SMASK >> j) & 1 and bit == 0:
+                    v += 200
+            return (v, v, v)
 
-                payload = encode_bmp(16, 16, px)
-                # decode the real container back: strip the 54-byte
-                # header, un-pad rows (stride 48 -> no padding at w=16),
-                # rebuild the raster, then the integer aHash
-                off = int.from_bytes(payload[10:14], "little")
-                w = int.from_bytes(payload[18:22], "little", signed=True)
-                hh = int.from_bytes(payload[22:26], "little", signed=True)
-                stride = (3 * w + 3) // 4 * 4
-                rows = [
-                    payload[off + (hh - 1 - y) * stride :][: 3 * w : 3]
-                    for y in range(hh)
-                ]
-                gray = _np.frombuffer(
-                    b"".join(rows), dtype=_np.uint8
-                ).reshape(hh, w).astype(_np.int64)
-                blocks = gray.reshape(8, 2, 8, 2).sum(axis=(1, 3))
-                total = int(gray.sum())
-                bits = (64 * blocks > total).astype(_np.int64)
-                ah = 0
-                for j in range(64):
-                    ah |= int(bits[j // 8, j % 8]) << j
-                hashes.append(ah)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "h": hashes})
+        payload = encode_bmp(16, 16, px)
+        # decode the real container back: strip the 54-byte header,
+        # un-pad rows (stride 48 -> no padding at w=16), rebuild the
+        # raster, then the integer aHash
+        off = int.from_bytes(payload[10:14], "little")
+        w = int.from_bytes(payload[18:22], "little", signed=True)
+        hh = int.from_bytes(payload[22:26], "little", signed=True)
+        stride = (3 * w + 3) // 4 * 4
+        rows = [
+            payload[off + (hh - 1 - y) * stride :][: 3 * w : 3]
+            for y in range(hh)
+        ]
+        gray = _np.frombuffer(
+            b"".join(rows), dtype=_np.uint8
+        ).reshape(hh, w).astype(_np.int64)
+        blocks = gray.reshape(8, 2, 8, 2).sum(axis=(1, 3))
+        total = int(gray.sum())
+        bits = (64 * blocks > total).astype(_np.int64)
+        ah = 0
+        for j in range(64):
+            ah |= int(bits[j // 8, j % 8]) << j
+        return {"h": ah}
 
-    hashed = d.mapInPandas(encode_and_hash, "doc_id long, h long")
+    hashed = map_rows(d, "doc_id", encode_and_hash, "doc_id long, h long")
     bands = hashed.select(
         "doc_id",
         "h",
@@ -2582,65 +2269,37 @@ def ext_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse, and featurize all live inside one mapInPandas chain with
     zero shuffles — at 100 TB only (doc_id, 4 feature ints) leave the
     scan."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import encode_wav, parse_wav
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 41 == 0
     ).select("doc_id")
 
-    def run(batches):
-        import struct as _struct
-
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "n_frames": [],
-                "total_energy": [],
-                "max_frame_energy": [],
-                "zero_crossings": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 128 + did % 64
-                payload = encode_wav(
-                    n,
-                    8000,
-                    lambda i, did=did: ((did * 37 + 11 * i) % 4096) - 2048,
-                )
-                meta = parse_wav(payload)  # full chunk walk re-parse
-                assert meta["n_samples"] == n
-                # raw samples back out of the container's data chunk
-                pos, data = 12, None
-                while pos + 8 <= len(payload):
-                    cid, size = _struct.unpack_from("<4sI", payload, pos)
-                    if cid == b"data":
-                        data = payload[pos + 8 : pos + 8 + size]
-                    pos += 8 + size + (size & 1)
-                samples = _struct.unpack(f"<{len(data) // 2}h", data)
-                nf = n // 32
-                energies, zcs = [], []
-                for f0 in range(nf):
-                    fr = samples[f0 * 32 : (f0 + 1) * 32]
-                    energies.append(sum(s * s for s in fr))
-                    zcs.append(
-                        sum(
-                            1
-                            for a, b in zip(fr, fr[1:])
-                            if (a < 0) != (b < 0)
-                        )
-                    )
-                out["doc_id"].append(did)
-                out["n_frames"].append(nf)
-                out["total_energy"].append(sum(energies))
-                out["max_frame_energy"].append(max(energies))
-                out["zero_crossings"].append(sum(zcs))
-            yield _pd.DataFrame(out)
+    def features(did: int) -> dict:
+        n = 128 + did % 64
+        payload = encode_wav(
+            n, 8000, lambda i: ((did * 37 + 11 * i) % 4096) - 2048
+        )
+        # raw samples back out of the container's data chunk
+        _rate, samples = wav_pcm_samples(payload)
+        assert len(samples) == n
+        energies, zcs = [], []
+        for f0 in range(n // 32):
+            fr = samples[f0 * 32 : (f0 + 1) * 32]
+            energies.append(sum(s * s for s in fr))
+            zcs.append(
+                sum(1 for a, b in zip(fr, fr[1:]) if (a < 0) != (b < 0))
+            )
+        return {
+            "n_frames": n // 32,
+            "total_energy": sum(energies),
+            "max_frame_energy": max(energies),
+            "zero_crossings": sum(zcs),
+        }
 
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return pin(d.mapInPandas(
-        run,
+    return pin(map_rows(
+        d,
+        "doc_id",
+        features,
         "doc_id long, n_frames int, total_energy long, "
         "max_frame_energy long, zero_crossings long",
     )).orderBy("doc_id")
@@ -2688,42 +2347,20 @@ def ext_image_decode_jpeg_progressive(
     blocks), making the decompressed pixel sum closed-form for the
     oracle while the codec stays fully general. Partition-local
     mapInPandas, zero shuffles."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.jpeg_codec import (
-        encode_jpeg_gray_progressive,
-    )
-
-    # spread(): the from-scratch codec is Python-per-doc inside
-    # mapInPandas; the local 1-split scan would run every doc in
-    # one task (no-op at real scale where the scan is already wide).
     d = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 43 == 0)
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 9 + did % 24, 10 + did % 15
-                payloads.append(
-                    encode_jpeg_gray_progressive(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            did + 53 * (x // 8) + 29 * (y // 8)
-                        )
-                        % 256,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def jpeg(did: int) -> bytes:
+        return encode_jpeg_gray_progressive(
+            9 + did % 24,
+            10 + did % 15,
+            lambda x, y: (did + 53 * (x // 8) + 29 * (y // 8)) % 256,
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, jpeg)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -2766,42 +2403,20 @@ def ext_image_decode_jpeg_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle while arbitrary images reconstruct identically to the
     baseline codec (property-tested). Partition-local mapInPandas,
     zero shuffles."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.jpeg_codec import (
-        encode_jpeg_gray_progressive_sa,
-    )
-
-    # spread(): the from-scratch codec is Python-per-doc inside
-    # mapInPandas; the local 1-split scan would run every doc in
-    # one task (no-op at real scale where the scan is already wide).
     d = spread(
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 47 == 0)
         .select("doc_id")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 9 + did % 20, 9 + did % 12
-                payloads.append(
-                    encode_jpeg_gray_progressive_sa(
-                        w,
-                        h,
-                        lambda x, y, did=did: (
-                            did * 3 + 41 * (x // 8) + 67 * (y // 8)
-                        )
-                        % 256,
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def jpeg(did: int) -> bytes:
+        return encode_jpeg_gray_progressive_sa(
+            9 + did % 20,
+            9 + did % 12,
+            lambda x, y: (did * 3 + 41 * (x // 8) + 67 * (y // 8)) % 256,
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, jpeg)
     # localCheckpoint: the final sort's range-sampling job would run
     # the encode+decode Python chain twice (j04 A/B precedent, r11).
     return pin(decode_image_batches(encoded)).orderBy("doc_id")
@@ -2844,44 +2459,22 @@ def ext_video_decode_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes vary (16 + frame index) so the stsz variable-size branch is
     the one exercised. Closed-form oracle; partition-local
     mapInPandas, zero shuffles."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import encode_mp4, parse_mp4
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 53 == 0
     ).select("doc_id")
 
-    def run(batches):
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "fmt": [],
-                "n_frames": [],
-                "frame_bytes": [],
-                "frame_sum": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                nf = 2 + did % 5
-                frames = [
-                    bytes(
-                        (did * 11 + f * 3 + j * 7) % 256
-                        for j in range(16 + f)
-                    )
-                    for f in range(nf)
-                ]
-                meta = parse_mp4(encode_mp4(frames))
-                out["doc_id"].append(did)
-                out["fmt"].append(meta["fmt"])
-                out["n_frames"].append(meta["n_frames"])
-                out["frame_bytes"].append(meta["frame_bytes"])
-                out["frame_sum"].append(meta["frame_sum"])
-            yield _pd.DataFrame(out)
+    def decode(did: int) -> dict:
+        frames = [
+            bytes((did * 11 + f * 3 + j * 7) % 256 for j in range(16 + f))
+            for f in range(2 + did % 5)
+        ]
+        return parse_mp4(encode_mp4(frames))
 
     # localCheckpoint: avoid the sort-sampling double Python pass.
-    return pin(d.mapInPandas(
-        run,
+    return pin(map_rows(
+        d,
+        "doc_id",
+        decode,
         "doc_id long, fmt string, n_frames int, frame_bytes long, "
         "frame_sum long",
     )).orderBy("doc_id")
@@ -2933,39 +2526,21 @@ def ext_audio_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     final frame (16-bit end-of-header block-size path). Exact sample
     statistics recomputed closed-form by the oracle. Both stages are
     partition-local mapInPandas — zero shuffles, zero driver bytes."""
-    import pandas as _pd
-
-    from nibbler_spark.operators.multimodal import (
-        decode_audio_batches,
-        encode_flac,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 41 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 300 + did % 5 * 100
+    def flac(did: int) -> bytes:
+        def wave(i: int) -> int:
+            if did % 3 == 0:
+                return (did * 97) % 4000 - 2000
+            if did % 3 == 1:
+                return -8000 + 13 * i + (did + i) % 5
+            return ((did * 37 + 11 * i * i) % 8192) - 4096
 
-                def wave(i: int, did: int = did) -> int:
-                    if did % 3 == 0:
-                        return (did * 97) % 4000 - 2000
-                    if did % 3 == 1:
-                        return -8000 + 13 * i + (did + i) % 5
-                    return ((did * 37 + 11 * i * i) % 8192) - 4096
+        return encode_flac(300 + did % 5 * 100, 8000, wave, partition_order=1)
 
-                payloads.append(
-                    encode_flac(n, 8000, wave, partition_order=1)
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, flac)
     # localCheckpoint: avoid the sort-sampling double Python pass.
     return pin(decode_audio_batches(encoded)).orderBy("doc_id")
 
@@ -3070,36 +2645,25 @@ def ext_video_scene_detection(
     together); scene numbering is a doc-keyed window."""
     import pandas as _pd
 
-    from nibbler_spark.operators.multimodal import avi_frames, encode_avi
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 43 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                scene = 0
-                frames = []
-                for f in range(12):
-                    if f > 0 and (did * 7 + f) % 5 == 0:
-                        scene += 1
-                    frames.append(
-                        bytes(
-                            30
-                            + (did * 31 + scene * 17 + j * 3) % 180
-                            + f % 2
-                            for j in range(12)
-                        )
-                    )
-                payloads.append(encode_avi(frames, 2, 2, 33333))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
+    def avi(did: int) -> bytes:
+        scene = 0
+        frames = []
+        for f in range(12):
+            if f > 0 and (did * 7 + f) % 5 == 0:
+                scene += 1
+            frames.append(
+                bytes(
+                    30 + (did * 31 + scene * 17 + j * 3) % 180 + f % 2
+                    for j in range(12)
+                )
             )
+        return encode_avi(frames, 2, 2, 33333)
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, avi)
 
     def deltas(batches):
         for pdf in batches:
@@ -3245,37 +2809,21 @@ def ext_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — frame rows are ~n_samples/8."""
     import pandas as _pd
 
-    from nibbler_spark.operators.multimodal import (
-        encode_wav,
-        wav_pcm_samples,
-    )
-
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") % 17 == 0
     ).select("doc_id")
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 64 + did % 64
-                payloads.append(
-                    encode_wav(
-                        n,
-                        8000,
-                        lambda i, did=did: (
-                            (1400 if (i // 16) % 2 == 0 else 40)
-                            + (did * 7 + i) % 10
-                        )
-                        * (1 if i % 2 == 0 else -1),
-                    )
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
+    def wav(did: int) -> bytes:
+        return encode_wav(
+            64 + did % 64,
+            8000,
+            lambda i: (
+                (1400 if (i // 16) % 2 == 0 else 40) + (did * 7 + i) % 10
             )
+            * (1 if i % 2 == 0 else -1),
+        )
 
-    encoded = d.mapInPandas(encode, "doc_id long, payload binary")
+    encoded = encode_payloads(d, wav)
 
     def frame_energies(batches):
         for pdf in batches:

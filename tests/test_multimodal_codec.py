@@ -9,6 +9,7 @@ Arrow-path test through decode_image_batches.
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 
@@ -164,6 +165,105 @@ def test_decode_image_batches_arrow_path(spark):
             (i % 256) + x + y for x in range(w) for y in range(h)
         )
         assert out[i]["pixel_sum"] == expect
+
+
+_ROWS_SCHEMA = (
+    "doc_id long, tag string, n_bytes int, head array<float>, odd boolean"
+)
+
+
+def _describer():
+    # a nested function, so the Python workers get it by value (they
+    # cannot import this test module)
+    def describe(p: bytes) -> dict:
+        assert type(p) is bytes  # a plain value, not a numpy scalar
+        return {
+            "tag": p.decode(),
+            "n_bytes": len(p),
+            "head": [float(b) for b in p[:2]],
+            "odd": len(p) % 2 == 1,
+            "ignored": None,  # fields outside the schema are dropped
+        }
+
+    return describe
+
+
+def test_map_rows_empty_input(spark):
+    from pyspark.sql.types import DataType
+
+    from nibbler_spark.operators.multimodal import map_rows
+
+    df = spark.createDataFrame([], "doc_id long, payload binary")
+    out = map_rows(df, "payload", _describer(), _ROWS_SCHEMA)
+    assert out.schema == DataType.fromDDL(_ROWS_SCHEMA)
+    assert out.collect() == []
+
+
+def test_map_rows_carries_doc_id_row_for_row_across_partitions(spark):
+    """Several partitions, each batch mapped row for row: every output
+    row's fields come from the payload of the input row with its doc_id,
+    and the columns and types are exactly the schema's."""
+    from pyspark.sql.types import DataType
+
+    from nibbler_spark.operators.multimodal import map_rows
+
+    rows = [(i, f"doc-{i}-".encode() + b"x" * (i % 3)) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, payload binary").repartition(4)
+    assert df.rdd.getNumPartitions() == 4
+    out = map_rows(df, "payload", _describer(), _ROWS_SCHEMA)
+    assert out.schema == DataType.fromDDL(_ROWS_SCHEMA)
+    got = {r["doc_id"]: r for r in out.collect()}
+    assert sorted(got) == list(range(40))
+    for i, p in rows:
+        expect = _describer()(p)
+        r = got[i]
+        assert r["tag"] == expect["tag"] and r["tag"].startswith(f"doc-{i}-")
+        assert r["n_bytes"] == expect["n_bytes"]
+        assert r["head"] == expect["head"]
+        assert r["odd"] is expect["odd"]
+
+
+def test_encode_payloads_passes_int_doc_ids(spark):
+    from nibbler_spark.operators.multimodal import encode_payloads
+
+    def make(did: int) -> bytes:
+        assert type(did) is int
+        return did.to_bytes(2, "big")
+
+    df = spark.range(0, 300, 7, numPartitions=3).withColumnRenamed("id", "doc_id")
+    out = encode_payloads(df, make)
+    assert out.schema.simpleString() == "struct<doc_id:bigint,payload:binary>"
+    assert {r["doc_id"]: bytes(r["payload"]) for r in out.collect()} == {
+        i: i.to_bytes(2, "big") for i in range(0, 300, 7)
+    }
+
+
+def test_multimodal_payload_maps_have_one_batch_loop():
+    """Source guard: the per-doc encoders and decoders in
+    ``queries/multimodal.py`` go through ``map_rows``/``encode_payloads``;
+    the only ``mapInPandas`` calls left there are the 1→N and N→1 maps,
+    and the ``*_batches`` decoders take no ``payload_col``."""
+    import ast
+    from pathlib import Path
+
+    import nibbler_spark.operators.multimodal as om
+    import nibbler_spark.queries.multimodal as qm
+
+    src = Path(qm.__file__).read_text()
+    assert "def encode(batches)" not in src
+    assert not re.search(r"[\"']doc_id[\"']:\s*pdf\[[\"']doc_id[\"']\]", src)
+    sites = sorted(
+        ast.unparse(node.args[0])
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mapInPandas"
+    )
+    assert sites == [
+        "assemble", "assemble", "deltas", "extract", "extract", "extract",
+        "extract", "frame_energies", "frame_rows", "from_tar",
+    ]
+    assert "payload_col" not in Path(om.__file__).read_text()
 
 
 def test_decode_batches_stub_ignores_magic_collision(spark):

@@ -16,6 +16,7 @@ import math
 from collections import Counter, defaultdict
 
 from nibbler_spark.sources import load_table
+from tests._brute import gcos
 
 
 def _docs(spark, sf_dir):
@@ -155,16 +156,6 @@ def test_binary_embedding_recall_matches_bruteforce(spark, sf_dir):
             1 << (i - lo) for i in range(lo, hi + 1) if v[i - 1] >= 0.0
         )
 
-    def gcos(a, b):
-        def dot(x, y):
-            return (
-                sum(math.floor(p * q * 1e10) for p, q in zip(x, y)) / 1e10
-            )
-
-        return math.floor(
-            dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) * 1e9
-        )
-
     probes = sorted(v for v in vecs if v % md == 0)
     rows = {
         r["probe_id"]: (r["hits"], r["recall_pct"])
@@ -199,14 +190,6 @@ def test_embedding_jsd_bounded_and_matches_bruteforce(spark, sf_dir):
         r["vec_id"]: list(r["embedding"])
         for r in load_table(spark, sf_dir, "embeddings").collect()
     }
-
-    def dot(x, y):
-        return sum(math.floor(p * q * 1e10) for p, q in zip(x, y)) / 1e10
-
-    def gcos(a, b):
-        return math.floor(
-            dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) * 1e9
-        )
 
     seeds = sorted(
         vecs, key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v)
@@ -536,14 +519,6 @@ def test_nsw_greedy_search_matches_bruteforce(spark, sf_dir):
         r["vec_id"]: list(r["embedding"])
         for r in load_table(spark, sf_dir, "embeddings").collect()
     }
-
-    def dot(x, y):
-        return sum(math.floor(p * q * 1e10) for p, q in zip(x, y)) / 1e10
-
-    def gcos(a, b):
-        return math.floor(
-            dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) * 1e9
-        )
 
     n = len(vecs)
     ncells = math.isqrt(n)

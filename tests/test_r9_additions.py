@@ -13,15 +13,7 @@ from collections import Counter, defaultdict
 import pytest
 
 from nibbler_spark.sources import load_table
-
-
-def _gcos(a, b):
-    def dot(x, y):
-        return sum(math.floor(p * q * 1e10) for p, q in zip(x, y)) / 1e10
-
-    return math.floor(
-        dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))) * 1e9
-    )
+from tests._brute import gcos
 
 
 def _md5_order(ids):
@@ -96,7 +88,7 @@ def test_hnsw_layered_walk_matches_bruteforce(spark, sf_dir):
     l1g = defaultdict(set)
     for u in seeds:
         ranked = sorted(
-            (-_gcos(vecs[u], vecs[w]), w) for w in seeds if w != u
+            (-gcos(vecs[u], vecs[w]), w) for w in seeds if w != u
         )[:_NSW_KNN]
         l1g[u].update(w for _, w in ranked)
 
@@ -104,7 +96,7 @@ def test_hnsw_layered_walk_matches_bruteforce(spark, sf_dir):
         cur = start
         for _ in range(hops):
             cands = ({cur} | graph[cur]) - {qid}
-            cur = min((-_gcos(vecs[qid], vecs[c]), c) for c in cands)[1]
+            cur = min((-gcos(vecs[qid], vecs[c]), c) for c in cands)[1]
         return cur
 
     rows = {
@@ -117,17 +109,17 @@ def test_hnsw_layered_walk_matches_bruteforce(spark, sf_dir):
     assert set(rows) == set(qids)
     tot_lay = tot_l0 = 0
     for qid in qids:
-        e2 = min((-_gcos(vecs[qid], vecs[c]), c) for c in l2 if c != qid)[1]
+        e2 = min((-gcos(vecs[qid], vecs[c]), c) for c in l2 if c != qid)[1]
         l1_land = walk(qid, e2, l1g, 2)
         hfound = walk(qid, l1_land, edges, _NSW_HOPS)
         l0_found = walk(qid, entry, edges, _NSW_HOPS)
-        h_cg = _gcos(vecs[qid], vecs[hfound])
-        b_cg = _gcos(vecs[qid], vecs[l0_found])
+        h_cg = gcos(vecs[qid], vecs[hfound])
+        b_cg = gcos(vecs[qid], vecs[l0_found])
         if (b_cg, -l0_found) > (h_cg, -hfound):
             found, found_cg = l0_found, b_cg
         else:
             found, found_cg = hfound, h_cg
-        best = max(_gcos(vecs[qid], vecs[w]) for w in vecs if w != qid)
+        best = max(gcos(vecs[qid], vecs[w]) for w in vecs if w != qid)
         r = rows[qid]
         assert r["found"] == found
         assert r["found_cg"] == found_cg
@@ -192,18 +184,6 @@ def test_srp_hyperplane_lsh_matches_bruteforce(spark, sf_dir):
     n = len(vecs)
     md = max(1, n // 16)
     probes = sorted(v for v in vecs if v % md == 0)
-
-    def gcos(a, b):
-        def dot(x, y):
-            return (
-                sum(math.floor(p * q * 1e10) for p, q in zip(x, y)) / 1e10
-            )
-
-        return math.floor(
-            dot(a, b)
-            / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
-            * 1e9
-        )
 
     rows = {
         r["probe_id"]: r
